@@ -71,23 +71,23 @@ object EnvelopeTransform {
     // whatever keys are present, in the event's own order, with
     // json_util's ", "/": " separators. So: each sub-key included
     // conditionally (a bare concat would null the whole section on one
-    // null sub-field); arrays rendered by hand because Spark's to_json
-    // is compact (["a","b"], no space) while json_util emits
-    // ["a", "b"]; truncatedArrays elements are ext-JSON fragments and
-    // splice raw; key order matches the golden events
-    // (tests/mocks/events.py: removedFields, truncatedArrays,
-    // updatedFields) — the byte-parity anchor the reference's own
-    // tests pin.
+    // null sub-field); removedFields goes through to_json for string
+    // escaping and then the legacy codec, which re-renders to_json's
+    // compact ["a","b"] as json_util's ["a", "b"] with ensure_ascii
+    // escapes (in both dialects: field names are plain strings, never
+    // ext-JSON); truncatedArrays elements are ext-JSON fragments, so
+    // they are joined into one array text (array_join skips nulls, as
+    // concat_ws does) and that runs through the dialect's codec once.
+    // Key order matches the golden events (tests/mocks/events.py:
+    // removedFields, truncatedArrays, updatedFields) — the byte-parity
+    // anchor the reference's own tests pin.
     val remFields = when(col("updateDescription.removedFields").isNotNull,
-      concat(lit("\"removedFields\": ["),
-        concat_ws(", ", transform(col("updateDescription.removedFields"),
-          x => concat(lit("\""), x, lit("\"")))),
-        lit("]")))
+      concat(lit("\"removedFields\": "), graft.functions.LegacyExtJsonCol(
+        to_json(col("updateDescription.removedFields")))))
     val truncArrs = when(col("updateDescription.truncatedArrays").isNotNull,
-      concat(lit("\"truncatedArrays\": ["),
-        concat_ws(", ", transform(col("updateDescription.truncatedArrays"),
-          codec)),
-        lit("]")))
+      concat(lit("\"truncatedArrays\": "), codec(concat(lit("["),
+        array_join(col("updateDescription.truncatedArrays"), ", "),
+        lit("]")))))
     val updFields = when(col("updateDescription.updatedFields").isNotNull,
       concat(lit("\"updatedFields\": "),
         codec(col("updateDescription.updatedFields"))))

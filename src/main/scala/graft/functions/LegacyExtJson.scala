@@ -1,5 +1,6 @@
 package graft.functions
 
+import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.Column
@@ -181,14 +182,24 @@ object LegacyExtJson {
     * `1.0E10` becomes `10000000000.0` and `1.5E-5` becomes `1.5e-05`,
     * byte-matching json_util output.
     *
-    * The shortest digit string is derived explicitly (smallest
-    * correctly-rounded significand that parses back to the same
-    * double) rather than taken from `Double.toString`: JDK 17's
-    * pre-Ryū algorithm emits non-shortest digits for some values
-    * (e.g. `1e23` → `9.999999999999999E22`, `Double.MIN_VALUE` →
-    * `4.9E-324` where Python prints `1e+23` / `5e-324`). Python's
-    * repr is exactly the shortest correctly-rounded representation,
-    * which is what the %.Ne probe sequence finds.
+    * The digits come from jackson-core's Schubfach
+    * (`DoubleToDecimal.toString`, the algorithm JDK 19 adopted for
+    * `Double.toString`): the shortest decimal that rounds back to the
+    * double, the closest to it among those — the digits CPython's repr
+    * picks. Its output is only re-laid here. One rule differs: when
+    * one digit would do, the JDK spec lets Schubfach return the closest
+    * two-digit decimal instead (`4.9E-324` for `Double.MIN_VALUE`,
+    * where Python prints `5e-324`), so a two-digit result is replaced
+    * by its one-digit HALF_EVEN rounding when that round-trips. Only
+    * subnormals can have two such candidates: a normal double's
+    * rounding interval is under 2^-52 of its value, far narrower than
+    * the 1/100 between a one- and a two-digit decimal.
+    *
+    * JDK 17 offers nothing usable: its `Double.toString` is not
+    * shortest (`1e23` → `9.999999999999999E22`), and Formatter's
+    * `%.Ne` rounds from those same digits rather than from the exact
+    * value (`5.9817367476343565e17` at 16 digits gives `…357e+17`,
+    * CPython `…356e+17`).
     */
   private[functions] def pyFloatRepr(d: Double): String = {
     if (d.isNaN) return "NaN"
@@ -197,24 +208,34 @@ object LegacyExtJson {
     if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
     val neg = d < 0
     val abs = math.abs(d)
-    // shortest correctly-rounded significand that round-trips; 17
-    // significant digits always round-trip, so the loop terminates
-    var digits = ""
-    var e10 = 0
-    var n = 0
-    var found = false
-    while (!found) {
-      val s = String.format(java.util.Locale.ROOT, "%." + n + "e",
-        java.lang.Double.valueOf(abs))
-      if (n == 16 || java.lang.Double.parseDouble(s) == abs) {
-        val e = s.indexOf('e')
-        val raw = s.substring(0, e).filter(_ != '.')
-        val t = raw.reverse.dropWhile(_ == '0').reverse
-        digits = if (t.isEmpty) "0" else t
-        e10 = Integer.parseInt(s.substring(e + 1))
-        found = true
+    // Schubfach renders `iii.fff` for 1e-3 <= abs < 1e7, else `d.dddEn`:
+    // collect the significant digits and where the point falls
+    val s = DoubleToDecimal.toString(abs)
+    val ePos = s.indexOf('E')
+    val mantEnd = if (ePos < 0) s.length else ePos
+    val sig = new java.lang.StringBuilder(17)
+    var intLen = 0 // mantissa chars before the point, leading zeros included
+    var lead = 0 // leading zeros
+    var i = 0
+    while (i < mantEnd) {
+      val c = s.charAt(i)
+      if (c == '.') intLen = i
+      else if (c == '0' && sig.length == 0) lead += 1
+      else sig.append(c)
+      i += 1
+    }
+    var end = sig.length
+    while (sig.charAt(end - 1) == '0') end -= 1
+    var digits = sig.substring(0, end)
+    var e10 = intLen - lead - 1 +
+      (if (ePos < 0) 0 else Integer.parseInt(s, ePos + 1, s.length, 10))
+    if (digits.length == 2 && abs < java.lang.Double.MIN_NORMAL) {
+      val one = new java.math.BigDecimal(abs)
+        .round(new java.math.MathContext(1, java.math.RoundingMode.HALF_EVEN))
+      if (one.doubleValue == abs) {
+        digits = one.unscaledValue.toString
+        e10 = -one.scale
       }
-      n += 1
     }
     val sb = new StringBuilder
     if (neg) sb.append('-')

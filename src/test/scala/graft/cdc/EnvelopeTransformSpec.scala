@@ -73,19 +73,55 @@ class EnvelopeTransformSpec extends AnyFunSuite {
     // Real change streams routinely omit truncatedArrays; the connector
     // surfaces that as a null struct field. The reference serializes
     // whatever keys are present (change_event_handler.py:100-113), so
-    // the envelope must keep the other sub-keys.
+    // the envelope must keep the other sub-keys. A null array element
+    // is skipped the same way. The truncatedArrays fragments are
+    // canonical, so the two dialects' bytes differ: verbatim splices
+    // them, legacy converts them.
     import spark.implicits._
-    val ev = ChangeEvents.goldenEvents(1).copy(
-      updateDescription =
-        Some(UpdateDescription("""{"a": 2}""", Seq("gone", "also"), null)))
-    val df = spark.createDataFrame(
-      Seq(ev).toDF().rdd, ChangeEvents.schema)
-    val v = EnvelopeTransform(df, "test").head().getString(2)
-    // note json_util's ", " element separator — not to_json's compact form
-    assert(v.contains(
-      """"updateDescription": {"removedFields": ["gone", "also"], "updatedFields": {"a": 2}}"""),
-      s"got: $v")
-    assert(!v.contains("truncatedArrays"))
+    val frag = """{"field": "arr", "newSize": {"$numberInt": "2"}}"""
+    val legacyFrag = """{"field": "arr", "newSize": 2}"""
+    val frag2 = """{"field": "b", "newSize": {"$numberInt": "0"}}"""
+    val legacyFrag2 = """{"field": "b", "newSize": 0}"""
+    val evs = Seq(
+      UpdateDescription("""{"a": 2}""", Seq("gone", "also"), null),
+      UpdateDescription("""{"a": 2}""", Seq("gone"), Seq(frag, frag2)),
+      UpdateDescription("""{"a": 2}""", Seq.empty, Seq(null, frag)))
+      .map(u => ChangeEvents.goldenEvents(1).copy(updateDescription = Some(u)))
+    val df = spark.createDataFrame(evs.toDF().rdd, ChangeEvents.schema)
+    for ((legacy, f1, f2) <- Seq((false, frag, frag2),
+        (true, legacyFrag, legacyFrag2))) {
+      val vs = EnvelopeTransform(df, "test", legacyDialect = legacy)
+        .collect().map(_.getString(2))
+      // note json_util's ", " element separator — not to_json's compact form
+      assert(vs(0).contains(
+        """"updateDescription": {"removedFields": ["gone", "also"], "updatedFields": {"a": 2}}"""),
+        s"got: ${vs(0)}")
+      assert(!vs(0).contains("truncatedArrays"))
+      assert(vs(1).contains(
+        """"updateDescription": {"removedFields": ["gone"], """ +
+          s""""truncatedArrays": [$f1, $f2], "updatedFields": {"a": 2}}"""),
+        s"legacy=$legacy got: ${vs(1)}")
+      assert(vs(2).contains(
+        s""""updateDescription": {"removedFields": [], "truncatedArrays": [$f1], """ +
+          """"updatedFields": {"a": 2}}"""),
+        s"legacy=$legacy got: ${vs(2)}")
+    }
+  }
+
+  test("removedFields names escape like json_util in both dialects (P1)") {
+    // json.dumps escapes quotes, backslashes, controls and (ensure_ascii)
+    // every non-ASCII unit inside the removed field names
+    import spark.implicits._
+    val ev = ChangeEvents.goldenEvents(1).copy(updateDescription = Some(
+      UpdateDescription(null, Seq("naïve", "q\"uote", "b\\s"), null)))
+    val df = spark.createDataFrame(Seq(ev).toDF().rdd, ChangeEvents.schema)
+    for (legacy <- Seq(false, true)) {
+      val v = EnvelopeTransform(df, "test", legacyDialect = legacy)
+        .head().getString(2)
+      assert(v.contains("\"updateDescription\": {\"removedFields\": " +
+        "[\"na\\u00efve\", \"q\\\"uote\", \"b\\\\s\"]}"),
+        s"legacy=$legacy got: $v")
+    }
   }
 
   test("all-null updateDescription sub-fields serialize as {} (P1)") {

@@ -97,10 +97,51 @@ class LegacyExtJsonSpec extends AnyFunSuite {
     assert(LegacyExtJson.pyFloatRepr(9.5) === "9.5")
     assert(LegacyExtJson.pyFloatRepr(java.lang.Double.MAX_VALUE) ===
       "1.7976931348623157e+308")
-    // full-17-digit fallback still renders and round-trips
+    // a 17-significant-digit value renders and round-trips
     val awkward = java.lang.Double.parseDouble("1.2345678901234567")
     assert(java.lang.Double.parseDouble(
       LegacyExtJson.pyFloatRepr(awkward)) === awkward)
+  }
+
+  test("pyFloatRepr matches CPython repr() on the golden double set") {
+    // py_float_repr.txt: raw IEEE-754 bits (hex) and CPython's repr(),
+    // one double a line — random bit patterns, subnormals, MIN/MAX,
+    // cents, quarters, every power of ten, 16-17-digit magnitudes and
+    // Gaussians over 40 decades. Generated with:
+    //   python3 -c 'import math,random,struct;r=random.Random(20);f=lambda b:struct.unpack("<d",struct.pack("<Q",b))[0];v=[f(r.getrandbits(64)) for _ in range(900)]+[f(r.getrandbits(52)) for _ in range(200)]+[f(i) for i in range(1,30)]+[5e-324,2.2250738585072014e-308,1.7976931348623157e308,0.0,-0.0]+[r.randint(-10**6,10**6)/100 for _ in range(300)]+[r.randint(-4000,4000)/4 for _ in range(200)]+[float("1e%d"%k) for k in range(-323,309)]+[r.choice((1,-1))*r.uniform(1e15,1e19) for _ in range(300)]+[5.9817367476343565e17,-6.6045407657450865e18]+[r.gauss(0,1)*10**r.randint(-20,20) for _ in range(300)];print("\n".join("%016x %r"%(struct.unpack("<Q",struct.pack("<d",d))[0],d) for d in v if math.isfinite(d)))' > src/test/resources/py_float_repr.txt
+    val src = scala.io.Source.fromResource("py_float_repr.txt")
+    val rows = try src.getLines().map(_.split(' ')).toVector finally src.close()
+    assert(rows.length >= 2000)
+    val bad = rows.filter { case Array(bits, py) =>
+      LegacyExtJson.pyFloatRepr(java.lang.Double.longBitsToDouble(
+        java.lang.Long.parseUnsignedLong(bits, 16))) != py
+    }
+    assert(bad.isEmpty, s"${bad.length} mismatches, first: " +
+      bad.take(5).map(_.mkString(" → python ")).mkString("; "))
+  }
+
+  test("pyFloatRepr is the shortest round-tripping decimal (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // any finite double, drawn from its bit pattern
+    val finite = Gen.long.map(java.lang.Double.longBitsToDouble)
+      .filter(d => !d.isNaN && !d.isInfinite)
+    val prop = Prop.forAll(finite) { d =>
+      val r = LegacyExtJson.pyFloatRepr(d)
+      val back = java.lang.Double.parseDouble(r)
+      val digits = r.takeWhile(_ != 'e').filter(_.isDigit)
+        .dropWhile(_ == '0').reverse.dropWhile(_ == '0').length
+      // one digit fewer, correctly rounded from the exact value, must
+      // not land on the same double
+      val shorter = digits <= 1 || new java.math.BigDecimal(d)
+        .round(new java.math.MathContext(digits - 1,
+          java.math.RoundingMode.HALF_EVEN)).doubleValue != d
+      (java.lang.Double.doubleToRawLongBits(back) ==
+        java.lang.Double.doubleToRawLongBits(d)) && shorter
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(20000)
+      .withInitialSeed(org.scalacheck.rng.Seed(42L)), prop)
+    assert(res.passed, s"property failed: ${res.status}")
   }
 
   test("$numberDouble NaN/Infinity become Python json's bare literals") {
