@@ -466,34 +466,24 @@ object Bench {
       val cap =
         if (capOverride > 0) capOverride else BenchExpect.capSec(name, maxCap)
       val group = s"bench-$name-${System.nanoTime()}"
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-      @volatile var capped = false
-      val watchdog = new Thread(() => {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, name, interruptOnCancel = true)
+      try Drive.withWatchdog(cap)(sc.cancelJobGroup(group)) { capped =>
+        val t0 = System.nanoTime()
         try {
-          Thread.sleep(cap * 1000L)
-          capped = true
-          spark.sparkContext.cancelJobGroup(group)
-        } catch { case _: InterruptedException => () }
-      })
-      watchdog.setDaemon(true)
-      watchdog.start()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        attempted += name
-        if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
-      } catch {
-        case _: Throwable if capped =>
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          val sec = (System.nanoTime() - t0) / 1e9
           attempted += name
-          System.err.println(s"[bench] $name capped at ${cap}s (contention)")
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      } finally {
-        watchdog.interrupt()
-        spark.sparkContext.clearJobGroup()
-      }
+          if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
+        } catch {
+          case _: Throwable if capped() =>
+            attempted += name
+            System.err.println(s"[bench] $name capped at ${cap}s (contention)")
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        }
+      } finally sc.clearJobGroup()
     }
 
     def calm(n: String): Boolean = best.get(n).exists(BenchExpect.isCalm(n, _))

@@ -2,8 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.cdc.{ChangeEventRow, EnvelopeTransform, Ns, ResumeToken, UpdateDescription}
 import graft.sources.ChangeEventReplaySource
@@ -24,14 +24,10 @@ object BenchStreaming {
     * (the reserve used to assume ~90 s for what is worst-case many
     * minutes of per-pass caps).
     */
-  final class WallBudget(totalSec: Long) {
-    private val t0 = System.nanoTime()
-    def remainingSec: Long = totalSec - ((System.nanoTime() - t0) / 1e9).toLong
-    def exhausted: Boolean = remainingSec <= 0
-  }
+  type WallBudget = Drive.WallBudget
 
   /** No-deadline budget for ad-hoc callers. */
-  def unbounded: WallBudget = new WallBudget(Long.MaxValue / 4)
+  def unbounded: WallBudget = Drive.unbounded
 
   /** Ad-hoc: `runMain graft.BenchStreaming [nEvents]`. */
   def main(args: Array[String]): Unit = {
@@ -78,9 +74,8 @@ object BenchStreaming {
       spark: SparkSession,
       opts: Map[String, String],
       n: Int,
-      capSec: Long): Long = {
-    val ckpt = java.nio.file.Files.createTempDirectory("bench_stream_ckpt")
-    try {
+      capSec: Long): Long =
+    try Drive.withCheckpoint { ckpt =>
       val events = spark.readStream.format("graft-replay")
         .options(opts)
         .option("maxRowsPerBatch", "50000")
@@ -88,53 +83,26 @@ object BenchStreaming {
         .load()
       val q = EnvelopeTransform(events, topicPrefix = "bench").writeStream
         .format("noop")
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.ProcessingTime(0L))
         .start()
-      @volatile var capped = false
-      val watchdog = new Thread(() => {
-        try {
-          Thread.sleep(capSec * 1000L)
-          capped = true
-          q.stop()
-        } catch { case _: InterruptedException => () }
-      })
-      watchdog.setDaemon(true)
-      watchdog.start()
-      val t0 = System.nanoTime()
-      try {
+      Drive.withWatchdog(capSec)(q.stop()) { capped =>
+        val t0 = System.nanoTime()
         q.processAllAvailable()
         val wallSec = (System.nanoTime() - t0) / 1e9
         q.stop()
-        if (capped) {
+        if (capped()) {
           // partial run: count what actually flowed, still events/wall
           val processed = q.recentProgress.map(_.numInputRows).sum
           if (processed > 0) (processed / wallSec).round else -1L
         } else (n / wallSec).round
-      } finally watchdog.interrupt()
+      }
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] streaming envelope failed: ${e.getMessage}")
         -1L
-    } finally {
-      // best-effort temp cleanup
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
-  }
 
-  /** Steady-state streaming throughput: a warm-up pass pays the
-    * one-time costs (fixture conversion into the source's row cache,
-    * streaming codegen); the measured passes replay cached rows
-    * through fresh checkpoints. Best of three is reported (each pass
-    * is a valid sample and costs ~2 s — a single host-contention
-    * burst spanning one pass can no longer halve the headline, as it
-    * did between the r4 local runs: 210k vs 122k events/s from
-    * identical code).
-    */
   /** Best-of-3 policy shared by every streaming figure: pass 0
     * always runs (every figure needs >= 1 sample); later passes only
     * with budget left; each pass's watchdog cap is clamped to
@@ -145,17 +113,21 @@ object BenchStreaming {
     * to prevent).
     */
   private def bestOf(budget: WallBudget, floorSec: Long, capMax: Long)(
-      pass: Long => Long): Long = {
-    var best = -1L
-    var p = 0
-    while (p < 3 && (p == 0 || !budget.exhausted)) {
+      pass: Long => Long): Long =
+    Drive.bestOf("[bench] streaming figure", budget = budget) { _ =>
       val cap = math.max(floorSec, math.min(capMax, budget.remainingSec))
-      best = math.max(best, pass(cap))
-      p += 1
+      Drive.Pass(pass(cap))
     }
-    best
-  }
 
+  /** Steady-state streaming throughput: a warm-up pass pays the
+    * one-time costs (fixture conversion into the source's row cache,
+    * streaming codegen); the measured passes replay cached rows
+    * through fresh checkpoints. Best of three is reported (each pass
+    * is a valid sample and costs ~2 s — a single host-contention
+    * burst spanning one pass can no longer halve the headline, as it
+    * did between the r4 local runs: 210k vs 122k events/s from
+    * identical code).
+    */
   def envelopeEventsPerSec(
       spark: SparkSession,
       n: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "300000").toInt,
@@ -166,43 +138,6 @@ object BenchStreaming {
     try bestOf(budget, 15L, capSec)(cap => onePass(spark, opts, n, cap))
     finally ChangeEventReplaySource.unregister(fixture)
   }
-
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  /** Run `f` with the given state-store provider (None = Spark's
-    * default HDFS-backed heap provider), restoring the prior setting.
-    */
-  private def withProvider[A](spark: SparkSession,
-      provider: Option[String])(f: => A): A = {
-    val prior = spark.conf.getOption(ProviderKey)
-    provider match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-    try f
-    finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
-  /** The envelope passes with the RocksDB provider configured — the
-    * 100-TB state-store configuration. The envelope path is STATELESS
-    * (filter + projection, no keyed state), so no store is ever
-    * instantiated and the figure must track the default-store number;
-    * reporting it pins that configuring RocksDB costs the stateless
-    * plane nothing. The state-store-BOUND comparison is
-    * [[snapshotEventsPerSec]].
-    */
-  def envelopeEventsPerSecRocksDb(
-      spark: SparkSession,
-      n: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "300000").toInt,
-      capSec: Long = 60L,
-      budget: WallBudget = unbounded): Long =
-    withProvider(spark, Some(RocksDb))(
-      envelopeEventsPerSec(spark, n, capSec, budget))
 
   /** The two figures must agree within this factor — the envelope
     * path is stateless, so any larger gap is a measurement artifact
@@ -230,7 +165,8 @@ object BenchStreaming {
     * STILL disagrees after the retries (sustained contention window;
     * the lower figure is corrupted), and the caller persists the flag
     * in the artifact so a reader never mistakes a failed-agreement
-    * pair for a measured one.
+    * pair for a measured one. The state-store-BOUND comparison is
+    * [[snapshotEventsPerSec]].
     */
   def envelopeFigurePair(
       spark: SparkSession,
@@ -242,7 +178,8 @@ object BenchStreaming {
     try {
       def dfltRun(): Long =
         bestOf(budget, 15L, capSec)(cap => onePass(spark, opts, n, cap))
-      def rocksRun(): Long = withProvider(spark, Some(RocksDb))(dfltRun())
+      def rocksRun(): Long =
+        Drive.withProvider(spark, Some(Drive.RocksDb))(dfltRun())
       var dflt = dfltRun()
       var rocks = rocksRun()
       var retries = 0
@@ -276,80 +213,35 @@ object BenchStreaming {
       n: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "300000").toInt / 2,
       nKeys: Int = 50000,
       batches: Int = 10,
-      capSec: Long = 90L): Long = withProvider(spark, provider) {
+      capSec: Long = 90L): Long = Drive.withProvider(spark, provider) {
     import spark.implicits._
     import graft.streaming.StreamingSnapshot
     import graft.streaming.StreamingSnapshot.Change
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("bench_snap_ckpt")
     try {
-      val in =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Change]
-      val q = StreamingSnapshot(in.toDS()).writeStream
-        .format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update")
-        .trigger(Trigger.ProcessingTime(0L))
-        .start()
-      val perBatch = math.max(1, n / batches)
       // pre-build every batch OUTSIDE the measured window: per-batch
       // Seq construction + string formatting for ~15k rows is
       // driver-side synthetic-data cost, and timing it dilutes the
       // default-vs-RocksDB state-store comparison this metric exists
-      // to expose
-      val batchData: IndexedSeq[IndexedSeq[Change]] =
-        (0 until batches).map { b =>
-          (0 until perBatch).map { j =>
-            val id = b.toLong * perBatch + j
-            Change(key = id % nKeys, eventId = id,
-              op = if (id % 10 == 9) "d" else "u",
-              doc = s"""{"a": $id}""", cents = id)
-          }
-        }
-      // the watchdog guards the STREAMING QUERY, so it arms after the
-      // un-timed data pre-build — otherwise driver-side construction
-      // eats into the cap and a healthy pass can be killed at b=0
-      @volatile var capped = false
-      val watchdog = new Thread(() => {
-        try {
-          Thread.sleep(capSec * 1000L)
-          capped = true
-          q.stop()
-        } catch { case _: InterruptedException => () }
-      })
-      watchdog.setDaemon(true)
-      watchdog.start()
-      val t0 = System.nanoTime()
-      try {
-        var b = 0
-        var lastDone = t0
-        while (b < batches && !capped) {
-          in.addData(batchData(b))
-          q.processAllAvailable()
-          // wall is measured to the last COMPLETED batch: a watchdog
-          // kill mid-batch must not leave the partial batch's time in
-          // the denominator while its events are missing from the
-          // numerator (an understated rate — the truncated-sample
-          // class the envelope pair logic guards against)
-          lastDone = System.nanoTime()
-          b += 1
-        }
-        val wallSec = (lastDone - t0) / 1e9
-        q.stop()
-        val processed = b.toLong * perBatch
-        if (processed > 0 && wallSec > 0) (processed / wallSec).round
-        else -1L
-      } finally watchdog.interrupt()
+      // to expose. The watchdog guards the STREAMING QUERY, so it
+      // arms after this pre-build — otherwise driver-side
+      // construction eats into the cap and a healthy pass can be
+      // killed at b=0
+      val batchData = Drive.grid(n, batches) { (_, _, id) =>
+        Change(key = id % nKeys, eventId = id,
+          op = if (id % 10 == 9) "d" else "u",
+          doc = s"""{"a": $id}""", cents = id)
+      }
+      // wall is measured to the last COMPLETED batch: a watchdog kill
+      // mid-batch must not leave the partial batch's time in the
+      // denominator while its events are missing from the numerator
+      Drive.feed(spark, StreamingSnapshot(_: Dataset[Change]),
+        (w: DataStreamWriter[StreamingSnapshot.SnapRow]) =>
+          w.format("noop").outputMode("update"),
+        Iterator.empty, batchData, capSec).rate
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] streaming snapshot failed: ${e.getMessage}")
         -1L
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
   }
 
@@ -368,5 +260,5 @@ object BenchStreaming {
     snapshotBestOf(spark, None, budget)
   def snapshotEventsPerSecRocksDb(spark: SparkSession,
       budget: WallBudget = unbounded): Long =
-    snapshotBestOf(spark, Some(RocksDb), budget)
+    snapshotBestOf(spark, Some(Drive.RocksDb), budget)
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.streaming.StreamingSnapshot
 import graft.streaming.StreamingSnapshot.Change
@@ -28,121 +28,52 @@ import graft.streaming.StreamingSnapshot.Change
   */
 object StateProbe {
 
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
   /** One probe cell. Returns (seedSec, measuredEventsPerSec); a cell
     * whose streaming work exceeds `capSec` is killed by the watchdog
     * and reports rate -1 (a stuck provider must not hang the rest of
     * the matrix — already-printed cells are the probe's output).
     */
   def cell(spark: SparkSession, nKeys: Long,
-      provider: Option[String], capSec: Long = 900L): (Double, Long) = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prior = spark.conf.getOption(ProviderKey)
-    provider match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-    val ckpt = java.nio.file.Files.createTempDirectory("state_probe_ckpt")
-    try {
-      val in =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Change]
-      val q = StreamingSnapshot(in.toDS()).writeStream
-        .format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update")
-        .trigger(Trigger.ProcessingTime(0L))
-        .start()
-      @volatile var capped = false
-      val watchdog = new Thread(() => {
-        try {
-          Thread.sleep(capSec * 1000L)
-          capped = true
-          q.stop()
-        } catch { case _: InterruptedException => () }
-      })
-      watchdog.setDaemon(true)
-      watchdog.start()
+      provider: Option[String], capSec: Long = 900L): (Double, Long) =
+    Drive.withProvider(spark, provider) {
+      import spark.implicits._
+      // ---- seed: one create per key, 500k-row batches, un-timed
+      // (reported separately — it's the state-BUILD rate, a different
+      // quantity than the steady-state upsert rate under test); built
+      // lazily, batch by batch, so 5M keys never sit in driver memory
+      val seedBatch = 500000L
+      val seeds = (0L until nKeys by seedBatch).iterator.map { k =>
+        (k until math.min(nKeys, k + seedBatch)).map(id =>
+          Change(key = id, eventId = id, op = "c",
+            doc = s"""{"a": $id}""", cents = id))
+      }
+      // ---- measure: fixed workload over the EXISTING keys
+      val batches = 10
+      // co-prime stride spreads hits uniformly over the key space
+      val stride = 1000003L
+      val batchData = Drive.grid(150000, batches) { (_, _, i) =>
+        Change(key = (i * stride) % nKeys, eventId = nKeys + i,
+          op = "u", doc = s"""{"a": $i}""", cents = i)
+      }
       try {
-        // ---- seed: one create per key, 500k-row batches, un-timed
-        // (reported separately — it's the state-BUILD rate, a different
-        // quantity than the steady-state upsert rate under test)
-        val seedBatch = 500000L
-        val tSeed = System.nanoTime()
-        var k = 0L
-        while (k < nKeys) {
-          val hi = math.min(nKeys, k + seedBatch)
-          in.addData((k until hi).map(id =>
-            Change(key = id, eventId = id, op = "c",
-              doc = s"""{"a": $id}""", cents = id)))
-          q.processAllAvailable()
-          k = hi
-        }
-        val seedSec = (System.nanoTime() - tSeed) / 1e9
-
-        // ---- measure: fixed workload over the EXISTING keys
-        val n = 150000
-        val batches = 10
-        val perBatch = n / batches
-        // co-prime stride spreads hits uniformly over the key space
-        val stride = 1000003L
-        val batchData = (0 until batches).map { b =>
-          (0 until perBatch).map { j =>
-            val i = b.toLong * perBatch + j
-            Change(key = (i * stride) % nKeys, eventId = nKeys + i,
-              op = "u", doc = s"""{"a": $i}""", cents = i)
-          }
-        }
-        val t0 = System.nanoTime()
-        var done = 0
-        batchData.foreach { d =>
-          if (!capped) { in.addData(d); q.processAllAvailable(); done += 1 }
-        }
-        val wallSec = (System.nanoTime() - t0) / 1e9
-        if (capped || done < batches) (seedSec, -1L)
-        else (seedSec, (n / wallSec).round)
+        val fed = Drive.feed(spark, StreamingSnapshot(_: Dataset[Change]),
+          (w: DataStreamWriter[StreamingSnapshot.SnapRow]) =>
+            w.format("noop").outputMode("update"),
+          seeds, batchData, capSec)
+        if (fed.capped)
+          System.err.println(s"[state] cell keys=$nKeys capped at ${capSec}s")
+        if (fed.capped || fed.batches < batches) (fed.untimedSec, -1L)
+        else (fed.untimedSec, fed.rate)
       } catch {
         // unconditional: a provider that fails to LOAD (not just one
         // that hangs) must yield a -1 cell, not abort the remaining
         // (keys, provider) matrix — the snapshotEventsPerSec contract
         case e: Throwable =>
-          val why = if (capped) s"capped at ${capSec}s" else "failed"
           System.err.println(
-            s"[state] cell keys=$nKeys $why: ${e.getMessage}")
+            s"[state] cell keys=$nKeys failed: ${e.getMessage}")
           (-1.0, -1L)
-      } finally {
-        watchdog.interrupt()
-        // best-effort: a stop() throw after a completed measurement
-        // must not replace the valid (seedSec, rate) with a -1 cell;
-        // an interrupt still restores the flag so the caller's loop
-        // can abort instead of grinding through the remaining cells
-        try q.stop() catch {
-          case _: InterruptedException => Thread.currentThread().interrupt()
-          case _: Throwable => ()
-        }
       }
-    } catch {
-      // q.start() itself can throw (e.g. the provider class fails to
-      // resolve before any batch runs) — same -1-cell contract
-      case e: Throwable =>
-        System.err.println(
-          s"[state] cell keys=$nKeys failed to start: ${e.getMessage}")
-        (-1.0, -1L)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
     }
-  }
 
   def main(args: Array[String]): Unit = {
     val keyCounts = args.headOption
@@ -151,7 +82,7 @@ object StateProbe {
     val spark = GraftSession.local()
     GraftSession.applyEnvConf(spark)
     for (nKeys <- keyCounts;
-        (pname, p) <- Seq("default" -> None, "rocksdb" -> Some(RocksDb))) {
+        (pname, p) <- Seq("default" -> None, "rocksdb" -> Some(Drive.RocksDb))) {
       val (seedSec, rate) = cell(spark, nKeys, p)
       println(f"[state] keys=$nKeys provider=$pname " +
         f"seed=$seedSec%.1f rate=$rate")
