@@ -2,204 +2,42 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Committed expected-time table: calm-window seconds per query at
-  * sf0.1 on this host (sources: the r2 official bench, r3 calm-window
-  * profiling, and local calm sweeps). This is NOT used to report
-  * results — only to (a) tier each query's watchdog cap and (b) decide
-  * when a sample is "calm enough" that later sweeps should spend their
-  * budget elsewhere. An unknown query gets `default`.
+/** Per-query expected seconds: the committed calm bench artifact's
+  * value ([[Bench.committedQueryTimes]]); a name the artifact lacks
+  * gets `default`. NOT used to report results — only to (a) tier each
+  * query's watchdog cap, (b) order sweep 0 cheapest-first and (c)
+  * decide when a sample is calm enough that later sweeps should spend
+  * their budget elsewhere.
   */
 object BenchExpect {
   val default = 2.0
 
-  // Calm minima from a clean 3-sweep staged-index run at sf0.1
-  // (capped:[], total 35.9 s) — re-baselined after parquet staging of
-  // the shingle/signature/quantized indexes cut the dd/sim suites.
-  val expect: Map[String, Double] = Map(
-    "c1_commit_watermark" -> 0.3,
-    "c2_commit_batches" -> 0.3,
-    "cdc_apply" -> 0.6,
-    "cdc_scd2" -> 0.8,
-    "cdc_delta_agg" -> 1.0,
-    "dd_cluster" -> 0.4, // staged labels (r7)
-    "dd_cross_dedup" -> 0.9, // staged pair spine + content keys (r9)
-    "dd_decontaminate" -> 1.5,
-    "dd_dedup_verdict" -> 0.5, // labels built from staged pair spine (r9)
-    "dd_embed_cosine" -> 0.7,
-    "dd_exact" -> 0.5,
-    "dd_minhash_lsh" -> 0.3, // staged pair spine (r9); was 0.8
-    "dd_containment" -> 0.8, // staged capped-common/sizes (r8); was 3.0
-    "dd_ngram_jaccard" -> 0.8, // staged capped-common/sizes (r8); was 2.5
-    "dd_winnow" -> 1.0,
-    "dd_semdedup" -> 0.7, // staged kmeans core (r8)
-    "dd_simhash" -> 0.8,
-    "dd_span_dedup" -> 1.9,
-    "f1_optype_filter" -> 0.3,
-    "mm_features" -> 0.3,
-    "mm_frames" -> 0.3,
-    "mm_dedup" -> 0.8, // staged pair table + component labels (r8)
-    "mm_phash" -> 0.5, // staged pair table (r8)
-    "mm_resize" -> 0.3,
-    "p1_cdc_envelope" -> 0.4,
-    "pipe_curate" -> 1.0,
-    "pipe_report" -> 1.2,
-    "pipe_pack" -> 1.0, // staged curate verdict (r7)
-    "pipe_split" -> 0.6, // staged cluster labels (r7)
-    "sim_rrf_fusion" -> 0.5, // staged rank lists + truth (r10)
-    "pipe_mm_curate" -> 1.2,
-    "p3_topic_route" -> 0.3,
-    "p4_hash_route" -> 0.3,
-    "rel_anomaly" -> 0.6,
-    "rel_approx_distinct" -> 1.5,
-    "rel_asof_join" -> 1.0,
-    "rel_cube" -> 0.4,
-    "rel_distinct" -> 0.8,
-    "rel_funnel" -> 0.8,
-    "rel_retention" -> 0.8,
-    "rel_grouping_sets" -> 0.5,
-    "rel_hour_window" -> 0.4,
-    "rel_join_broadcast" -> 0.7,
-    "rel_json_agg" -> 0.6,
-    "rel_percentiles" -> 1.4,
-    "rel_percentiles_hist" -> 1.3,
-    "rel_pivot" -> 0.5,
-    "rel_promo_share" -> 0.8,
-    "rel_q1_agg" -> 0.7,
-    "rel_range_join" -> 0.6,
-    "rel_rollup" -> 0.6,
-    "rel_scalar_funcs" -> 0.5,
-    "rel_semi_anti" -> 0.5,
-    "rel_setop" -> 0.6,
-    "rel_skew_agg" -> 0.7,
-    "rel_star_join" -> 0.8,
-    "rel_topk" -> 0.8,
-    "rel_window_nav" -> 1.2,
-    "rel_window_range" -> 0.9,
-    "rel_window_running" -> 0.9,
-    "rel_zorder" -> 0.4,
-    "rel_top_suppliers" -> 0.7,
-    "rel_large_orders" -> 0.7,
-    "rel_min_cost" -> 0.7,
-    "graph_triangles" -> 1.0,
-    "graph_jaccard" -> 1.0,
-    "rel_small_qty" -> 0.7,
-    "rel_idle_customers" -> 0.5,
-    "rel_wait_suppliers" -> 1.0, // bucketed fact cores (r9); was 2.5
-    "rel_skyline" -> 0.6,
-    "rel_market_share" -> 0.8,
-    "tx_length_profile" -> 0.4,
-    "tx_class_tfidf" -> 0.8,
-    "dd_agreement" -> 0.8, // staged method-pair union (r8); was 3.5 unstaged
-    "dd_band_sweep" -> 1.2, // three band-geometry legs on staged sigs (r8 calm)
-    "sim_planes_sweep" -> 0.6, // staged lsh legs + truth (r10)
-    "tx_span_strip" -> 1.0, // staged positional gram index (r8)
-    "tx_boilerplate" -> 1.4, // staged line index + anti-join + reassembly
-    "tx_span_cut" -> 1.8, // span removal + per-doc reassembly (r8)
-    "sim_threshold_sweep" -> 0.8,
-    "cdc_reconcile" -> 1.0,
-    "cdc_topic_stats" -> 0.5,
-    "rel_event_paths" -> 0.8,
-    "s1_scan_pushdown" -> 0.3,
-    "s6_sequence" -> 0.5,
-    "s7_sessions" -> 0.5, // staged session table (r9)
-    "sim_cosine_topk" -> 0.4, // staged exact truth (r10)
-    "sim_filtered_ann" -> 0.6,
-    "sim_ivf_ann" -> 0.7,
-    "sim_ivf_kmeans" -> 0.4, // staged rank list (r10)
-    "sim_lsh_ann" -> 0.4, // staged rank list (r10)
-    "sim_pq_ann" -> 1.0,
-    "sim_ivfpq_ann" -> 1.3,
-    "sim_knn_graph" -> 1.0,
-    "graph_pagerank" -> 1.0,
-    "graph_core" -> 1.6,
-    "sim_knn_label" -> 0.7,
-    "graph_label_prop" -> 1.2,
-    "sim_sq8_ann" -> 1.2,
-    "sim_lsh_bucket" -> 0.6,
-    "sim_recall_at_k" -> 0.6, // staged truth + ivf list (r10)
-    "tx_bpe_tokens" -> 0.4,
-    "tx_cms_topk" -> 1.0,
-    "tx_filter_verdict" -> 0.5, // staged gate-verdict scan (r11)
-    "tx_quality_clf" -> 1.1, // staged labels + staged feature table
-    "tx_clf_holdout" -> 1.1, // same staged inputs, half-split variant
-    "tx_clf_struct" -> 0.5, // one narrow staged-verdict scan + tiny aggs
-    "tx_fingerprint" -> 0.3,
-    "tx_langid" -> 0.3,
-    "tx_langid_ngram" -> 1.5,
-    "tx_lm_score" -> 1.5,
-    "tx_mixture" -> 0.6,
-    "tx_ngram_topk" -> 0.4,
-    "tx_collocations" -> 0.8,
-    "tx_normalize" -> 0.5,
-    "tx_pack" -> 0.8,
-    "tx_shard" -> 0.5,
-    "tx_quality_bins" -> 0.4, // staged deciles (r7)
-    "tx_inverted_index" -> 0.8,
-    "tx_bm25_topk" -> 0.8,
-    "tx_pii" -> 0.5,
-    "tx_tfidf" -> 1.0,
-    "tx_quality" -> 0.3,
-    "tx_gopher_rules" -> 1.6, // per-row top-word scan is O(u*n) per doc
-    "tx_bpe_learn" -> 2.5, // 6 eager merge rounds (localCheckpoint each)
-    "tx_bpe_apply" -> 2.8, // the same rounds + the corpus tokenize join
-    "sim_mrl_ann" -> 0.5,
-    "sim_label_centroids" -> 0.6,
-    "pipe_curriculum" -> 1.1, // staged deciles + global rank (r7)
-    "pipe_dsir" -> 1.2, // staged dsir scores (r8); was 2.8
-    "tx_dsir" -> 0.8, // staged dsir scores (r8)
-    "pipe_datacard" -> 1.2, // pipe_report re-agg, staged verdicts
-    "tx_pack_stats" -> 0.9,
-    "tx_repetition" -> 1.0,
-    "tx_sample" -> 0.7,
-    "tx_sample_weighted" -> 0.9,
-    "tx_source_cap" -> 0.8,
-    "tx_tokens" -> 0.3,
-    "rel_concurrency" -> 1.5, // staged sessions + reduced sweep (r9)
-    "pipe_epoch_plan" -> 1.4, // pipe_report roll-up + 1-row scalar
-    "sim_dim_stats" -> 0.5,
-    "tx_fertility" -> 3.0, // tx_bpe_apply's rounds + the lang roll-up
-    "tx_readability" -> 0.5,
-    "sim_ood_score" -> 0.9, // staged kmeans core + GroupRank (r8)
-    "dd_cluster_stats" -> 0.6, // staged labels + tiny roll-ups (r7)
-    "tx_novelty" -> 1.6, // O(grams) first-seen agg + join back
-    "rel_basket_affinity" -> 2.0, // bucketed staged items self-join (r9)
-    "sim_centroid_balance" -> 0.6, // staged kmeans core (r8)
-    "cdc_gap_detect" -> 1.0, // bucketed scan + rare-bucket expansion
-    "rel_cohort_ltv" -> 0.9, // two custkey aggs + tiny roll-up
-    "graph_degree_dist" -> 0.8, // staged edges + two tiny aggs
-    "rel_pareto_abc" -> 1.2, // part agg + global GroupRank cumsum
-    "sim_margin" -> 1.0, // staged kNN edges + 2-row pivot agg
-    "rel_seasonality" -> 0.6, // scan-speed buckets, 168-cell agg
-    "rel_key_skew" -> 0.5, // two map-side aggs over one column (r9)
-    "pipe_integrity" -> 0.6, // id-column counts + anti-joins (r9)
-    "mm_hamming_hist" -> 0.5, // staged pair table rollup (r8)
-    "sim_nprobe_sweep" -> 0.7, // staged ivf legs + truth (r10)
-    "sim_multiprobe_ann" -> 0.4, // staged rank list (r10)
-    "sim_pq_code_balance" -> 1.3, // PQ encode + 32-row roll-up (r8)
-    "sim_multiprobe_recall" -> 0.8, // semi-joins of staged rank lists (r10)
-    "dd_sketch_error" -> 1.4, // staged pair spine + capped-common (r9)
-    "rel_rank_stats" -> 1.0, // custkey agg + GroupRank derivations
-    "pipe_manifest" -> 2.3, // staged components, id joins only (r7)
-    "sim_label_purity" -> 0.8, // staged kmeans assignment (r8)
-  )
-
-  def apply(n: String): Double = expect.getOrElse(n, default)
-
-  /** A sample is calm when it's within 3× the expected time (+0.5 s
-    * timer-noise floor). Calm queries don't need more budget.
-    */
-  def isCalm(n: String, sec: Double): Boolean = sec <= apply(n) * 3.0 + 0.5
+  def apply(committed: Map[String, Double], n: String): Double =
+    committed.get(n).filter(_ > 0).getOrElse(default)
 
   /** Tiered per-query watchdog cap: 3.5× expected, clamped to
     * [5 s, maxCap]. The r3 failure was arithmetic — a flat 60 s cap ×
     * 54 queries let ONE fully-contended sweep (613 s) blow the whole
     * 450 s budget, so min-over-sweeps never engaged and every recorded
-    * number was a single contended sample. With tiered caps a
-    * worst-case (everything-capped) sweep costs ~320 s, so later
-    * sweeps always get budget.
+    * number was a single contended sample. At the committed calm
+    * values the 185 tiered caps sum to 939 s: a fully-capped sweep 0
+    * still overruns the default 450 s budget, but it always finishes
+    * (every query gets a sample), and later sweeps run only the
+    * queries whose cap still fits.
     */
-  def capSec(n: String, maxCap: Long): Long =
-    math.min(maxCap, math.max(5L, math.ceil(apply(n) * 3.5).toLong))
+  def capSec(committed: Map[String, Double], n: String, maxCap: Long): Long =
+    math.min(maxCap,
+      math.max(5L, math.ceil(apply(committed, n) * 3.5).toLong))
+
+  /** The queries a later sweep re-samples: those without an uncapped
+    * sample yet, and those whose best sample is an outlier against the
+    * expected time — the same [[Bench.isOutlier]] rule that writes the
+    * artifact's `outliers`.
+    */
+  def pending(names: Seq[String], committed: Map[String, Double],
+      best: String => Option[Double]): Seq[String] =
+    names.filterNot(n =>
+      best(n).exists(b => !Bench.isOutlier(b, apply(committed, n))))
 }
 
 /** Per-round benchmark: runs every SparkEntry query against
@@ -213,9 +51,10 @@ object BenchExpect {
   *    cost of any one contended sample;
   *  - sweep 0 runs every query cheapest-first (a burst at the start
   *    caps cheap queries at ~5 s each instead of eating the budget);
-  *  - later sweeps rerun ONLY queries without a calm sample yet,
-  *    respending the budget where it's needed; once all queries are
-  *    calm, full refinement sweeps continue until ≥3 sweeps ran;
+  *  - later sweeps rerun ONLY queries without a calm sample yet
+  *    ([[BenchExpect.pending]]), respending the budget where it's
+  *    needed; once all queries are calm, full refinement sweeps
+  *    continue until ≥3 sweeps ran;
   *  - the reported number is the per-query min over uncapped samples.
   */
 object Bench {
@@ -308,25 +147,43 @@ object Bench {
     */
   private[graft] def committedQueryTimes(
       path: String = "bench_out.json"): Map[String, Double] =
+    committedBaseline(path)._1
+
+  /** Top-level numeric fields of the committed artifact (the
+    * throughput figures) — the [[committedQueryTimes]] companion.
+    */
+  private[graft] def committedFigures(
+      path: String = "bench_out.json"): Map[String, Double] =
+    committedBaseline(path)._2
+
+  /** Both committed maps — per-query seconds and top-level figures —
+    * from ONE [[committedBytes]] read (a `git log` plus up to
+    * [[CalmWalkDepth]] `git show`s) and one parse. Both are empty when
+    * no baseline is readable.
+    */
+  private[graft] def committedBaseline(path: String = "bench_out.json")
+      : (Map[String, Double], Map[String, Double]) = {
+    def numericFields(node: com.fasterxml.jackson.databind.JsonNode) = {
+      val b = Map.newBuilder[String, Double]
+      if (node != null && node.isObject) {
+        val it = node.properties().iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
+        }
+      }
+      b.result()
+    }
     try {
       committedBytes(path) match {
-        case None => Map.empty
+        case None => (Map.empty, Map.empty)
         case Some(bytes) =>
           val root =
             new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-          val qs = root.get("queries")
-          if (qs == null || !qs.isObject) Map.empty
-          else {
-            val b = Map.newBuilder[String, Double]
-            val it = qs.properties().iterator()
-            while (it.hasNext) {
-              val e = it.next()
-              if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
-            }
-            b.result()
-          }
+          (numericFields(root.get("queries")), numericFields(root))
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case _: Throwable => (Map.empty, Map.empty) }
+  }
 
   /** A sample is an outlier against its committed calm value when it
     * exceeds 2× it plus a timer-noise floor (0.3 s — sub-second
@@ -375,27 +232,6 @@ object Bench {
       while (p < passes && still) { sample(n); p += 1 }
       !still
     }
-
-  /** Top-level numeric fields of the committed artifact (the
-    * throughput figures) — the [[committedQueryTimes]] companion.
-    */
-  private[graft] def committedFigures(
-      path: String = "bench_out.json"): Map[String, Double] =
-    try {
-      committedBytes(path) match {
-        case None => Map.empty
-        case Some(bytes) =>
-          val root =
-            new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-          val b = Map.newBuilder[String, Double]
-          val it = root.properties().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getValue.isNumber) b += e.getKey -> e.getValue.asDouble()
-          }
-          b.result()
-      }
-    } catch { case _: Throwable => Map.empty }
 
   /** A throughput figure is suspect when it lands below TWO-THIRDS
     * of its committed calm value. Closes the blind spot the
@@ -449,9 +285,10 @@ object Bench {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val committed = committedQueryTimes()
+    val (committed, committedFigs) = committedBaseline()
 
     val maxCap = sys.env.getOrElse("SPARK_GRAFT_QUERY_CAP_SEC", "30").toLong
+    def capSec(n: String): Long = BenchExpect.capSec(committed, n, maxCap)
 
     // Best UNCAPPED sample per query; capped samples only mark the
     // query as attempted (their recorded time is the cap — an upper
@@ -464,7 +301,7 @@ object Bench {
       // so measurements don't depend on run order or GC debt
       spark.catalog.clearCache()
       val cap =
-        if (capOverride > 0) capOverride else BenchExpect.capSec(name, maxCap)
+        if (capOverride > 0) capOverride else capSec(name)
       val group = s"bench-$name-${System.nanoTime()}"
       val sc = spark.sparkContext
       sc.setJobGroup(group, name, interruptOnCancel = true)
@@ -485,8 +322,6 @@ object Bench {
         }
       } finally sc.clearJobGroup()
     }
-
-    def calm(n: String): Boolean = best.get(n).exists(BenchExpect.isCalm(n, _))
 
     // Warm the JVM/codegen once on the cheapest query so the first
     // measured number isn't dominated by classloading. Generous cap:
@@ -560,15 +395,14 @@ object Bench {
 
     var sweep = 0
     var lastSweepRan = true // a sweep that ran zero queries ends the loop
-    def allCalm = names.forall(calm)
+    def pending = BenchExpect.pending(names, committed, best.get)
     while (sweep == 0 ||
         (sweep < maxSweeps && lastSweepRan && elapsedSec < sweepBudget &&
-          !(allCalm && sweep >= 3))) {
+          !(pending.isEmpty && sweep >= 3))) {
       val targets =
-        if (sweep == 0) names.sortBy(BenchExpect(_)) // cheapest-first
+        if (sweep == 0) names.sortBy(BenchExpect(committed, _)) // cheapest-first
         else {
-          val pending = names.filterNot(calm)
-          val ts = if (pending.nonEmpty) pending else names
+          val ts = { val p = pending; if (p.nonEmpty) p else names }
           // Different deterministic order each sweep: contention
           // bursts span minutes, so a fixed order lets one burst
           // shadow the same block of queries every sweep.
@@ -579,7 +413,7 @@ object Bench {
         // sweep 0 must finish (every query needs >= 1 sample); later
         // sweeps skip a query when its cap no longer fits the budget
         if (sweep == 0 ||
-            elapsedSec + BenchExpect.capSec(n, maxCap) <= sweepBudget) {
+            elapsedSec + capSec(n) <= sweepBudget) {
           run(n); ran += 1
         }
       }
@@ -615,37 +449,40 @@ object Bench {
     // 246.9k pair-verified streaming figure — the batch side had no
     // retry path, so ONE contended p1 sample became the headline.
     // Re-measuring p1 costs ~0.5 s calm; re-measuring the streaming
-    // side re-runs the (still pair-enforced) envelopeFigurePair.
+    // side re-runs the (still pair-enforced) envelopeFigurePair. Both
+    // re-measures below, and the slow-figure rounds after them, go
+    // through these two helpers.
     val nEvents = Tables.events(spark, sfDir).count()
     def batchEnvelopeEps: Long =
       best.get("p1_cdc_envelope").filter(_ > 0)
         .map(sec => (nEvents / sec).round).getOrElse(-1L)
     var eventsPerSec = batchEnvelopeEps
+    def remeasureBatchEnvelope(): Unit = {
+      run("p1_cdc_envelope") // min-tracked: only a calmer sample lands
+      eventsPerSec = batchEnvelopeEps
+    }
+    def remeasureStreamEnvelope(budget: BenchStreaming.WallBudget): Unit = {
+      val (d2, r2, a2) = BenchStreaming.envelopeFigurePair(spark, budget = budget)
+      streamEps = math.max(streamEps, d2)
+      streamEpsRocks = math.max(streamEpsRocks, r2)
+      streamAgreed = streamAgreed || a2
+    }
+    def streamRef = math.max(streamEps, streamEpsRocks)
     var envRetries = 0
     while (envRetries < 3 && !streamBudget.exhausted &&
-        !batchStreamAgree(eventsPerSec, math.max(streamEps, streamEpsRocks))) {
-      val streamRef = math.max(streamEps, streamEpsRocks)
+        !batchStreamAgree(eventsPerSec, streamRef)) {
       System.err.println(s"[bench] batch vs streaming envelope disagree " +
         s"($eventsPerSec vs $streamRef ev/s) — re-measuring the suspect side")
-      if (eventsPerSec <= 0 || eventsPerSec * BatchLowSlack < streamRef) {
-        run("p1_cdc_envelope") // min-tracking: only a better sample lands
-        eventsPerSec = batchEnvelopeEps
-      } else {
-        val (d2, r2, a2) =
-          BenchStreaming.envelopeFigurePair(spark, budget = streamBudget)
-        streamEps = math.max(streamEps, d2)
-        streamEpsRocks = math.max(streamEpsRocks, r2)
-        streamAgreed = streamAgreed || a2
-      }
+      if (eventsPerSec <= 0 || eventsPerSec * BatchLowSlack < streamRef)
+        remeasureBatchEnvelope()
+      else remeasureStreamEnvelope(streamBudget)
       envRetries += 1
     }
-    val batchStreamAgreed =
-      batchStreamAgree(eventsPerSec, math.max(streamEps, streamEpsRocks))
-    if (!batchStreamAgreed)
+    if (!batchStreamAgree(eventsPerSec, streamRef))
       System.err.println(s"[bench] batch vs streaming envelope STILL " +
         s"disagree after $envRetries re-measures ($eventsPerSec vs " +
-        s"${math.max(streamEps, streamEpsRocks)} ev/s) — sustained " +
-        "contention window; treat the lower figure as corrupted")
+        s"$streamRef ev/s) — sustained contention window; treat the " +
+        "lower figure as corrupted")
     var snapEps =
       BenchStreaming.snapshotEventsPerSecDefault(spark, streamBudget)
     var snapEpsRocks =
@@ -681,33 +518,23 @@ object Bench {
     // the per-query min. A calm run has no slow figures and spends
     // nothing here; sustained contention still names itself because
     // the re-measure is exactly as contended as the first pass.
-    val committedFigs = committedFigures()
-    def slowFigNames: Seq[String] = Seq(
+    def slowFigureEntries: Seq[(String, Long)] = Seq(
       "envelope_events_per_sec" -> eventsPerSec,
       "streaming_envelope_events_per_sec" -> streamEps,
       "streaming_envelope_events_per_sec_rocksdb" -> streamEpsRocks,
       "streaming_snapshot_events_per_sec" -> snapEps,
       "streaming_snapshot_events_per_sec_rocksdb" -> snapEpsRocks)
-      .collect {
-        case (f, v) if committedFigs.get(f).exists(isSlowFigure(v, _)) => f
-      }
+      .filter { case (f, v) => committedFigs.get(f).exists(isSlowFigure(v, _)) }
+    def slowFigNames = slowFigureEntries.map(_._1)
     var figRounds = 0
     while (figRounds < 2 && slowFigNames.nonEmpty) {
       val slow = slowFigNames
       System.err.println(s"[bench] figure(s) below 2/3 committed calm: " +
         s"${slow.mkString(", ")} — re-measuring their sources")
       val figBudget = new BenchStreaming.WallBudget(FigureRequalBudgetSec)
-      if (slow.contains("envelope_events_per_sec")) {
-        run("p1_cdc_envelope") // min-tracked: only a calmer sample lands
-        eventsPerSec = batchEnvelopeEps
-      }
-      if (slow.exists(_.startsWith("streaming_envelope"))) {
-        val (d2, r2, a2) =
-          BenchStreaming.envelopeFigurePair(spark, budget = figBudget)
-        streamEps = math.max(streamEps, d2)
-        streamEpsRocks = math.max(streamEpsRocks, r2)
-        streamAgreed = streamAgreed || a2
-      }
+      if (slow.contains("envelope_events_per_sec")) remeasureBatchEnvelope()
+      if (slow.exists(_.startsWith("streaming_envelope")))
+        remeasureStreamEnvelope(figBudget)
       if (slow.contains("streaming_snapshot_events_per_sec"))
         snapEps = math.max(snapEps,
           BenchStreaming.snapshotEventsPerSecDefault(spark, figBudget))
@@ -718,14 +545,12 @@ object Bench {
     }
     // the agreement stamp must reflect the figures the artifact
     // actually reports, including any requalified envelope samples
-    val batchStreamAgreedFinal =
-      batchStreamAgree(eventsPerSec, math.max(streamEps, streamEpsRocks))
+    val batchStreamAgreedFinal = batchStreamAgree(eventsPerSec, streamRef)
 
     // results AFTER the envelope pairing loop and requalification: a
     // re-measure that found a calmer sample must be the one reported
     val results = names.map { n =>
-      n -> best.getOrElse(n,
-        if (attempted(n)) BenchExpect.capSec(n, maxCap).toDouble else -1.0)
+      n -> best.getOrElse(n, if (attempted(n)) capSec(n).toDouble else -1.0)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -758,20 +583,10 @@ object Bench {
     // INCONSISTENT contention; this catches the consistent kind,
     // where every figure is depressed together and the pairs agree
     // anyway. Evaluated on the POST-requalification figures.
-    val figures = Seq(
-      "envelope_events_per_sec" -> eventsPerSec,
-      "streaming_envelope_events_per_sec" -> streamEps,
-      "streaming_envelope_events_per_sec_rocksdb" -> streamEpsRocks,
-      "streaming_snapshot_events_per_sec" -> snapEps,
-      "streaming_snapshot_events_per_sec_rocksdb" -> snapEpsRocks)
-    val slowFigureEntries = figures.collect {
-      case (f, v) if committedFigs.get(f).exists(isSlowFigure(v, _)) => (f, v)
-    }
-    val slowFigures = slowFigureEntries
-      .map { case (f, v) =>
-        s"""{"figure":"$f","value":$v,"committed":${committedFigs(f).round}}"""
-      }
-      .mkString("[", ",", "]")
+    val slowFigureFinal = slowFigureEntries
+    val slowFigures = slowFigureFinal.map { case (f, v) =>
+      s"""{"figure":"$f","value":$v,"committed":${committedFigs(f).round}}"""
+    }.mkString("[", ",", "]")
     val stagedJson = stagedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val stageBuildJson = stageBuild
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -797,7 +612,7 @@ object Bench {
     val outlierNames =
       outlierEntries.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
     val slowFigureNames =
-      slowFigureEntries.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
+      slowFigureFinal.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
     println(s"""{"summary":{"total":$total,"sweeps":$sweep,"capped":$cappedFinal,"outliers":$outlierNames,"requalified":$requalified,"slow_figures":$slowFigureNames,"batch_stream_envelope_agreed":$batchStreamAgreedFinal,"streaming_envelope_agreed":$streamAgreed}}""")
     spark.stop()
   }
