@@ -137,20 +137,11 @@ object EnvelopeTransform {
       (if (legacyDialect) valueEnvelopeLegacy else valueEnvelope)
         .alias("value"))
 
-  /** P4 parity: the reference routes each event to producer
-    * `sum(bytes) mod n` over the documentKey ObjectId's 12 raw bytes
-    * (`change_handler.py:77-81`). `OidByteSumMod` parses the `$oid`
-    * hex out of the ext-JSON key this engine carries and sums the
-    * decoded bytes — numerically identical assignments to the
-    * reference for ObjectId keys. Non-ObjectId keys (the reference
-    * crashes on those) fall back to the whole-string byte sum: still
-    * a deterministic function of the key, so each key always routes
-    * to the same partition (per-document ordering under n-way
-    * parallelism).
+  /** P4: Spark's hash of `key` sends every event of one document to
+    * the same partition, which keeps per-document order under n-way
+    * parallelism — what the reference's byte-sum routing
+    * (`change_handler.py:77-81`) is for.
     */
-  def byteSumPartition(keyCol: Column, n: Int): Column =
-    graft.functions.OidByteSumMod(keyCol, n)
-
   def repartitionByKey(df: DataFrame, n: Int): DataFrame =
     df.repartition(n, col("key"))
 }

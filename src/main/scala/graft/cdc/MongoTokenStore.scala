@@ -1,48 +1,41 @@
 package graft.cdc
 
+import java.net.SocketTimeoutException
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
+import java.util.concurrent.TimeoutException
 
-/** Minimal Mongo-driver-shaped surface — exactly the subset the
-  * reference's token saver touches (`committing/token_saver.py:31-90`):
-  * `get_database(..).get_collection(..)`, `create_index`, `find_one`,
-  * `replace_one(upsert=True)`, `server_info`, `close`. Keeping the
-  * seam this narrow lets a production deployment back it with the
-  * Mongo Java driver in a dozen lines while tests drive the full
-  * store + retry behavior through an injectable fake, the same way the
-  * reference tests do (`tests/mocks/mongo_client.py:92-144`).
+/** The one Mongo collection the token store touches — exactly the
+  * subset of the driver the reference's token saver uses
+  * (`committing/token_saver.py:31-90`): `server_info`, `create_index`,
+  * `find_one`, `replace_one(upsert=True)`, `close`. Keeping the seam
+  * this narrow lets `MongoJavaDriverClient` back it with the Mongo Java
+  * driver while tests drive the full store + retry behavior through an
+  * injectable fake, the same way the reference tests do
+  * (`tests/mocks/mongo_client.py:92-144`).
   *
   * Documents are plain `Map[String, Any]`: the token store reads and
   * writes one fixed three-field shape, so a BSON document type would
   * add a dependency without adding safety.
   */
-object mongo {
-  trait MongoCollectionLike {
-    def createIndex(key: String, indexName: String, unique: Boolean): Unit
+trait MongoCollectionLike {
+  def serverInfo(): Map[String, Any]
 
-    def findOne(filter: Map[String, Any]): Option[Map[String, Any]]
+  def createIndex(key: String, indexName: String, unique: Boolean): Unit
 
-    /** `maxTimeMs`, when set, is the server-side deadline for this one
-      * write — the Java-driver spelling of pymongo's `timeout(...)`
-      * context the reference wraps each save attempt in
-      * (`token_saver.py:84-90`).
-      */
-    def replaceOne(
-        filter: Map[String, Any],
-        replacement: Map[String, Any],
-        upsert: Boolean,
-        maxTimeMs: Option[Long]): Unit
-  }
+  def findOne(filter: Map[String, Any]): Option[Map[String, Any]]
 
-  trait MongoDatabaseLike {
-    def getCollection(name: String): MongoCollectionLike
-  }
+  /** `maxTimeMs` is the server-side deadline for this one write — the
+    * Java-driver spelling of pymongo's `timeout(...)` context the
+    * reference wraps each save attempt in (`token_saver.py:84-90`).
+    */
+  def replaceOne(
+      filter: Map[String, Any],
+      replacement: Map[String, Any],
+      upsert: Boolean,
+      maxTimeMs: Long): Unit
 
-  trait MongoClientLike {
-    def serverInfo(): Map[String, Any]
-    def getDatabase(name: String): MongoDatabaseLike
-    def close(): Unit
-  }
+  def close(): Unit
 }
 
 /** C4 made concrete: the reference's MongoDB-backed resume-token store
@@ -55,57 +48,47 @@ object mongo {
   *  - `save` is `replace_one(filter={stream_reader_name}, upsert=True)`
   *    (`token_saver.py:84-90`); the token travels as its UTF-8 bytes,
   *    mirroring the reference's `Binary(token, subtype=0)` field
-  *    (`token_saver.py:50-56`).
+  *    (`token_saver.py:50-56`). Attempt n (1-based) runs under the
+  *    deadline `writeTimeoutMs * n` — 5 s / 10 s / 15 s at the
+  *    reference defaults (`settings.py:46-47`); a timeout retries with
+  *    the longer deadline until `onTimeoutRetryCount` attempts are
+  *    spent and then propagates; any other error propagates at once
+  *    (`token_saver.py:58-90`).
   *  - `load` is `find_one` by reader name (C5 resume,
   *    `tests/mocks/mongo_client.py:115-123` pins the shape).
-  *
-  * Escalating-deadline retry stays in `RetryingTokenStore`; this class
-  * supplies the deadline *mechanism*: `withDeadline` scopes a
-  * per-thread deadline that `save` forwards as the write's `maxTimeMs`
-  * — wire it as the retry store's `withTimeout` seam (see
-  * `MongoTokenStore.retrying`), giving attempt n the reference's
-  * `write_timeout * (n+1)` server-side deadline.
   */
 final class MongoTokenStore(
-    client: mongo.MongoClientLike,
-    database: String,
-    collection: String)
+    coll: MongoCollectionLike,
+    writeTimeoutMs: Long = 5000L,
+    onTimeoutRetryCount: Int = 3)
   extends TokenStore {
 
   import MongoTokenStore._
 
-  private val coll = client.getDatabase(database).getCollection(collection)
-
-  private val deadlineMs = new ThreadLocal[Option[Long]] {
-    override def initialValue(): Option[Long] = None
-  }
+  require(onTimeoutRetryCount >= 1, "onTimeoutRetryCount must be >= 1")
 
   /** Connect + ensure the unique reader-name index (idempotent). */
   def start(): Unit = {
-    client.serverInfo() // connectivity check, `token_saver.py:37`
+    coll.serverInfo() // connectivity check, `token_saver.py:37`
     coll.createIndex(FieldName, indexName = FieldName, unique = true)
   }
 
-  def stop(): Unit = client.close()
+  def stop(): Unit = coll.close()
 
-  /** Run `op` with `ms` as the maxTimeMS deadline of any save it
-    * performs on this thread. Signature matches `RetryingTokenStore`'s
-    * `withTimeout` seam.
-    */
-  def withDeadline(ms: Long, op: () => Unit): Unit = {
-    deadlineMs.set(Some(ms))
-    try op() finally deadlineMs.set(None)
+  override def save(t: SavedToken): Unit = {
+    val filter = Map(FieldName -> t.streamReaderName)
+    val doc = Map(
+      FieldName -> t.streamReaderName,
+      "token" -> t.token.getBytes(UTF_8),
+      "date" -> t.date)
+    def attempt(n: Int): Unit =
+      try coll.replaceOne(filter, doc, upsert = true, writeTimeoutMs * n)
+      catch {
+        case e: Throwable if isTimeout(e) && n < onTimeoutRetryCount =>
+          attempt(n + 1)
+      }
+    attempt(1)
   }
-
-  override def save(t: SavedToken): Unit =
-    coll.replaceOne(
-      filter = Map(FieldName -> t.streamReaderName),
-      replacement = Map(
-        FieldName -> t.streamReaderName,
-        "token" -> t.token.getBytes(UTF_8),
-        "date" -> t.date),
-      upsert = true,
-      maxTimeMs = deadlineMs.get)
 
   override def load(name: String): Option[SavedToken] =
     coll.findOne(Map(FieldName -> name)).map { doc =>
@@ -120,18 +103,14 @@ object MongoTokenStore {
   /** The reference's field/index name (`token_saver.py:41,53`). */
   val FieldName = "stream_reader_name"
 
-  /** The full reference stack: store + escalating retry with the
-    * per-attempt deadline delivered to the server as maxTimeMS
-    * (write_timeout·(n+1) — 5 s / 10 s / 15 s at the defaults).
+  /** The JVM shapes of "the write timed out" (pymongo's `exc.timeout`
+    * discriminator, `token_saver.py:70`), looked for along the cause
+    * chain: the driver reports a socket read timeout as its own
+    * exception with a `SocketTimeoutException` cause.
     */
-  def retrying(
-      client: mongo.MongoClientLike,
-      database: String,
-      collection: String,
-      writeTimeoutMs: Long = 5000L,
-      onTimeoutRetryCount: Int = 3): (MongoTokenStore, RetryingTokenStore) = {
-    val store = new MongoTokenStore(client, database, collection)
-    (store, new RetryingTokenStore(store, writeTimeoutMs,
-      onTimeoutRetryCount, withTimeout = store.withDeadline))
-  }
+  def isTimeout(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: TimeoutException | _: SocketTimeoutException => true
+      case _ => false
+    }
 }

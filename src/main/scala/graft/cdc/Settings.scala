@@ -1,10 +1,10 @@
 package graft.cdc
 
 /** Pipeline configuration — the surviving subset of the reference's
-  * 27-field pydantic `Settings` (`settings.py:37-112`). Everything
-  * about queues, process counts, handshakes, and token timeouts
-  * disappears into Spark's runtime; what remains is source/sink
-  * wiring and pacing.
+  * 27-field pydantic `Settings` (`settings.py:37-112`). Queues,
+  * process counts and handshakes disappear into Spark's runtime, and
+  * the token-save timeouts are `MongoTokenStore`'s constructor
+  * parameters; what remains is source/sink wiring and pacing.
   *
   * @param sourceFormat   streaming source ("mongodb" with the
   *                       mongo-spark connector in production; tests
@@ -28,10 +28,6 @@ package graft.cdc
   * @param newTopic        creation spec for auto-created topics (K4 —
   *                        `settings.py:31-34` NewTopicConfiguration:
   *                        partitions, replication factor, topic config)
-  * @param tokenSaveTimeoutMs base write timeout for token persistence;
-  *                        attempt n waits n× this (C4 retry parity,
-  *                        `settings.py:46-47` + `token_saver.py:58-90`)
-  * @param tokenSaveOnTimeoutRetry attempts before a timeout propagates
   */
 case class Settings(
     sourceFormat: String = "mongodb",
@@ -43,9 +39,7 @@ case class Settings(
     triggerInterval: String = "30 seconds",
     sinkPartitions: Option[Int] = None,
     streamReaderName: String = "graft-stream-reader",
-    newTopic: TopicSpec = TopicSpec(),
-    tokenSaveTimeoutMs: Long = 5000L,
-    tokenSaveOnTimeoutRetry: Int = 3)
+    newTopic: TopicSpec = TopicSpec())
 
 /** S3 config parity: the reference exposes `full_document` and
   * `full_document_before_change` enums (`settings.py:20-28`) that are

@@ -1,10 +1,12 @@
 package graft.cdc
 
-import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Operational-parity mirror of the reference's durable resume-token
@@ -13,9 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Spark's checkpointLocation is the real recovery mechanism; this
   * store exists so operators can observe stream progress in the same
-  * upsert-by-reader-name shape the reference persists to MongoDB. A
-  * production deployment would add a MongoTokenStore using the Mongo
-  * Java driver's replaceOne(upsert=true) — same interface.
+  * upsert-by-reader-name shape the reference persists to MongoDB
+  * (`MongoTokenStore` is that backend).
   */
 trait TokenStore {
   def save(t: SavedToken): Unit
@@ -34,15 +35,18 @@ final class InMemoryTokenStore extends TokenStore {
 final class FileTokenStore(dir: String) extends TokenStore {
   Files.createDirectories(Paths.get(dir))
 
+  private val mapper = new ObjectMapper()
+
   private def fileFor(name: String) =
     Paths.get(dir, name.replaceAll("[^A-Za-z0-9._-]", "_") + ".json")
 
   override def save(t: SavedToken): Unit = {
     val tmp = Files.createTempFile(Paths.get(dir), ".token", ".tmp")
-    val json =
-      s"""{"streamReaderName":${quote(t.streamReaderName)},"token":${quote(
-          t.token)},"date":${t.date.getTime}}"""
-    Files.write(tmp, json.getBytes(UTF_8))
+    val json = mapper.createObjectNode()
+      .put("streamReaderName", t.streamReaderName)
+      .put("token", t.token)
+      .put("date", t.date.getTime)
+    Files.write(tmp, mapper.writeValueAsBytes(json))
     Files.move(tmp, fileFor(t.streamReaderName),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
@@ -51,104 +55,17 @@ final class FileTokenStore(dir: String) extends TokenStore {
     val p = fileFor(name)
     if (!Files.exists(p)) None
     else {
-      val s = new String(Files.readAllBytes(p), UTF_8)
-      // minimal parse of the fixed shape written above; a file that
-      // exists but lacks either key is corruption and surfaces as
-      // None, not as a fabricated epoch-0 token
-      val tok = """"token":"((?:[^"\\]|\\.)*)"""".r
-        .findFirstMatchIn(s).map(_.group(1))
-      val date = """"date":(\d+)""".r
-        .findFirstMatchIn(s).map(_.group(1).toLong)
-      for (t <- tok; d <- date)
-        yield SavedToken(name, unescape(t), new Timestamp(d))
+      // a file that exists but is not the shape written above is
+      // corruption and surfaces as None, not as a fabricated token
+      val doc =
+        try mapper.readTree(Files.readAllBytes(p))
+        catch { case _: JsonProcessingException => MissingNode.getInstance }
+      val (tok, date) = (doc.path("token"), doc.path("date"))
+      if (tok.isTextual && date.isIntegralNumber && date.canConvertToLong)
+        Some(SavedToken(name, tok.textValue, new Timestamp(date.longValue)))
+      else None
     }
   }
-
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c => c.toString
-    } + "\""
-
-  // Single left-to-right scan: chained .replace calls are not a correct
-  // inverse of quote (a literal backslash+'n' round-trips as "\\n", which
-  // replace("\\\\","\\") first collapses and replace("\\n","\n") then
-  // corrupts into a real newline).
-  private def unescape(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => out.append('\n')
-          case e => out.append(e) // covers \" and \\ (and passes others through)
-        }
-        i += 2
-      } else { out.append(c); i += 1 }
-    }
-    out.result()
-  }
-}
-
-/** C4 operational parity: the reference's escalating save-retry policy
-  * (`committing/token_saver.py:58-90`) behind the same `TokenStore`
-  * trait. Attempt n (0-based) runs under a write deadline of
-  * `writeTimeoutMs * (n + 1)` — 5 s / 10 s / 15 s at the defaults
-  * (`settings.py:46-47`); a timeout retries with the longer deadline
-  * until `onTimeoutRetryCount` attempts are spent (then the timeout
-  * propagates); any non-timeout error propagates immediately.
-  *
-  * The deadline context is injected (`withTimeout`) exactly like the
-  * reference leans on pymongo's `timeout(...)` context manager: a real
-  * MongoTokenStore passes it through as maxTimeMS/wTimeoutMS on the
-  * upsert; the default runs the delegate undeadlined (file/in-memory
-  * stores complete locally). Tests inject both seams, mirroring
-  * `tests/test_commit_flow/test_token_saver.py:85-138`.
-  */
-final class RetryingTokenStore(
-    delegate: TokenStore,
-    writeTimeoutMs: Long = 5000L,
-    onTimeoutRetryCount: Int = 3,
-    isTimeout: Throwable => Boolean = RetryingTokenStore.defaultIsTimeout,
-    withTimeout: (Long, () => Unit) => Unit = (_, op) => op())
-  extends TokenStore {
-
-  require(onTimeoutRetryCount >= 1, "onTimeoutRetryCount must be >= 1")
-
-  override def save(t: SavedToken): Unit = {
-    var count = 0
-    var done = false
-    while (!done) {
-      try {
-        withTimeout(writeTimeoutMs * (count + 1), () => delegate.save(t))
-        done = true
-      } catch {
-        case e: Throwable if isTimeout(e) =>
-          count += 1
-          if (count >= onTimeoutRetryCount) throw e
-      }
-    }
-  }
-
-  override def load(name: String): Option[SavedToken] = delegate.load(name)
-}
-
-object RetryingTokenStore {
-  /** The JVM shapes of "the write timed out" (pymongo's
-    * `exc.timeout` discriminator, `token_saver.py:70`).
-    */
-  def defaultIsTimeout(e: Throwable): Boolean = e match {
-    case _: java.util.concurrent.TimeoutException => true
-    case _: java.net.SocketTimeoutException => true
-    case _ => false
-  }
-
-  def fromSettings(delegate: TokenStore, s: Settings): RetryingTokenStore =
-    new RetryingTokenStore(delegate, s.tokenSaveTimeoutMs,
-      s.tokenSaveOnTimeoutRetry)
 }
 
 /** Mirrors the last committed source offset of a named streaming query

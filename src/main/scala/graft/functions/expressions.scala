@@ -46,79 +46,6 @@ case class ByteSumModExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** P4 with exact reference parity: the reference routes each event by
-  * the sum of the documentKey ObjectId's 12 RAW bytes mod N
-  * (`change_stream_reading/change_handler.py:77-81`:
-  * `sum(document_key.binary) % number_of_producers`), not by the
-  * serialized key string. This expression parses the ext-JSON
-  * `{"_id": {"$oid": "24-hex"}}` carried by the connector and sums the
-  * decoded bytes — numerically identical partition assignments to the
-  * reference for ObjectId keys. Non-ObjectId keys (where the
-  * reference itself would crash on `.binary`) fall back to the
-  * whole-string byte sum: still a deterministic function of the key,
-  * preserving per-document ordering.
-  */
-object OidByteSum {
-  /** Sum of the ObjectId's 12 raw bytes, or -1 if the key does not
-    * contain an `"$oid": "<24 hex>"` member.
-    */
-  def oidSum(key: String): Int = {
-    val tag = "\"$oid\""
-    val at = key.indexOf(tag)
-    if (at < 0) return -1
-    var i = at + tag.length
-    while (i < key.length && (key.charAt(i) == ' ' || key.charAt(i) == ':'))
-      i += 1
-    if (i >= key.length || key.charAt(i) != '"') return -1
-    i += 1
-    if (i + 24 > key.length || key.charAt(i + 24) != '"') return -1
-    var sum = 0
-    var j = 0
-    while (j < 12) {
-      val hi = Character.digit(key.charAt(i + 2 * j), 16)
-      val lo = Character.digit(key.charAt(i + 2 * j + 1), 16)
-      if (hi < 0 || lo < 0) return -1
-      sum += (hi << 4) | lo
-      j += 1
-    }
-    sum
-  }
-
-  def eval(key: String, n: Int): Int = {
-    val s = oidSum(key)
-    if (s >= 0) s % n
-    else {
-      val bytes = key.getBytes("UTF-8")
-      var acc = 0L
-      var i = 0
-      while (i < bytes.length) { acc += (bytes(i) & 0xff); i += 1 }
-      (acc % n).toInt
-    }
-  }
-}
-
-case class OidByteSumModExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    OidByteSum.eval(input.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.OidByteSum.eval($c.toString(), $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): OidByteSumModExpr = copy(child = newChild)
-}
-
-object OidByteSumMod {
-  def apply(c: Column, n: Int): Column =
-    toColumn(OidByteSumModExpr(toExpression(c), n))
-}
-
 /** Polynomial rolling-hash document fingerprint:
   * h = fold(h * 31 + byte) mod 1e9+7 over the string's UTF-8 bytes.
   * The modulus keeps every intermediate inside an int64 so the exact

@@ -180,30 +180,6 @@ class EnvelopeTransformSpec extends AnyFunSuite {
     assert(parts.distinct.length === 1)
   }
 
-  test("OidByteSumMod routes by the ObjectId's 12 raw bytes (exact P4 parity)") {
-    import spark.implicits._
-    import graft.functions.{OidByteSum, OidByteSumMod}
-    // reference: sum(document_key.binary) % n over the RAW ObjectId
-    // bytes (change_handler.py:77-81) — compute the expectation from
-    // the hex directly
-    val oidHex = "6692b4a31ede014d28852865"
-    val rawSum = oidHex.grouped(2).map(Integer.parseInt(_, 16)).sum
-    assert(OidByteSum.oidSum(ChangeEvents.docKeyJson) === rawSum)
-    val got = Seq(ChangeEvents.docKeyJson).toDF("key")
-      .select(OidByteSumMod(col("key"), 8)).head().getInt(0)
-    assert(got === rawSum % 8)
-    // the engine's routing column uses it
-    val routed = EnvelopeTransform(ChangeEvents.golden(spark), "test")
-      .select(EnvelopeTransform.byteSumPartition(col("key"), 8))
-      .collect().map(_.getInt(0))
-    assert(routed.toSeq === Seq.fill(4)(rawSum % 8))
-    // non-ObjectId keys fall back to the deterministic string byte-sum
-    val fallback = Seq("""{"_id": "user-42"}""").toDF("key")
-      .select(OidByteSumMod(col("key"), 8),
-        graft.functions.ByteSumMod(col("key"), 8)).head()
-    assert(fallback.getInt(0) === fallback.getInt(1))
-  }
-
   test("ByteSumMod matches a direct byte-sum (codegen + interpreted)") {
     val k = ChangeEvents.docKeyJson
     val expected = k.getBytes("UTF-8").map(_ & 0xff).sum % 2

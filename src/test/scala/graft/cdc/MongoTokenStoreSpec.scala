@@ -2,158 +2,163 @@ package graft.cdc
 
 import java.net.SocketTimeoutException
 import java.sql.Timestamp
+import java.util.concurrent.TimeoutException
 
 import scala.collection.mutable
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the concrete Mongo-backed token store end-to-end through a
-  * driver-shaped fake client, the way the reference tests TokenSaving
-  * against MongoClientMock (`tests/test_commit_flow/test_token_saver
-  * .py:85-138` over `tests/mocks/mongo_client.py:92-144`): upsert
-  * insert-then-replace, unique index creation, load-by-name, and the
-  * escalating 5/10/15 s deadline matrix delivered as per-attempt
+  * driver-shaped fake collection, the way the reference tests
+  * TokenSaving against MongoClientMock (`tests/test_commit_flow/
+  * test_token_saver.py:85-138` over `tests/mocks/mongo_coll.py:92-144`):
+  * upsert insert-then-replace, unique index creation, load-by-name, and
+  * the escalating 5/10/15 s deadline matrix delivered as per-attempt
   * maxTimeMS.
   */
 class MongoTokenStoreSpec extends AnyFunSuite {
 
-  /** In-memory fake of the driver seam. `failTimes` injects that many
-    * leading timeout failures into replaceOne (recording the attempt's
-    * maxTimeMs first, like a server that accepted the write deadline
-    * and then exceeded it); `failWith` overrides the thrown error.
+  /** In-memory fake of the collection seam. `failTimes` injects that
+    * many leading timeout failures into replaceOne (recording the
+    * attempt's maxTimeMs first, like a server that accepted the write
+    * deadline and then exceeded it); `failWith` overrides the thrown
+    * error.
     */
-  final class FakeClient(
+  final class FakeCollection(
       failTimes: Int = 0,
       failWith: => Throwable = new SocketTimeoutException("fake timeout"))
-    extends mongo.MongoClientLike {
+    extends MongoCollectionLike {
 
     val docs = mutable.Map.empty[String, Map[String, Any]]
-    val maxTimes = mutable.Buffer.empty[Option[Long]]
+    val maxTimes = mutable.Buffer.empty[Long]
     val indexes = mutable.Buffer.empty[(String, String, Boolean)]
     var serverInfoCalls = 0
     var closed = false
     private var remainingFailures = failTimes
 
-    private object Coll extends mongo.MongoCollectionLike {
-      override def createIndex(
-          key: String, indexName: String, unique: Boolean): Unit =
-        indexes += ((key, indexName, unique))
-
-      override def findOne(
-          filter: Map[String, Any]): Option[Map[String, Any]] =
-        docs.get(filter(MongoTokenStore.FieldName).asInstanceOf[String])
-
-      override def replaceOne(
-          filter: Map[String, Any],
-          replacement: Map[String, Any],
-          upsert: Boolean,
-          maxTimeMs: Option[Long]): Unit = {
-        maxTimes += maxTimeMs
-        if (remainingFailures > 0) {
-          remainingFailures -= 1
-          throw failWith
-        }
-        val name = filter(MongoTokenStore.FieldName).asInstanceOf[String]
-        // mirror the mock's upsert branch (mongo_client.py:132-143):
-        // upsert inserts-or-replaces; plain replace only replaces
-        if (upsert || docs.contains(name)) docs(name) = replacement
-      }
-    }
-
-    private object Db extends mongo.MongoDatabaseLike {
-      override def getCollection(name: String): mongo.MongoCollectionLike =
-        Coll
-    }
-
     override def serverInfo(): Map[String, Any] = {
       serverInfoCalls += 1
       Map("version" -> "7.0.9")
     }
-    override def getDatabase(name: String): mongo.MongoDatabaseLike = Db
+
+    override def createIndex(
+        key: String, indexName: String, unique: Boolean): Unit =
+      indexes += ((key, indexName, unique))
+
+    override def findOne(
+        filter: Map[String, Any]): Option[Map[String, Any]] =
+      docs.get(filter(MongoTokenStore.FieldName).asInstanceOf[String])
+
+    override def replaceOne(
+        filter: Map[String, Any],
+        replacement: Map[String, Any],
+        upsert: Boolean,
+        maxTimeMs: Long): Unit = {
+      maxTimes += maxTimeMs
+      if (remainingFailures > 0) {
+        remainingFailures -= 1
+        throw failWith
+      }
+      val name = filter(MongoTokenStore.FieldName).asInstanceOf[String]
+      // mirror the mock's upsert branch (mongo_coll.py:132-143):
+      // upsert inserts-or-replaces; plain replace only replaces
+      if (upsert || docs.contains(name)) docs(name) = replacement
+    }
+
     override def close(): Unit = closed = true
   }
 
   private val t0 = new Timestamp(1720890718473L)
 
   test("start connects and creates the unique reader-name index") {
-    val client = new FakeClient()
-    val store = new MongoTokenStore(client, "tokens", "SavedToken")
+    val coll = new FakeCollection()
+    val store = new MongoTokenStore(coll)
     store.start()
-    assert(client.serverInfoCalls === 1)
-    assert(client.indexes.toSeq ===
+    assert(coll.serverInfoCalls === 1)
+    assert(coll.indexes.toSeq ===
       Seq(("stream_reader_name", "stream_reader_name", true)))
     store.stop()
-    assert(client.closed)
+    assert(coll.closed)
   }
 
   test("save upserts and load round-trips, token as bytes") {
-    val client = new FakeClient()
-    val store = new MongoTokenStore(client, "tokens", "SavedToken")
+    val coll = new FakeCollection()
+    val store = new MongoTokenStore(coll)
     store.save(SavedToken("r1", ChangeEvents.tokenInsert, t0))
     // stored shape matches the reference document
     // (token_saver.py:50-56): name + binary token + date
-    val doc = client.docs("r1")
+    val doc = coll.docs("r1")
     assert(doc("stream_reader_name") === "r1")
     assert(doc("token").asInstanceOf[Array[Byte]] !== null)
     assert(store.load("r1") ===
       Some(SavedToken("r1", ChangeEvents.tokenInsert, t0)))
     // second save replaces, not duplicates
     store.save(SavedToken("r1", "tok2", t0))
-    assert(client.docs.size === 1)
+    assert(coll.docs.size === 1)
     assert(store.load("r1").get.token === "tok2")
   }
 
   test("load of an unknown reader name is None") {
-    val store = new MongoTokenStore(new FakeClient(), "tokens", "SavedToken")
+    val store = new MongoTokenStore(new FakeCollection())
     assert(store.load("nope").isEmpty)
   }
 
   test("escalating deadlines reach the server as maxTimeMS 5s/10s/15s") {
     // two injected timeouts, third attempt lands — the reference's
     // retry matrix (test_token_saver.py:85-138) with write_timeout=5.0
-    val client = new FakeClient(failTimes = 2)
-    val (_, retrying) =
-      MongoTokenStore.retrying(client, "tokens", "SavedToken")
-    retrying.save(SavedToken("r1", "tok", t0))
-    assert(client.maxTimes.toSeq ===
-      Seq(Some(5000L), Some(10000L), Some(15000L)))
-    assert(client.docs.contains("r1"))
+    val coll = new FakeCollection(failTimes = 2)
+    val store = new MongoTokenStore(coll)
+    store.save(SavedToken("r1", "tok", t0))
+    assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
+    assert(coll.docs.contains("r1"))
   }
 
   test("retry count exhausted: timeout propagates after 3 attempts") {
-    val client = new FakeClient(failTimes = 3)
-    val (_, retrying) =
-      MongoTokenStore.retrying(client, "tokens", "SavedToken")
+    val coll = new FakeCollection(failTimes = Int.MaxValue)
+    val store = new MongoTokenStore(coll)
     intercept[SocketTimeoutException] {
-      retrying.save(SavedToken("r1", "tok", t0))
+      store.save(SavedToken("r1", "tok", t0))
     }
-    assert(client.maxTimes.size === 3)
-    assert(!client.docs.contains("r1"))
+    assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
+    assert(!coll.docs.contains("r1"))
+    // both knobs are constructor parameters
+    val coll2 = new FakeCollection(failTimes = Int.MaxValue)
+    intercept[SocketTimeoutException] {
+      new MongoTokenStore(coll2, writeTimeoutMs = 100L,
+        onTimeoutRetryCount = 2).save(SavedToken("r1", "tok", t0))
+    }
+    assert(coll2.maxTimes.toSeq === Seq(100L, 200L))
   }
 
   test("non-timeout error propagates immediately, no retry") {
-    val client = new FakeClient(
+    val coll = new FakeCollection(
       failTimes = 1, failWith = new RuntimeException("not a timeout"))
-    val (_, retrying) =
-      MongoTokenStore.retrying(client, "tokens", "SavedToken")
-    intercept[RuntimeException] {
-      retrying.save(SavedToken("r1", "tok", t0))
+    val store = new MongoTokenStore(coll)
+    val e = intercept[RuntimeException] {
+      store.save(SavedToken("r1", "tok", t0))
     }
-    assert(client.maxTimes.size === 1)
+    assert(e.getMessage === "not a timeout")
+    assert(coll.maxTimes.toSeq === Seq(5000L))
   }
 
-  test("direct save outside withDeadline carries no maxTimeMS") {
-    val client = new FakeClient()
-    val store = new MongoTokenStore(client, "tokens", "SavedToken")
-    store.save(SavedToken("r1", "tok", t0))
-    assert(client.maxTimes.toSeq === Seq(None))
-  }
-
-  test("deadline is scoped: cleared after withDeadline returns") {
-    val client = new FakeClient()
-    val store = new MongoTokenStore(client, "tokens", "SavedToken")
-    store.withDeadline(1234L, () => store.save(SavedToken("r1", "a", t0)))
+  test("every save carries the first attempt's deadline") {
+    val coll = new FakeCollection()
+    val store = new MongoTokenStore(coll, writeTimeoutMs = 1234L)
+    store.save(SavedToken("r1", "a", t0))
     store.save(SavedToken("r1", "b", t0))
-    assert(client.maxTimes.toSeq === Seq(Some(1234L), None))
+    assert(coll.maxTimes.toSeq === Seq(1234L, 1234L))
+  }
+
+  test("a timeout is recognised by its type or a cause, and retried") {
+    for (err <- Seq[() => Throwable](
+        () => new SocketTimeoutException("socket"),
+        () => new TimeoutException("deadline"),
+        () => new RuntimeException("driver read timeout",
+          new SocketTimeoutException("socket")))) {
+      val coll = new FakeCollection(failTimes = 1, failWith = err())
+      new MongoTokenStore(coll).save(SavedToken("r1", "tok", t0))
+      assert(coll.maxTimes.toSeq === Seq(5000L, 10000L), err().toString)
+      assert(coll.docs.contains("r1"))
+    }
   }
 }
