@@ -4,8 +4,6 @@ import java.net.SocketTimeoutException
 import java.sql.Timestamp
 import java.util.concurrent.TimeoutException
 
-import scala.collection.mutable
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the concrete Mongo-backed token store end-to-end through a
@@ -18,60 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MongoTokenStoreSpec extends AnyFunSuite {
 
-  /** In-memory fake of the collection seam. `failTimes` injects that
-    * many leading timeout failures into replaceOne (recording the
-    * attempt's maxTimeMs first, like a server that accepted the write
-    * deadline and then exceeded it); `failWith` overrides the thrown
-    * error.
-    */
-  final class FakeCollection(
-      failTimes: Int = 0,
-      failWith: => Throwable = new SocketTimeoutException("fake timeout"))
-    extends MongoCollectionLike {
-
-    val docs = mutable.Map.empty[String, Map[String, Any]]
-    val maxTimes = mutable.Buffer.empty[Long]
-    val indexes = mutable.Buffer.empty[(String, String, Boolean)]
-    var serverInfoCalls = 0
-    var closed = false
-    private var remainingFailures = failTimes
-
-    override def serverInfo(): Map[String, Any] = {
-      serverInfoCalls += 1
-      Map("version" -> "7.0.9")
-    }
-
-    override def createIndex(
-        key: String, indexName: String, unique: Boolean): Unit =
-      indexes += ((key, indexName, unique))
-
-    override def findOne(
-        filter: Map[String, Any]): Option[Map[String, Any]] =
-      docs.get(filter(MongoTokenStore.FieldName).asInstanceOf[String])
-
-    override def replaceOne(
-        filter: Map[String, Any],
-        replacement: Map[String, Any],
-        upsert: Boolean,
-        maxTimeMs: Long): Unit = {
-      maxTimes += maxTimeMs
-      if (remainingFailures > 0) {
-        remainingFailures -= 1
-        throw failWith
-      }
-      val name = filter(MongoTokenStore.FieldName).asInstanceOf[String]
-      // mirror the mock's upsert branch (mongo_coll.py:132-143):
-      // upsert inserts-or-replaces; plain replace only replaces
-      if (upsert || docs.contains(name)) docs(name) = replacement
-    }
-
-    override def close(): Unit = closed = true
-  }
-
   private val t0 = new Timestamp(1720890718473L)
 
   test("start connects and creates the unique reader-name index") {
-    val coll = new FakeCollection()
+    val coll = new FakeMongoCollection()
     val store = new MongoTokenStore(coll)
     store.start()
     assert(coll.serverInfoCalls === 1)
@@ -82,7 +30,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
   }
 
   test("save upserts and load round-trips, token as bytes") {
-    val coll = new FakeCollection()
+    val coll = new FakeMongoCollection()
     val store = new MongoTokenStore(coll)
     store.save(SavedToken("r1", ChangeEvents.tokenInsert, t0))
     // stored shape matches the reference document
@@ -99,14 +47,14 @@ class MongoTokenStoreSpec extends AnyFunSuite {
   }
 
   test("load of an unknown reader name is None") {
-    val store = new MongoTokenStore(new FakeCollection())
+    val store = new MongoTokenStore(new FakeMongoCollection())
     assert(store.load("nope").isEmpty)
   }
 
   test("escalating deadlines reach the server as maxTimeMS 5s/10s/15s") {
     // two injected timeouts, third attempt lands — the reference's
     // retry matrix (test_token_saver.py:85-138) with write_timeout=5.0
-    val coll = new FakeCollection(failTimes = 2)
+    val coll = new FakeMongoCollection(failTimes = 2)
     val store = new MongoTokenStore(coll)
     store.save(SavedToken("r1", "tok", t0))
     assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
@@ -114,7 +62,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
   }
 
   test("retry count exhausted: timeout propagates after 3 attempts") {
-    val coll = new FakeCollection(failTimes = Int.MaxValue)
+    val coll = new FakeMongoCollection(failTimes = Int.MaxValue)
     val store = new MongoTokenStore(coll)
     intercept[SocketTimeoutException] {
       store.save(SavedToken("r1", "tok", t0))
@@ -122,7 +70,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
     assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
     assert(!coll.docs.contains("r1"))
     // both knobs are constructor parameters
-    val coll2 = new FakeCollection(failTimes = Int.MaxValue)
+    val coll2 = new FakeMongoCollection(failTimes = Int.MaxValue)
     intercept[SocketTimeoutException] {
       new MongoTokenStore(coll2, writeTimeoutMs = 100L,
         onTimeoutRetryCount = 2).save(SavedToken("r1", "tok", t0))
@@ -131,7 +79,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
   }
 
   test("non-timeout error propagates immediately, no retry") {
-    val coll = new FakeCollection(
+    val coll = new FakeMongoCollection(
       failTimes = 1, failWith = new RuntimeException("not a timeout"))
     val store = new MongoTokenStore(coll)
     val e = intercept[RuntimeException] {
@@ -142,7 +90,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
   }
 
   test("every save carries the first attempt's deadline") {
-    val coll = new FakeCollection()
+    val coll = new FakeMongoCollection()
     val store = new MongoTokenStore(coll, writeTimeoutMs = 1234L)
     store.save(SavedToken("r1", "a", t0))
     store.save(SavedToken("r1", "b", t0))
@@ -155,7 +103,7 @@ class MongoTokenStoreSpec extends AnyFunSuite {
         () => new TimeoutException("deadline"),
         () => new RuntimeException("driver read timeout",
           new SocketTimeoutException("socket")))) {
-      val coll = new FakeCollection(failTimes = 1, failWith = err())
+      val coll = new FakeMongoCollection(failTimes = 1, failWith = err())
       new MongoTokenStore(coll).save(SavedToken("r1", "tok", t0))
       assert(coll.maxTimes.toSeq === Seq(5000L, 10000L), err().toString)
       assert(coll.docs.contains("r1"))

@@ -6,9 +6,10 @@ import java.util.concurrent.TimeoutException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** C4 retry parity — mirrors the reference's token-saver matrix
-  * (`tests/test_commit_flow/test_token_saver.py:85-138`): non-timeout
-  * errors propagate on the first attempt; persistent timeouts exhaust
-  * exactly `onTimeoutRetryCount` attempts with escalating deadlines
+  * (`tests/test_commit_flow/test_token_saver.py:85-138`) against the
+  * retry inside `MongoTokenStore.save`: non-timeout errors propagate on
+  * the first attempt; persistent timeouts exhaust exactly
+  * `onTimeoutRetryCount` attempts with escalating deadlines
   * (write_timeout × (attempt+1), `token_saver.py:84-90`) and then
   * rethrow; a timeout followed by success stops retrying.
   */
@@ -17,76 +18,29 @@ class RetryingTokenStoreSpec extends AnyFunSuite {
   private val token =
     SavedToken("test-stream-reader-name", "tok", new Timestamp(1720890531823L))
 
-  /** Scriptable delegate + deadline recorder: `failures` attempts
-    * throw `err`, later attempts succeed. Deadlines observed through
-    * the injected withTimeout seam (the pymongo `timeout(...)` analog).
-    */
-  private class Fixture(failures: Int, err: => Throwable) {
-    var saves = 0
-    var loads = 0
-    val deadlines = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val delegate: TokenStore = new TokenStore {
-      override def save(t: SavedToken): Unit = {
-        saves += 1
-        if (saves <= failures) throw err
-      }
-      override def load(name: String): Option[SavedToken] = {
-        loads += 1
-        Some(token)
-      }
-    }
-    val store = new RetryingTokenStore(delegate,
-      writeTimeoutMs = 5000L, onTimeoutRetryCount = 3,
-      withTimeout = (ms, op) => { deadlines += ms; op() })
-  }
-
   test("non-timeout error propagates immediately after one attempt") {
-    val f = new Fixture(Int.MaxValue, new RuntimeException("not a timeout"))
-    val e = intercept[RuntimeException](f.store.save(token))
+    val coll = new FakeMongoCollection(
+      failTimes = Int.MaxValue, failWith = new RuntimeException("not a timeout"))
+    val e = intercept[RuntimeException](new MongoTokenStore(coll).save(token))
     assert(e.getMessage === "not a timeout")
-    assert(f.saves === 1)
-    assert(f.deadlines.toSeq === Seq(5000L))
+    assert(coll.maxTimes.toSeq === Seq(5000L))
+    assert(coll.docs.isEmpty)
   }
 
   test("persistent timeout: exactly 3 attempts at 5s/10s/15s, then rethrows") {
-    val f = new Fixture(Int.MaxValue, new TimeoutException("slow mongo"))
-    intercept[TimeoutException](f.store.save(token))
-    assert(f.saves === 3)
-    assert(f.deadlines.toSeq === Seq(5000L, 10000L, 15000L))
+    val coll = new FakeMongoCollection(
+      failTimes = Int.MaxValue, failWith = new TimeoutException("slow mongo"))
+    intercept[TimeoutException](new MongoTokenStore(coll).save(token))
+    assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
+    assert(coll.docs.isEmpty)
   }
 
   test("timeout then success: saved on the second try, no further attempts") {
-    val f = new Fixture(1, new TimeoutException("slow once"))
-    f.store.save(token)
-    assert(f.saves === 2)
-    assert(f.deadlines.toSeq === Seq(5000L, 10000L))
-  }
-
-  test("SocketTimeoutException counts as a timeout too") {
-    val f = new Fixture(1, new java.net.SocketTimeoutException("net"))
-    f.store.save(token)
-    assert(f.saves === 2)
-  }
-
-  test("load passes through to the delegate") {
-    val f = new Fixture(0, new RuntimeException)
-    assert(f.store.load("any") === Some(token))
-    assert(f.loads === 1)
-  }
-
-  test("fromSettings threads the settings fields (settings.py:46-47 parity)") {
-    var saves = 0
-    val delegate: TokenStore = new TokenStore {
-      override def save(t: SavedToken): Unit = {
-        saves += 1
-        throw new TimeoutException("always")
-      }
-      override def load(name: String): Option[SavedToken] = None
-    }
-    val s = Settings(checkpointLocation = "/tmp/x",
-      tokenSaveTimeoutMs = 100L, tokenSaveOnTimeoutRetry = 2)
-    val store = RetryingTokenStore.fromSettings(delegate, s)
-    intercept[TimeoutException](store.save(token))
-    assert(saves === 2)
+    val coll = new FakeMongoCollection(
+      failTimes = 1, failWith = new TimeoutException("slow once"))
+    val store = new MongoTokenStore(coll)
+    store.save(token)
+    assert(coll.maxTimes.toSeq === Seq(5000L, 10000L))
+    assert(store.load(token.streamReaderName) === Some(token))
   }
 }
