@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-query expected seconds: the committed calm bench artifact's
-  * value ([[Bench.committedQueryTimes]]); a name the artifact lacks
+  * value ([[Bench.committedBaseline]]); a name the artifact lacks
   * gets `default`. NOT used to report results — only to (a) tier each
   * query's watchdog cap, (b) order sweep 0 cheapest-first and (c)
   * decide when a sample is calm enough that later sweeps should spend
@@ -55,7 +55,9 @@ object BenchExpect {
   *    ([[BenchExpect.pending]]), respending the budget where it's
   *    needed; once all queries are calm, full refinement sweeps
   *    continue until ≥3 sweeps ran;
-  *  - the reported number is the per-query min over uncapped samples.
+  *  - the reported number is the per-query min over uncapped samples;
+  *  - each query's [[Cost]] counters, taken from its first uncapped
+  *    sample, do not depend on host load at all.
   */
 object Bench {
 
@@ -83,11 +85,9 @@ object Bench {
 
   /** An artifact is a usable CALM baseline when every contention
     * self-description field is empty (absent counts as empty).
-    * `requalified` non-empty means the run WAS contended and its
-    * flagged queries converged only to within 2× of the previous
-    * baseline — treating such an artifact as the calm baseline would
-    * let thresholds compound ×2 per generation; pre-r12 artifacts
-    * lack the field and are unaffected.
+    * `requalified` non-empty means the run WAS contended: some queries
+    * read as outliers in sweep 0 and only a later sweep cleared them;
+    * pre-r12 artifacts lack the field and are unaffected.
     */
   private[graft] def isCalmArtifact(bytes: Array[Byte]): Boolean =
     try {
@@ -135,31 +135,14 @@ object Bench {
     }
   }
 
-  /** Per-query values from the committed `bench_out.json` (the
-    * previous round's final calm run, via [[committedBytes]] — git
-    * HEAD first, never this run's own working-tree output). Feeds the
-    * `outliers` self-description: a query whose sample exceeds ~2× its
-    * committed calm value is flagged in the artifact, so a contended
-    * run is machine-readably suspect instead of demanding a human diff
-    * against the committed file (the r7-r9 ritual). Empty map when no
-    * baseline is readable — first run on a fresh checkout flags
+  /** The committed calm artifact's per-query seconds and top-level
+    * numeric fields (the throughput figures), from ONE
+    * [[committedBytes]] read (a `git log` plus up to [[CalmWalkDepth]]
+    * `git show`s) and one parse — git first, never this run's own
+    * working-tree output. They feed `outliers` and `slow_figures`, so a
+    * contended run is machine-readably suspect. Both are empty when no
+    * baseline is readable: a first run on a fresh checkout flags
     * nothing.
-    */
-  private[graft] def committedQueryTimes(
-      path: String = "bench_out.json"): Map[String, Double] =
-    committedBaseline(path)._1
-
-  /** Top-level numeric fields of the committed artifact (the
-    * throughput figures) — the [[committedQueryTimes]] companion.
-    */
-  private[graft] def committedFigures(
-      path: String = "bench_out.json"): Map[String, Double] =
-    committedBaseline(path)._2
-
-  /** Both committed maps — per-query seconds and top-level figures —
-    * from ONE [[committedBytes]] read (a `git log` plus up to
-    * [[CalmWalkDepth]] `git show`s) and one parse. Both are empty when
-    * no baseline is readable.
     */
   private[graft] def committedBaseline(path: String = "bench_out.json")
       : (Map[String, Double], Map[String, Double]) = {
@@ -192,46 +175,18 @@ object Bench {
   private[graft] def isOutlier(sec: Double, committed: Double): Boolean =
     committed > 0 && sec > 2.0 * committed + 0.3
 
-  /** Extra best-of-N passes a provisionally-flagged outlier gets
-    * before the artifact emits ([[requalify]]).
+  /** The queries whose sweep-0 sample read as an outlier and whose
+    * best sample no longer does: a raised flag that a later sweep of
+    * the [[BenchExpect.pending]] loop cleared. A flag no sweep cleared
+    * stays in `outliers`; a calm sweep 0 clears nothing.
     */
-  private[graft] val RequalPasses = 3
-
-  /** Wall seconds per slow-figure requalification round (the
-    * streaming-side re-measures run under a fresh WallBudget of this
-    * size; ≤ 2 rounds, so the extra spend is bounded at ~2× this).
-    */
-  private[graft] val FigureRequalBudgetSec = 120L
-
-  /** Requalification of provisional outliers (r12, after r11 verdict
-    * #1): every driver bench capture to date ran CONTENDED and flagged
-    * 8-9 outliers that a later calm run cleared — each one costing the
-    * next round a manual calm-confirm ritual. So after the normal
-    * sweeps, each query whose best sample still reads as an outlier
-    * gets up to `passes` extra samples (`sample` min-merges into the
-    * caller's best-tracking; `current` reads it back), stopping early
-    * the moment a calm-consistent sample lands. Returns the REQUALIFIED
-    * subset — queries the extra passes cleared; the survivors stay in
-    * `outliers`. A transient burst between sweeps clears here; a
-    * sustained contention window still names itself, because the extra
-    * passes are exactly as contended as the sweeps were. Wall bound by
-    * construction: ≤ passes × the query's tiered watchdog cap per
-    * flagged query (outlier count × O(committed calm) — never the
-    * whole budget), and a calm run spends ZERO extra samples (empty
-    * provisional set). Modeled on the envelope pair's
-    * re-measure-on-disagreement loop.
-    */
-  private[graft] def requalify(provisional: Seq[String],
-      committed: Map[String, Double],
-      current: String => Option[Double],
-      sample: String => Unit,
-      passes: Int = RequalPasses): Seq[String] =
-    provisional.filter { n =>
-      def still = current(n).exists(v => isOutlier(v, committed(n)))
-      var p = 0
-      while (p < passes && still) { sample(n); p += 1 }
-      !still
-    }
+  private[graft] def requalified(names: Seq[String],
+      committed: Map[String, Double], sweep0: String => Option[Double],
+      best: String => Option[Double]): Seq[String] = {
+    def flagged(n: String, v: Option[Double]) =
+      v.exists(sec => committed.get(n).exists(isOutlier(sec, _)))
+    names.filter(n => flagged(n, sweep0(n)) && !flagged(n, best(n)))
+  }
 
   /** A throughput figure is suspect when it lands below TWO-THIRDS
     * of its committed calm value. Closes the blind spot the
@@ -263,8 +218,7 @@ object Bench {
     * witness). [[BatchHighRatio]] sizing: observed CALM ratios span
     * 1.02 (r11: 281.1k/274.4k) to 1.37 (r10: 334,989/245,700), so a
     * 1.5 band left only ~10% headroom over the calm maximum and
-    * ordinary drift could trip the disagreement loop, burn up to 3
-    * streaming re-measures, and stamp a false `agreed:false` on a
+    * ordinary drift could stamp a false `agreed:false` on a
     * genuinely calm run; the observed CONTENTION signature (the
     * 16-hog validation run) sits at ≥1.65×. 1.6 is the gap between
     * the two populations — ~17% above the calm maximum, strictly
@@ -279,11 +233,47 @@ object Bench {
       batch.toDouble * BatchLowSlack >= stream &&
       batch.toDouble <= stream.toDouble * BatchHighRatio
 
+  /** One run's artifact: `bench_out.json` ([[line]]) and the trailing
+    * stdout [[summary]]. Pure rendering of what the run measured.
+    */
+  private[graft] final case class Artifact(
+      queries: Seq[(String, Double)], capped: Seq[String],
+      outliers: Seq[(String, Double, Double)], requalified: Seq[String],
+      slowFigures: Seq[(String, Long, Long)], sweeps: Int,
+      stageBuildSec: Double, stageBuild: Seq[(String, Double)], staged: Seq[String],
+      envelope: Long, batchStreamAgreed: Boolean,
+      streamEnvelope: Long, streamEnvelopeRocks: Long, streamAgreed: Boolean,
+      snapshot: Long, snapshotRocks: Long,
+      cost: Seq[(String, Cost.Counters)], sf: String) {
+    private def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    private def obj(kv: Seq[(String, Any)]) =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    /** Failed queries (-1) count nothing. */
+    def total: Double = queries.map(_._2).filter(_ >= 0).sum
+
+    def line: String = {
+      val outs = outliers.map { case (n, v, c) =>
+        s"""{"query":"$n","sec":$v,"committed":$c}""" }.mkString("[", ",", "]")
+      val slow = slowFigures.map { case (f, v, c) =>
+        s"""{"figure":"$f","value":$v,"committed":$c}""" }.mkString("[", ",", "]")
+      val costs = obj(cost.map { case (n, c) => n -> c.json })
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(queries)},"capped":${arr(capped)},"outliers":$outs,"requalified":${arr(requalified)},"slow_figures":$slow,"sweeps":$sweeps,"stage_build_sec":$stageBuildSec,"stage_build":${obj(stageBuild)},"staged":${arr(staged)},"envelope_events_per_sec":$envelope,"batch_stream_envelope_agreed":$batchStreamAgreed,"streaming_envelope_events_per_sec":$streamEnvelope,"streaming_envelope_events_per_sec_rocksdb":$streamEnvelopeRocks,"streaming_envelope_agreed":$streamAgreed,"streaming_snapshot_events_per_sec":$snapshot,"streaming_snapshot_events_per_sec_rocksdb":$snapshotRocks,"cost":$costs,"sf":"$sf"}"""
+    }
+
+    /** The verdict flags (names only), printed LAST: a capture that
+      * keeps only stdout's tail (BENCH_r10's started mid-artifact)
+      * would otherwise lose the flags near the line's start.
+      */
+    def summary: String =
+      s"""{"summary":{"total":$total,"sweeps":$sweeps,"capped":${arr(capped)},"outliers":${arr(outliers.map(_._1))},"requalified":${arr(requalified)},"slow_figures":${arr(slowFigures.map(_._1))},"batch_stream_envelope_agreed":$batchStreamAgreed,"streaming_envelope_agreed":$streamAgreed}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cost = Cost.attach(spark)
 
     val (committed, committedFigs) = committedBaseline()
 
@@ -295,8 +285,10 @@ object Bench {
     // bound, not a timing — so they must never masquerade as measured).
     val best = collection.mutable.Map.empty[String, Double]
     val attempted = collection.mutable.Set.empty[String]
+    val costs = collection.mutable.Map.empty[String, Cost.Counters]
 
-    def run(name: String, capOverride: Long = 0L): Unit = {
+    /** Seconds of an uncapped sample; None when capped or failed. */
+    def run(name: String, capOverride: Long = 0L): Option[Double] = {
       // isolate queries: drop caches/broadcasts from earlier queries
       // so measurements don't depend on run order or GC debt
       spark.catalog.clearCache()
@@ -305,7 +297,7 @@ object Bench {
       val group = s"bench-$name-${System.nanoTime()}"
       val sc = spark.sparkContext
       sc.setJobGroup(group, name, interruptOnCancel = true)
-      try Drive.withWatchdog(cap)(sc.cancelJobGroup(group)) { capped =>
+      val sample = try Drive.withWatchdog(cap)(sc.cancelJobGroup(group)) { capped =>
         val t0 = System.nanoTime()
         try {
           SparkEntry.queries(name)(spark, sfDir)
@@ -313,14 +305,20 @@ object Bench {
           val sec = (System.nanoTime() - t0) / 1e9
           attempted += name
           if (sec < best.getOrElse(name, Double.MaxValue)) best(name) = sec
+          Some(sec)
         } catch {
           case _: Throwable if capped() =>
             attempted += name
             System.err.println(s"[bench] $name capped at ${cap}s (contention)")
+            None
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            None
         }
       } finally sc.clearJobGroup()
+      val counters = cost.take(group).map(_.counters)
+      if (sample.isDefined && !costs.contains(name)) counters.foreach(costs(name) = _)
+      sample
     }
 
     // Warm the JVM/codegen once on the cheapest query so the first
@@ -377,7 +375,7 @@ object Bench {
     preStage("mm_dedup")
     val stageBuildSec = (System.nanoTime() - tStage) / 1e9
     val stagedNames = graft.queries.StagedIndex.stagedNames(spark, sfDir)
-    best.clear(); attempted.clear()
+    best.clear(); attempted.clear(); costs.clear()
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "450").toLong
@@ -393,6 +391,7 @@ object Bench {
     def elapsedSec = (System.nanoTime() - tStart) / 1e9
     val maxSweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "99").toInt
 
+    val sweep0 = collection.mutable.Map.empty[String, Double]
     var sweep = 0
     var lastSweepRan = true // a sweep that ran zero queries ends the loop
     def pending = BenchExpect.pending(names, committed, best.get)
@@ -414,7 +413,9 @@ object Bench {
         // sweeps skip a query when its cap no longer fits the budget
         if (sweep == 0 ||
             elapsedSec + capSec(n) <= sweepBudget) {
-          run(n); ran += 1
+          val sec = run(n)
+          if (sweep == 0) sec.foreach(sweep0(n) = _)
+          ran += 1
         }
       }
       // When the remaining budget fits none of the pending queries'
@@ -426,172 +427,72 @@ object Bench {
 
     // The envelope measured on the actual streaming runtime (replay
     // source → EnvelopeTransform → noop streaming sink), under both
-    // state-store providers. The envelope is stateless, so the two
-    // must agree — ENFORCED by envelopeFigurePair (the lower side
-    // re-measures on >1.5× disagreement; the r8 artifact shipped a
-    // contention-corrupted 82k sample because the invariant was only
-    // reported, not acted on). Plus the state-store-BOUND figure: the
-    // StreamingSnapshot keyed upsert, where RocksDB vs default heap
-    // is a real cost difference. The whole block runs under a
-    // wall-clock budget = what remains of the total (floor 90 s):
-    // passes skip when it exhausts.
+    // state-store providers; the envelope is stateless, so the pair
+    // must agree (`streaming_envelope_agreed`). Plus the
+    // state-store-BOUND figure: the StreamingSnapshot keyed upsert,
+    // where RocksDB vs default heap is a real cost difference. The
+    // whole block runs under a wall-clock budget = what remains of the
+    // total (floor 90 s): passes skip when it exhausts. Every flag
+    // below is computed once from the samples taken.
     val streamBudget = new BenchStreaming.WallBudget(
       math.max(90L, budgetSec - elapsedSec.toLong))
-    var (streamEps, streamEpsRocks, streamAgreed) =
+    val (streamEps, streamEpsRocks, streamAgreed) =
       BenchStreaming.envelopeFigurePair(spark, budget = streamBudget)
     // Reference-comparable headline: events/s through the CDC envelope
     // path (filter + envelope + routing — the reference's whole data
     // plane, `change_handler.py` + `change_event_handler.py`), derived
-    // from the batch p1_cdc_envelope sample. Paired with the streaming
-    // stateless figure under the same re-measure-on-disagreement
-    // discipline the streaming pair gets ([[batchStreamAgree]]): the
-    // r9 driver artifact shipped a 184.8k batch figure against a
-    // 246.9k pair-verified streaming figure — the batch side had no
-    // retry path, so ONE contended p1 sample became the headline.
-    // Re-measuring p1 costs ~0.5 s calm; re-measuring the streaming
-    // side re-runs the (still pair-enforced) envelopeFigurePair. Both
-    // re-measures below, and the slow-figure rounds after them, go
-    // through these two helpers.
+    // from the batch p1_cdc_envelope sample and checked against the
+    // streaming stateless figure ([[batchStreamAgree]]).
     val nEvents = Tables.events(spark, sfDir).count()
-    def batchEnvelopeEps: Long =
-      best.get("p1_cdc_envelope").filter(_ > 0)
-        .map(sec => (nEvents / sec).round).getOrElse(-1L)
-    var eventsPerSec = batchEnvelopeEps
-    def remeasureBatchEnvelope(): Unit = {
-      run("p1_cdc_envelope") // min-tracked: only a calmer sample lands
-      eventsPerSec = batchEnvelopeEps
-    }
-    def remeasureStreamEnvelope(budget: BenchStreaming.WallBudget): Unit = {
-      val (d2, r2, a2) = BenchStreaming.envelopeFigurePair(spark, budget = budget)
-      streamEps = math.max(streamEps, d2)
-      streamEpsRocks = math.max(streamEpsRocks, r2)
-      streamAgreed = streamAgreed || a2
-    }
-    def streamRef = math.max(streamEps, streamEpsRocks)
-    var envRetries = 0
-    while (envRetries < 3 && !streamBudget.exhausted &&
-        !batchStreamAgree(eventsPerSec, streamRef)) {
-      System.err.println(s"[bench] batch vs streaming envelope disagree " +
-        s"($eventsPerSec vs $streamRef ev/s) — re-measuring the suspect side")
-      if (eventsPerSec <= 0 || eventsPerSec * BatchLowSlack < streamRef)
-        remeasureBatchEnvelope()
-      else remeasureStreamEnvelope(streamBudget)
-      envRetries += 1
-    }
-    if (!batchStreamAgree(eventsPerSec, streamRef))
-      System.err.println(s"[bench] batch vs streaming envelope STILL " +
-        s"disagree after $envRetries re-measures ($eventsPerSec vs " +
-        s"$streamRef ev/s) — sustained contention window; treat the " +
-        "lower figure as corrupted")
-    var snapEps =
-      BenchStreaming.snapshotEventsPerSecDefault(spark, streamBudget)
-    var snapEpsRocks =
-      BenchStreaming.snapshotEventsPerSecRocksDb(spark, streamBudget)
+    val eventsPerSec = best.get("p1_cdc_envelope").filter(_ > 0)
+      .map(sec => (nEvents / sec).round).getOrElse(-1L)
+    val snapEps = BenchStreaming.snapshotFigure(spark, None, streamBudget)
+    val snapEpsRocks =
+      BenchStreaming.snapshotFigure(spark, Some(Drive.RocksDb), streamBudget)
 
-    // Requalification ([[requalify]]): re-measure ONLY the queries
-    // whose best sample still reads as an outlier, min-merging into
-    // `best`, and record the cleared names as `requalified` so a
-    // cleared flag stays visible in the artifact. Runs LAST (after
-    // the streaming block) so it never eats the streaming reserve; a
-    // calm run has an empty provisional set and spends nothing here.
-    val provisionalOutliers = names.filter(n =>
-      best.get(n).exists(v => committed.get(n).exists(isOutlier(v, _))))
-    if (provisionalOutliers.nonEmpty)
-      System.err.println(s"[bench] ${provisionalOutliers.size} provisional " +
-        s"outlier(s): ${provisionalOutliers.mkString(", ")} — up to " +
-        s"$RequalPasses extra passes each")
-    val requalifiedNames =
-      requalify(provisionalOutliers, committed, best.get, n => run(n))
-
-    // Slow-FIGURE requalification — the figure-level twin of the
-    // query pass above. A contention window during the streaming
-    // block leaves depressed-but-internally-consistent throughput
-    // figures the pair/agreement checks cannot catch (both sides sink
-    // together), and the r12 transient-hog validation showed exactly
-    // that hole: every flagged QUERY converged once the host calmed,
-    // while the streaming envelope figure kept its contention-window
-    // sample and stayed in `slow_figures`. So each figure still below
-    // 2/3 of its committed calm value gets its SOURCE re-measured
-    // under a bounded fresh budget ([[FigureRequalBudgetSec]] wall
-    // per round, ≤ 2 rounds), max-merged — figures are throughput,
-    // so the best observed rate is the honest report, symmetric with
-    // the per-query min. A calm run has no slow figures and spends
-    // nothing here; sustained contention still names itself because
-    // the re-measure is exactly as contended as the first pass.
-    def slowFigureEntries: Seq[(String, Long)] = Seq(
+    val results = names.map { n =>
+      n -> best.getOrElse(n, if (attempted(n)) capSec(n).toDouble else -1.0)
+    }
+    // Throughput figures below two-thirds of their committed calm
+    // value ([[isSlowFigure]]): the agreement checks catch
+    // INCONSISTENT contention; this catches the consistent kind,
+    // where every figure is depressed together and the pairs agree.
+    val slowFigures = Seq(
       "envelope_events_per_sec" -> eventsPerSec,
       "streaming_envelope_events_per_sec" -> streamEps,
       "streaming_envelope_events_per_sec_rocksdb" -> streamEpsRocks,
       "streaming_snapshot_events_per_sec" -> snapEps,
       "streaming_snapshot_events_per_sec_rocksdb" -> snapEpsRocks)
-      .filter { case (f, v) => committedFigs.get(f).exists(isSlowFigure(v, _)) }
-    def slowFigNames = slowFigureEntries.map(_._1)
-    var figRounds = 0
-    while (figRounds < 2 && slowFigNames.nonEmpty) {
-      val slow = slowFigNames
-      System.err.println(s"[bench] figure(s) below 2/3 committed calm: " +
-        s"${slow.mkString(", ")} — re-measuring their sources")
-      val figBudget = new BenchStreaming.WallBudget(FigureRequalBudgetSec)
-      if (slow.contains("envelope_events_per_sec")) remeasureBatchEnvelope()
-      if (slow.exists(_.startsWith("streaming_envelope")))
-        remeasureStreamEnvelope(figBudget)
-      if (slow.contains("streaming_snapshot_events_per_sec"))
-        snapEps = math.max(snapEps,
-          BenchStreaming.snapshotEventsPerSecDefault(spark, figBudget))
-      if (slow.contains("streaming_snapshot_events_per_sec_rocksdb"))
-        snapEpsRocks = math.max(snapEpsRocks,
-          BenchStreaming.snapshotEventsPerSecRocksDb(spark, figBudget))
-      figRounds += 1
-    }
-    // the agreement stamp must reflect the figures the artifact
-    // actually reports, including any requalified envelope samples
-    val batchStreamAgreedFinal = batchStreamAgree(eventsPerSec, streamRef)
-
-    // results AFTER the envelope pairing loop and requalification: a
-    // re-measure that found a calmer sample must be the one reported
-    val results = names.map { n =>
-      n -> best.getOrElse(n, if (attempted(n)) capSec(n).toDouble else -1.0)
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // A query with no uncapped sample in ANY sweep never completed —
-    // a real failure signal (regression/hang), not a timing.
-    val cappedFinal = names.filter(n => attempted(n) && !best.contains(n))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // Machine-readable contention self-description: queries whose
-    // best sample this run exceeds ~2× their committed calm value.
-    // A calm run emits []; a contended run names its own corrupted
-    // figures, the way `sweeps`/`capped` already made a run
-    // discardable as a whole.
-    val outlierEntries = results.collect {
-      case (n, v) if v > 0 && committed.get(n).exists(isOutlier(v, _)) =>
-        (n, v)
-    }
-    val outliers = outlierEntries
-      .map { case (n, v) =>
-        s"""{"query":"$n","sec":$v,"committed":${committed(n)}}"""
-      }
-      .mkString("[", ",", "]")
-    // Provisionally-flagged queries whose requalification passes found
-    // a calm-consistent sample — visible so a cleared flag is still a
-    // recorded event, not silence.
-    val requalified = requalifiedNames
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Throughput figures below two-thirds of their committed calm
-    // value ([[isSlowFigure]]): the pair/agreement checks catch
-    // INCONSISTENT contention; this catches the consistent kind,
-    // where every figure is depressed together and the pairs agree
-    // anyway. Evaluated on the POST-requalification figures.
-    val slowFigureFinal = slowFigureEntries
-    val slowFigures = slowFigureFinal.map { case (f, v) =>
-      s"""{"figure":"$f","value":$v,"committed":${committedFigs(f).round}}"""
-    }.mkString("[", ",", "]")
-    val stagedJson = stagedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val stageBuildJson = stageBuild
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"capped":$cappedFinal,"outliers":$outliers,"requalified":$requalified,"slow_figures":$slowFigures,"sweeps":$sweep,"stage_build_sec":$stageBuildSec,"stage_build":$stageBuildJson,"staged":$stagedJson,"envelope_events_per_sec":$eventsPerSec,"batch_stream_envelope_agreed":$batchStreamAgreedFinal,"streaming_envelope_events_per_sec":$streamEps,"streaming_envelope_events_per_sec_rocksdb":$streamEpsRocks,"streaming_envelope_agreed":$streamAgreed,"streaming_snapshot_events_per_sec":$snapEps,"streaming_snapshot_events_per_sec_rocksdb":$snapEpsRocks,"sf":"$sfDir"}"""
-    println(line)
+      .collect { case (f, v) if committedFigs.get(f).exists(isSlowFigure(v, _)) =>
+        (f, v, committedFigs(f).round) }
+    val artifact = Artifact(
+      queries = results,
+      // no uncapped sample in ANY sweep: never completed — a real
+      // failure signal (regression/hang), not a timing
+      capped = names.filter(n => attempted(n) && !best.contains(n)),
+      // queries whose best sample exceeds ~2× their committed calm
+      // value: a contended run names its own corrupted figures
+      outliers = results.collect {
+        case (n, v) if v > 0 && committed.get(n).exists(isOutlier(v, _)) =>
+          (n, v, committed(n))
+      },
+      requalified = requalified(names, committed, sweep0.get, best.get),
+      slowFigures = slowFigures,
+      sweeps = sweep,
+      stageBuildSec = stageBuildSec,
+      stageBuild = stageBuild.toSeq,
+      staged = stagedNames,
+      envelope = eventsPerSec,
+      batchStreamAgreed =
+        batchStreamAgree(eventsPerSec, math.max(streamEps, streamEpsRocks)),
+      streamEnvelope = streamEps,
+      streamEnvelopeRocks = streamEpsRocks,
+      streamAgreed = streamAgreed,
+      snapshot = snapEps,
+      snapshotRocks = snapEpsRocks,
+      cost = names.flatMap(n => costs.get(n).map(n -> _)),
+      sf = sfDir)
+    println(artifact.line)
     // The driver captures stdout with `tail`, which can start
     // mid-artifact and truncate the per-query map. Persist the full
     // JSON in the repo too, so the committed snapshot is always
@@ -599,21 +500,12 @@ object Bench {
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_out.json"),
-        (line + "\n").getBytes("UTF-8"))
+        (artifact.line + "\n").getBytes("UTF-8"))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
     }
-    // Trailing one-line summary, printed LAST: the driver's stdout
-    // capture keeps the tail, and BENCH_r10's tail started mid-artifact
-    // — cutting off `outliers`/`slow_figures`, which appear early in
-    // the full line. Repeating the verdict-relevant flags (names only)
-    // at the very end makes them survive any tail slice.
-    val outlierNames =
-      outlierEntries.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
-    val slowFigureNames =
-      slowFigureFinal.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
-    println(s"""{"summary":{"total":$total,"sweeps":$sweep,"capped":$cappedFinal,"outliers":$outlierNames,"requalified":$requalified,"slow_figures":$slowFigureNames,"batch_stream_envelope_agreed":$batchStreamAgreedFinal,"streaming_envelope_agreed":$streamAgreed}}""")
+    println(artifact.summary)
     spark.stop()
   }
 }

@@ -32,11 +32,13 @@ object BenchStreaming {
   /** Ad-hoc: `runMain graft.BenchStreaming [nEvents]`. */
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
-    val eps = args.headOption match {
-      case Some(n) => envelopeEventsPerSec(spark, n.toInt)
-      case None => envelopeEventsPerSec(spark)
+    val (dflt, rocks, agreed) = args.headOption match {
+      case Some(n) => envelopeFigurePair(spark, n.toInt)
+      case None => envelopeFigurePair(spark)
     }
-    println(s"""{"streaming_envelope_events_per_sec":$eps}""")
+    println(s"""{"streaming_envelope_events_per_sec":$dflt,""" +
+      s""""streaming_envelope_events_per_sec_rocksdb":$rocks,""" +
+      s""""streaming_envelope_agreed":$agreed}""")
     spark.stop()
   }
 
@@ -119,26 +121,6 @@ object BenchStreaming {
       Drive.Pass(pass(cap))
     }
 
-  /** Steady-state streaming throughput: a warm-up pass pays the
-    * one-time costs (fixture conversion into the source's row cache,
-    * streaming codegen); the measured passes replay cached rows
-    * through fresh checkpoints. Best of three is reported (each pass
-    * is a valid sample and costs ~2 s — a single host-contention
-    * burst spanning one pass can no longer halve the headline, as it
-    * did between the r4 local runs: 210k vs 122k events/s from
-    * identical code).
-    */
-  def envelopeEventsPerSec(
-      spark: SparkSession,
-      n: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "300000").toInt,
-      capSec: Long = 60L,
-      budget: WallBudget = unbounded): Long = {
-    val fixture = s"bench-stream-${System.nanoTime()}"
-    val opts = ChangeEventReplaySource.register(fixture, syntheticEvents(n))
-    try bestOf(budget, 15L, capSec)(cap => onePass(spark, opts, n, cap))
-    finally ChangeEventReplaySource.unregister(fixture)
-  }
-
   /** The two figures must agree within this factor — the envelope
     * path is stateless, so any larger gap is a measurement artifact
     * (host contention), never a real provider cost.
@@ -149,24 +131,19 @@ object BenchStreaming {
     a > 0 && b > 0 &&
       math.max(a, b).toDouble / math.min(a, b) > StatelessAgreeRatio
 
-  /** BOTH stateless envelope figures (default store, RocksDB) with
-    * the must-agree invariant ENFORCED, not just reported: the
-    * envelope path instantiates no state store, so the two numbers
-    * measure the same code and must track each other. When they
-    * disagree by more than [[StatelessAgreeRatio]], the LOWER side is
-    * re-measured (another best-of-3) up to 3 times — the r8 artifact
-    * shipped an 82k default-store sample against 195k RocksDB because
-    * the dual-reporting design caught the contention-corrupted sample
-    * but nothing acted on the catch. The synthetic fixture is built
-    * and registered ONCE for the whole pair (retries reuse the warm
-    * source row cache instead of paying a cold rebuild under the very
-    * time pressure that triggered the retry). Returns
-    * (default, rocksdb, agreed) — `agreed = false` marks a pair that
-    * STILL disagrees after the retries (sustained contention window;
-    * the lower figure is corrupted), and the caller persists the flag
-    * in the artifact so a reader never mistakes a failed-agreement
-    * pair for a measured one. The state-store-BOUND comparison is
-    * [[snapshotEventsPerSec]].
+  /** BOTH stateless envelope figures (default store, RocksDB) and
+    * whether they agree within [[StatelessAgreeRatio]]. Each is the
+    * steady-state best of three passes (~2 s each) replaying the
+    * source's cached rows through fresh checkpoints, so one
+    * host-contention burst cannot halve it (the r4 local runs read
+    * 210k vs 122k events/s from identical code). The envelope
+    * path instantiates no state store, so the two numbers measure the
+    * same code; `agreed = false` marks a pair a contention window
+    * split (the lower figure is corrupted), and the caller persists
+    * the flag in the artifact so a reader never mistakes it for a
+    * measured difference. The synthetic fixture is built and
+    * registered ONCE for the pair. The state-store-BOUND comparison
+    * is [[snapshotEventsPerSec]].
     */
   def envelopeFigurePair(
       spark: SparkSession,
@@ -176,24 +153,10 @@ object BenchStreaming {
     val fixture = s"bench-stream-${System.nanoTime()}"
     val opts = ChangeEventReplaySource.register(fixture, syntheticEvents(n))
     try {
-      def dfltRun(): Long =
+      def run(): Long =
         bestOf(budget, 15L, capSec)(cap => onePass(spark, opts, n, cap))
-      def rocksRun(): Long =
-        Drive.withProvider(spark, Some(Drive.RocksDb))(dfltRun())
-      var dflt = dfltRun()
-      var rocks = rocksRun()
-      var retries = 0
-      while (retries < 3 && disagree(dflt, rocks) && !budget.exhausted) {
-        System.err.println(s"[bench] stateless envelope figures disagree " +
-          s"($dflt vs $rocks ev/s) — re-measuring the lower side")
-        if (dflt < rocks) dflt = math.max(dflt, dfltRun())
-        else rocks = math.max(rocks, rocksRun())
-        retries += 1
-      }
-      if (disagree(dflt, rocks))
-        System.err.println(s"[bench] stateless envelope figures STILL " +
-          s"disagree after $retries re-measures ($dflt vs $rocks ev/s) — " +
-          "sustained contention window; treat the lower figure as corrupted")
+      val dflt = run()
+      val rocks = Drive.withProvider(spark, Some(Drive.RocksDb))(run())
       (dflt, rocks, !disagree(dflt, rocks))
     } finally ChangeEventReplaySource.unregister(fixture)
   }
@@ -250,15 +213,8 @@ object BenchStreaming {
     * a floor below it would let a budget-exhausted pass 0 kill a
     * healthy run mid-batch and ship a truncated figure.
     */
-  private def snapshotBestOf(spark: SparkSession, provider: Option[String],
+  def snapshotFigure(spark: SparkSession, provider: Option[String],
       budget: WallBudget): Long =
     bestOf(budget, 45L, 90L)(cap =>
       snapshotEventsPerSec(spark, provider, capSec = cap))
-
-  def snapshotEventsPerSecDefault(spark: SparkSession,
-      budget: WallBudget = unbounded): Long =
-    snapshotBestOf(spark, None, budget)
-  def snapshotEventsPerSecRocksDb(spark: SparkSession,
-      budget: WallBudget = unbounded): Long =
-    snapshotBestOf(spark, Some(Drive.RocksDb), budget)
 }

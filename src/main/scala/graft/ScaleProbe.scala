@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,29 +32,6 @@ import org.apache.spark.sql.functions._
   * Replica 0 is the base bytes, so ×1 equals the unreplicated run.
   */
 object ScaleProbe {
-
-  /** Per-stage (sum, max, n) of task durations since the last reset. */
-  private class SkewListener extends SparkListener {
-    val stages = scala.collection.concurrent.TrieMap
-      .empty[Int, (Long, Long, Long)]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.successful) {
-        val d = t.taskInfo.duration
-        stages.updateWith(t.stageId) {
-          case Some((s, m, n)) => Some((s + d, math.max(m, d), n + 1))
-          case None => Some((d, d, 1L))
-        }
-      }
-    def reset(): Unit = stages.clear()
-    /** worst max/mean ratio over stages with >= 8 tasks */
-    def worstSkew: Double = {
-      val ratios = stages.values.collect {
-        case (sum, max, n) if n >= 8 && sum > 0 =>
-          max.toDouble / (sum.toDouble / n)
-      }
-      if (ratios.isEmpty) 1.0 else ratios.max
-    }
-  }
 
   /** Key offset separating replicas' id spaces (far above any real
     * key at probe scale, so replica joins never collide).
@@ -158,21 +134,23 @@ object ScaleProbe {
         "rel_basket_affinity", "rel_wait_suppliers", "rel_concurrency")
     val spark = GraftSession.local()
     GraftSession.applyEnvConf(spark)
-    val skew = new SkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val cost = Cost.attach(spark)
+    val sc = spark.sparkContext
     for (f <- factors) {
       val dir = s"/tmp/graft_scale_x$f"
       replicate(spark, base, dir, f)
       spark.conf.set("graft.stage.dir", s"/tmp/graft_scale_stage_x$f")
       for (n <- names; pass <- 1 to 2) {
         spark.catalog.clearCache()
-        skew.reset()
+        val group = s"scale-$n-x$f-pass$pass"
+        sc.setJobGroup(group, n)
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, dir)
+        try SparkEntry.queries(n)(spark, dir)
           .write.format("noop").mode("overwrite").save()
+        finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] $n x$f pass$pass: $sec%.2f s " +
-          f"skew=${skew.worstSkew}%.1f")
+        val skew = cost.take(group).map(_.worstSkew).getOrElse(1.0)
+        println(f"[scale] $n x$f pass$pass: $sec%.2f s skew=$skew%.1f")
       }
     }
     spark.stop()

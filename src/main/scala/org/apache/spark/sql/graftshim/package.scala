@@ -22,4 +22,16 @@ package object graftshim {
     new AnalysisException(
       errorClass = "USER_RAISED_EXCEPTION",
       messageParameters = Map("errorMessage" -> msg))
+
+  /** Blocks until every listener has seen every event posted so far
+    * (`private[spark]`); throws `TimeoutException` after 10 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The `QueryExecution` an execution-end event carries — the one a
+    * `QueryExecutionListener` is handed (`private[sql]`).
+    */
+  def queryExecutionOf(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : execution.QueryExecution = e.qe
 }

@@ -124,7 +124,7 @@ class BenchExpectSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("bench_r12_calm", ".json")
     try {
       java.nio.file.Files.write(tmp, r12Calm)
-      val figs = Bench.committedFigures(tmp.toString)
+      val figs = Bench.committedBaseline(tmp.toString)._2
       assert(figs("streaming_snapshot_events_per_sec") == 19248.0)
       assert(figs("streaming_snapshot_events_per_sec_rocksdb") == 16132.0)
     } finally java.nio.file.Files.deleteIfExists(tmp)

@@ -15,16 +15,16 @@ class BenchOutliersSpec extends AnyFunSuite {
       ("""{"metric":"total","value":114.0,"unit":"sec",""" +
         """"queries":{"q_a":0.5,"q_b":1.25,"q_int":2},""" +
         """"capped":[],"sf":"/x"}""").getBytes("UTF-8"))
-    val m = Bench.committedQueryTimes(tmp.toString)
+    val m = Bench.committedBaseline(tmp.toString)._1
     assert(m == Map("q_a" -> 0.5, "q_b" -> 1.25, "q_int" -> 2.0))
     java.nio.file.Files.deleteIfExists(tmp)
   }
 
   test("committedQueryTimes is empty on absent or malformed files") {
-    assert(Bench.committedQueryTimes("/nonexistent/bench_out.json").isEmpty)
+    assert(Bench.committedBaseline("/nonexistent/bench_out.json")._1.isEmpty)
     val tmp = java.nio.file.Files.createTempFile("bench_bad", ".json")
     java.nio.file.Files.write(tmp, "not json at all".getBytes("UTF-8"))
-    assert(Bench.committedQueryTimes(tmp.toString).isEmpty)
+    assert(Bench.committedBaseline(tmp.toString)._1.isEmpty)
     java.nio.file.Files.deleteIfExists(tmp)
   }
 
@@ -62,7 +62,7 @@ class BenchOutliersSpec extends AnyFunSuite {
         """"envelope_events_per_sec":334989,""" +
         """"streaming_envelope_events_per_sec":245700,"sf":"/x"}""")
         .getBytes("UTF-8"))
-    val m = Bench.committedFigures(tmp.toString)
+    val m = Bench.committedBaseline(tmp.toString)._2
     assert(m("envelope_events_per_sec") == 334989.0)
     assert(m("streaming_envelope_events_per_sec") == 245700.0)
     assert(m("value") == 114.0) // numeric top-levels included; harmless
@@ -108,12 +108,12 @@ class BenchOutliersSpec extends AnyFunSuite {
       java.nio.file.Files.write(repoFile,
         ("""{"queries":{"rel_q1_agg":99.9},""" +
           """"envelope_events_per_sec":1}""").getBytes("UTF-8"))
-      val m = Bench.committedQueryTimes()
+      val m = Bench.committedBaseline()._1
       // the baseline is HEAD's calm value, not the contended 99.9 —
       // so the contended sample still fires as an outlier
       assert(m.get("rel_q1_agg").exists(_ < 10.0))
       assert(Bench.isOutlier(99.9, m("rel_q1_agg")))
-      val figs = Bench.committedFigures()
+      val figs = Bench.committedBaseline()._2
       assert(figs.get("envelope_events_per_sec").exists(_ > 1000.0))
     } finally java.nio.file.Files.write(repoFile, original)
   }
@@ -145,44 +145,73 @@ class BenchOutliersSpec extends AnyFunSuite {
   }
 
   test("requalify clears transient contention and keeps sustained flags") {
-    // q_transient: sweeps caught it in a burst (3.0 s vs committed
-    // 0.6); the FIRST extra pass lands calm. q_sustained: every extra
-    // pass is as contended as the sweeps. q_slowclear: clears on the
-    // last allowed pass.
+    // q_transient: sweep 0 caught it in a burst (3.0 s vs committed
+    // 0.6); the next sweep landed calm. q_sustained: every sweep was as
+    // contended as sweep 0. q_slowclear: cleared only by the last
+    // sweep. q_calm never read as an outlier.
     val committed = Map("q_transient" -> 0.6, "q_sustained" -> 0.8,
-      "q_slowclear" -> 1.0)
-    val best = collection.mutable.Map(
-      "q_transient" -> 3.0, "q_sustained" -> 4.0, "q_slowclear" -> 5.0)
-    val samples = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    def sample(n: String): Unit = {
-      samples(n) += 1
-      val sec = n match {
-        case "q_transient" => 0.55 // calm immediately
-        case "q_slowclear" => if (samples(n) >= 3) 0.9 else 4.8
-        case _ => 3.9 // sustained contention: never calm
-      }
-      if (sec < best(n)) best(n) = sec // the caller's min-merge rule
-    }
-    val requalified = Bench.requalify(
-      Seq("q_transient", "q_sustained", "q_slowclear"), committed,
-      best.get, sample)
-    assert(requalified == Seq("q_transient", "q_slowclear"))
-    // early exit: one pass sufficed for the transient query
-    assert(samples("q_transient") == 1)
-    // bounded spend: the sustained query got exactly RequalPasses
-    assert(samples("q_sustained") == Bench.RequalPasses)
-    assert(samples("q_slowclear") == 3)
-    // min-merge left the calmer samples as the reported numbers
-    assert(best("q_transient") == 0.55 && best("q_slowclear") == 0.9)
+      "q_slowclear" -> 1.0, "q_calm" -> 0.5)
+    val sweep0 = Map(
+      "q_transient" -> 3.0, "q_sustained" -> 4.0, "q_slowclear" -> 5.0,
+      "q_calm" -> 0.6)
+    // the sweeps' min-merge of every later sample
+    val best = Map(
+      "q_transient" -> 0.55, "q_sustained" -> 3.9, "q_slowclear" -> 0.9,
+      "q_calm" -> 0.5)
+    val names = committed.keys.toSeq.sorted
+    assert(Bench.requalified(names, committed, sweep0.get, best.get) ==
+      Seq("q_slowclear", "q_transient"))
+    // the sweep loop re-sampled exactly the sweep-0 outliers
+    assert(BenchExpect.pending(names, committed, sweep0.get) ==
+      Seq("q_slowclear", "q_sustained", "q_transient"))
     // the survivor still reads as an outlier for the artifact
     assert(Bench.isOutlier(best("q_sustained"), committed("q_sustained")))
   }
 
   test("requalify spends nothing on a calm run") {
-    var sampled = 0
-    val out = Bench.requalify(Seq.empty, Map.empty,
-      _ => Some(0.5), _ => sampled += 1)
-    assert(out.isEmpty && sampled == 0)
+    val committed = Map("q_a" -> 0.6, "q_b" -> 1.0)
+    val sweep0 = Map("q_a" -> 0.7, "q_b" -> 1.1)
+    val names = committed.keys.toSeq.sorted
+    // no sweep-0 outlier: nothing to clear, and no query is re-sampled
+    // to clear one
+    assert(Bench.requalified(names, committed, sweep0.get, sweep0.get).isEmpty)
+    assert(BenchExpect.pending(names, committed, sweep0.get).isEmpty)
+    assert(Bench.requalified(Seq.empty, Map.empty, _ => Some(0.5),
+      _ => Some(0.5)).isEmpty)
+  }
+
+  test("artifact keys are the committed calm artifact's plus cost") {
+    val repoFile = java.nio.file.Paths.get("bench_out.json").toAbsolutePath
+    val gitHasIt =
+      try {
+        new ProcessBuilder("git", "-C", repoFile.getParent.toString,
+          "cat-file", "-e", "HEAD:./bench_out.json").start().waitFor() == 0
+      } catch { case _: Throwable => false }
+    assume(gitHasIt, "not a git checkout with a committed bench_out.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keys(bytes: Array[Byte]): Set[String] = {
+      val it = mapper.readTree(bytes).fieldNames()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSet
+    }
+    val committedKeys = keys(Bench.committedBytes("bench_out.json").get)
+    val counters = Cost.Counters(2, 10, 698, 15, 1047, 0, 0, 5, 5, 5)
+    val art = Bench.Artifact(
+      queries = Seq("q_a" -> 0.5, "q_b" -> -1.0), capped = Seq("q_b"),
+      outliers = Seq(("q_a", 0.5, 0.2)), requalified = Seq("q_c"),
+      slowFigures = Seq(("envelope_events_per_sec", 1L, 3L)), sweeps = 3,
+      stageBuildSec = 1.5, stageBuild = Seq("mm_phash" -> 0.5),
+      staged = Seq("idx"), envelope = 1L, batchStreamAgreed = false,
+      streamEnvelope = 2L, streamEnvelopeRocks = 3L, streamAgreed = true,
+      snapshot = 4L, snapshotRocks = 5L, cost = Seq("q_a" -> counters),
+      sf = "/x")
+    val line = mapper.readTree(art.line)
+    assert(keys(art.line.getBytes("UTF-8")) == committedKeys + "cost")
+    assert(line.get("value").asDouble == 0.5) // a failed query counts nothing
+    assert(line.get("cost").get("q_a").get("shuffle_bytes_read").asLong == 1047L)
+    assert(line.get("cost").get("q_a").get("output_rows").asLong == 5L)
+    val summary = mapper.readTree(art.summary).get("summary")
+    assert(summary.get("outliers").get(0).asText == "q_a")
+    assert(summary.get("slow_figures").get(0).asText == "envelope_events_per_sec")
   }
 
   test("calm-baseline walk skips requalified (was-contended) artifacts") {
@@ -207,7 +236,7 @@ class BenchOutliersSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("bench_nogit", ".json")
     java.nio.file.Files.write(tmp,
       """{"queries":{"q":1.5}}""".getBytes("UTF-8"))
-    assert(Bench.committedQueryTimes(tmp.toString) == Map("q" -> 1.5))
+    assert(Bench.committedBaseline(tmp.toString)._1 == Map("q" -> 1.5))
     java.nio.file.Files.deleteIfExists(tmp)
   }
 }
