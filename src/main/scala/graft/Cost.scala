@@ -120,7 +120,7 @@ object Cost {
   }
 
   /** Shuffle and broadcast exchanges that ran. */
-  private def exchanges(p: SparkPlan): Int = nodes(p).count {
+  private[graft] def exchanges(p: SparkPlan): Int = nodes(p).count {
     case _: ShuffleExchangeLike | _: BroadcastExchangeLike => true
     case _ => false
   }

@@ -2,8 +2,8 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The MongoDB change-stream event as a Spark row type.
   *
@@ -29,26 +29,16 @@ object ChangeEvents {
   val AllOps: Seq[String] =
     DataOps ++ Seq("drop", "dropDatabase", "invalidate")
 
-  val updateDescriptionType: StructType = StructType(Seq(
-    StructField("updatedFields", StringType),          // ext-JSON doc
-    StructField("removedFields", ArrayType(StringType)),
-    StructField("truncatedArrays", ArrayType(StringType)),
-    StructField("raw", StringType)))                   // verbatim ext-JSON
+  /** Envelope schema of one change-stream event (SURVEY §1.1, §1.4),
+    * derived from the row model so the replay source, file sources and
+    * fixtures share one definition. Every field is nullable: streaming
+    * file sources force that anyway
+    * (`spark.sql.streaming.fileSource.schema.forceNullable`).
+    */
+  val schema: StructType = Encoders.product[ChangeEventRow].schema
 
-  /** Envelope schema of one change-stream event (SURVEY §1.1, §1.4). */
-  val schema: StructType = StructType(Seq(
-    StructField("_id", StructType(Seq(StructField("_data", StringType))),
-      nullable = false),                               // resume token
-    StructField("operationType", StringType, nullable = false),
-    StructField("clusterTime", TimestampType),
-    StructField("wallTime", TimestampType),
-    StructField("ns", StructType(Seq(
-      StructField("db", StringType),
-      StructField("coll", StringType)))),
-    StructField("documentKey", StringType),            // ext-JSON
-    StructField("fullDocument", StringType),           // ext-JSON
-    StructField("fullDocumentBeforeChange", StringType), // ext-JSON
-    StructField("updateDescription", updateDescriptionType)))
+  val updateDescriptionType: StructType =
+    schema("updateDescription").dataType.asInstanceOf[StructType]
 
   // ---------------------------------------------------------------
   // Golden fixtures — the 7 canonical events from
@@ -128,8 +118,6 @@ object ChangeEvents {
 
   def golden(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // Project through the canonical schema so column nullability and
-    // order match what a connector source would produce.
-    spark.createDataFrame(goldenEvents.toDF().rdd, schema)
+    goldenEvents.toDF()
   }
 }

@@ -48,25 +48,12 @@ object EnvelopeTransform {
     * open sub-documents are already extended-JSON strings, so they are
     * spliced in verbatim (no double-encoding); absent fields are
     * omitted (concat_ws skips nulls) exactly like the reference's
-    * conditional dict building.
-    *
-    * `valueEnvelope` splices verbatim — correct when the source
-    * already carries **legacy**-dialect strings (the fixture path).
-    * `valueEnvelopeLegacy` additionally runs each open sub-document
-    * through the E3 codec (`functions.LegacyExtJson`), so a connector
-    * configured for canonical/relaxed output (`{"$date":
-    * {"$numberLong": ...}}` etc.) still produces the reference's
-    * legacy dialect (`json_util.dumps(..., LEGACY_JSON_OPTIONS)`,
-    * `producing/change_event_handler.py:95-113`).
+    * conditional dict building. The legacy dialect is this same
+    * envelope run once through the E3 codec (see `apply`).
     */
-  val valueEnvelope: Column = envelope(identity)
-
-  val valueEnvelopeLegacy: Column =
-    envelope(graft.functions.LegacyExtJsonCol.apply)
-
-  private def envelope(codec: Column => Column): Column = {
+  val valueEnvelope: Column = {
     val before = when(col("fullDocumentBeforeChange").isNotNull,
-      concat(lit("\"before\": "), codec(col("fullDocumentBeforeChange"))))
+      concat(lit("\"before\": "), col("fullDocumentBeforeChange")))
     // The reference dumps the updateDescription sub-document verbatim —
     // whatever keys are present, in the event's own order, with
     // json_util's ", "/": " separators. So: each sub-key included
@@ -77,7 +64,7 @@ object EnvelopeTransform {
     // escapes (in both dialects: field names are plain strings, never
     // ext-JSON); truncatedArrays elements are ext-JSON fragments, so
     // they are joined into one array text (array_join skips nulls, as
-    // concat_ws does) and that runs through the dialect's codec once.
+    // concat_ws does).
     // Key order matches the golden events (tests/mocks/events.py:
     // removedFields, truncatedArrays, updatedFields) — the byte-parity
     // anchor the reference's own tests pin.
@@ -85,12 +72,10 @@ object EnvelopeTransform {
       concat(lit("\"removedFields\": "), graft.functions.LegacyExtJsonCol(
         to_json(col("updateDescription.removedFields")))))
     val truncArrs = when(col("updateDescription.truncatedArrays").isNotNull,
-      concat(lit("\"truncatedArrays\": "), codec(concat(lit("["),
-        array_join(col("updateDescription.truncatedArrays"), ", "),
-        lit("]")))))
+      concat(lit("\"truncatedArrays\": ["),
+        array_join(col("updateDescription.truncatedArrays"), ", "), lit("]")))
     val updFields = when(col("updateDescription.updatedFields").isNotNull,
-      concat(lit("\"updatedFields\": "),
-        codec(col("updateDescription.updatedFields"))))
+      concat(lit("\"updatedFields\": "), col("updateDescription.updatedFields")))
     // Live-order parity: when the source carries the sub-document as
     // one verbatim ext-JSON string (`updateDescription.raw`), splice it
     // untouched — the reference's own move
@@ -99,14 +84,13 @@ object EnvelopeTransform {
     // The typed rebuild is the fallback for pre-parsed sources.
     val updDesc = when(col("updateDescription").isNotNull,
       when(col("updateDescription.raw").isNotNull,
-        concat(lit("\"updateDescription\": "),
-          codec(col("updateDescription.raw"))))
+        concat(lit("\"updateDescription\": "), col("updateDescription.raw")))
       .otherwise(concat(
         lit("\"updateDescription\": {"),
         concat_ws(", ", remFields, truncArrs, updFields),
         lit("}"))))
     val after = when(col("fullDocument").isNotNull,
-      concat(lit("\"after\": "), codec(col("fullDocument"))))
+      concat(lit("\"after\": "), col("fullDocument")))
     val op = concat(lit("\"op\": \""), opCode, lit("\""))
     concat(lit("{"), concat_ws(", ", before, updDesc, after, op), lit("}"))
   }
@@ -123,19 +107,25 @@ object EnvelopeTransform {
   /** Full transform: filter + project to the Kafka-sink contract
     * (`topic`, `key`, `value` columns — the Spark Kafka sink routes
     * per-row by these exact column names). With `legacyDialect = true`
-    * the key and every open sub-document run through the E3 codec, so
-    * canonical/relaxed connector output serializes in the reference's
-    * legacy dialect (P2 runs documentKey through json_util the same
-    * way, `change_event_handler.py:93-98`).
+    * the key and the finished envelope each run once through the E3
+    * codec (`functions.LegacyExtJson`), so canonical/relaxed connector
+    * output (`{"$date": {"$numberLong": ...}}` etc.) serializes in the
+    * reference's legacy dialect (`json_util.dumps(...,
+    * LEGACY_JSON_OPTIONS)`, `change_event_handler.py:93-113`). One pass
+    * over the envelope gives the same bytes as one per sub-document:
+    * the codec rewrites each sub-tree exactly as it would that
+    * sub-document alone, and the envelope's own keys and separators
+    * are already in json_util form.
     */
   def apply(df: DataFrame, topicPrefix: String = "",
-      legacyDialect: Boolean = false): DataFrame =
+      legacyDialect: Boolean = false): DataFrame = {
+    val codec: Column => Column =
+      if (legacyDialect) graft.functions.LegacyExtJsonCol.apply else identity
     filterDataOps(df).select(
       topic(topicPrefix).alias("topic"),
-      (if (legacyDialect) graft.functions.LegacyExtJsonCol(col("documentKey"))
-       else col("documentKey")).alias("key"),
-      (if (legacyDialect) valueEnvelopeLegacy else valueEnvelope)
-        .alias("value"))
+      codec(col("documentKey")).alias("key"),
+      codec(valueEnvelope).alias("value"))
+  }
 
   /** P4: Spark's hash of `key` sends every event of one document to
     * the same partition, which keeps per-document order under n-way

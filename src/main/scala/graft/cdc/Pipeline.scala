@@ -1,8 +1,7 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** The whole reference application as one Structured Streaming job
   * (SURVEY §0): change-stream source → op-type filter → CDC envelope →
@@ -50,13 +49,8 @@ object Pipeline {
     * contract as the reference (`README.md:2`).
     */
   def write(envelopes: DataFrame, s: Settings): StreamingQuery =
-    envelopes.writeStream
-      .queryName(s.streamReaderName)
-      .format(s.sinkFormat)
-      .options(s.sinkOptions)
-      .option("checkpointLocation", s.checkpointLocation)
-      .trigger(Trigger.ProcessingTime(s.triggerInterval))
-      .start()
+    startQuery(envelopes.writeStream.format(s.sinkFormat)
+      .options(s.sinkOptions), s)
 
   /** foreachBatch variant of the sink for tests and for sinks needing
     * driver-side setup per batch (e.g. K4 topic auto-creation via an
@@ -64,11 +58,15 @@ object Pipeline {
     */
   def writeForeach(envelopes: DataFrame, s: Settings)(
       f: (DataFrame, Long) => Unit): StreamingQuery =
-    envelopes.writeStream
-      .queryName(s.streamReaderName)
+    startQuery(envelopes.writeStream.foreachBatch(f), s)
+
+  // Query identity, checkpoint and trigger, set after the sink's own
+  // options so the checkpoint location always comes from Settings.
+  private def startQuery(w: DataStreamWriter[Row], s: Settings)
+      : StreamingQuery =
+    w.queryName(s.streamReaderName)
       .option("checkpointLocation", s.checkpointLocation)
       .trigger(Trigger.ProcessingTime(s.triggerInterval))
-      .foreachBatch(f)
       .start()
 
   def start(spark: SparkSession, s: Settings): StreamingQuery =
@@ -84,9 +82,6 @@ object Pipeline {
 object FileTopicSink {
   def append(batch: DataFrame, dir: String): Unit =
     batch.write.mode("append").partitionBy("topic").json(dir)
-
-  def attach(envelopes: DataFrame, s: Settings, dir: String): StreamingQuery =
-    Pipeline.writeForeach(envelopes, s)((b, _) => append(b, dir))
 }
 
 /** K4 parity: the reference caches known topics and creates missing
@@ -100,10 +95,6 @@ object FileTopicSink {
 final class TopicEnsurer(
     createTopic: (String, TopicSpec) => Unit,
     spec: TopicSpec = TopicSpec()) {
-
-  /** Name-only convenience (pre-spec call sites / simple sinks). */
-  def this(createTopic: String => Unit) =
-    this((t: String, _: TopicSpec) => createTopic(t), TopicSpec())
 
   private val known = scala.collection.concurrent.TrieMap.empty[String, Unit]
 

@@ -2,8 +2,8 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-/** Typed row model of a change-stream event (SURVEY §1.1/§1.4).
-  * Field order matches ChangeEvents.schema; open sub-documents are
+/** Typed row model of a change-stream event (SURVEY §1.1/§1.4);
+  * `ChangeEvents.schema` is derived from it. Open sub-documents are
   * extended-JSON strings.
   */
 case class ResumeToken(_data: String)

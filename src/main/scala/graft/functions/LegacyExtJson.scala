@@ -1,7 +1,7 @@
 package graft.functions
 
 import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -50,7 +50,11 @@ object LegacyExtJson {
   // output is exactly what Python's json.dumps would emit for the
   // same double — the byte-parity contract is with json_util, not
   // with the input's formatting.
+  // FAIL_ON_TRAILING_TOKENS: a default readTree stops after the first
+  // value, so `{"_id": 5} {"b": 2}` would convert to `{"_id": 5}`
+  // and drop the rest; trailing whitespace still passes.
   private val mapper: ObjectMapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   def convert(s: String): String = {
     val node =

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.cdc.ChangeEventRow
+import graft.cdc.{ChangeEventRow, ChangeEvents}
 
 /** A DataSource-V2 streaming source that replays a change-event
   * fixture with the reference reader's semantics — the Mongo-less
@@ -41,42 +41,30 @@ import graft.cdc.ChangeEventRow
   * through the same `Pipeline.read` seam).
   */
 object ChangeEventReplaySource {
+  // Rows are serialized once, at registration, so a stream restart (a
+  // new ReplayMicroBatchStream over the same fixture) does not re-pay
+  // the driver-side encoder conversion, which takes seconds for large
+  // bench fixtures.
   private val fixtures =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[ChangeEventRow]]
+    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[InternalRow]]
+
+  // Built once: deriving the encoder reflects over the case class,
+  // which costs tens of milliseconds on every call.
+  private val encoder = ExpressionEncoder[ChangeEventRow]()
 
   /** Register a fixture; returns the option map selecting it. */
   def register(name: String, rows: Seq[ChangeEventRow]): Map[String, String] = {
-    fixtures.put(name, rows)
+    val ser = encoder.createSerializer()
+    fixtures.put(name, rows.map(r => ser(r).copy()).toIndexedSeq)
     Map("fixture" -> name)
   }
 
   /** Drop a fixture (frees driver memory for large bench fixtures). */
-  def unregister(name: String): Unit = {
-    fixtures.remove(name)
-    converted.remove(name)
-  }
+  def unregister(name: String): Unit = fixtures.remove(name)
 
-  // Serialized-row cache: a stream restart (new ReplayMicroBatchStream
-  // over the same fixture) must not re-pay the driver-side encoder
-  // conversion — large bench fixtures take seconds to convert, and the
-  // cost would otherwise land inside the measured window.
-  private val converted =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[InternalRow]]
-
-  private[sources] def convertedRows(name: String): IndexedSeq[InternalRow] =
-    converted.getOrElseUpdate(name, {
-      val ser = encoder.createSerializer()
-      fixture(name).map(r => ser(r).copy()).toIndexedSeq
-    })
-
-  def fixture(name: String): Seq[ChangeEventRow] =
+  private[sources] def rows(name: String): IndexedSeq[InternalRow] =
     fixtures.getOrElse(name,
       throw new IllegalArgumentException(s"unknown replay fixture: $name"))
-
-  val encoder: ExpressionEncoder[ChangeEventRow] =
-    ExpressionEncoder[ChangeEventRow]()
-
-  val schema: StructType = encoder.schema
 }
 
 class ChangeEventReplaySource extends TableProvider
@@ -85,7 +73,7 @@ class ChangeEventReplaySource extends TableProvider
   override def shortName(): String = "graft-replay"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ChangeEventReplaySource.schema
+    ChangeEvents.schema
 
   override def getTable(
       schema: StructType,
@@ -99,14 +87,14 @@ final class ReplayTable(options: Map[String, String]) extends Table
 
   override def name(): String =
     s"graft-replay(${options.getOrElse("fixture", "?")})"
-  override def schema(): StructType = ChangeEventReplaySource.schema
+  override def schema(): StructType = ChangeEvents.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan {
       override def build(): Scan = this
-      override def readSchema(): StructType = ChangeEventReplaySource.schema
+      override def readSchema(): StructType = ChangeEvents.schema
       override def toMicroBatchStream(checkpointLocation: String)
           : MicroBatchStream =
         new ReplayMicroBatchStream(
@@ -135,11 +123,10 @@ final class ReplayMicroBatchStream(
   require(maxRowsPerBatch > 0, "maxRowsPerBatch must be positive")
   require(numPartitions > 0, "partitions must be positive")
 
-  // Materialize + convert once on the driver (cached per fixture
-  // across restarts): this source replays a bounded fixture (the
+  // A bounded fixture, serialized once at registration (the
   // production path is the mongodb connector).
   private lazy val rows: IndexedSeq[InternalRow] =
-    ChangeEventReplaySource.convertedRows(fixtureName)
+    ChangeEventReplaySource.rows(fixtureName)
 
   override def initialOffset(): Offset = SeqOffset(0L)
 

@@ -414,6 +414,30 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  // rel_min_cost once fed one per-(part, supplier) aggregate to two
+  // consumers (the per-part minimum and the join back to it); AQE's
+  // runtime reuse of that exchange sometimes missed, so identical runs
+  // executed 7 or 8 exchanges. The single struct-min aggregate has no
+  // shared exchange: pin that the executed plan reuses none and runs
+  // the same number on two runs.
+  test("rel_min_cost executes one plan shape: no reused exchange, stable count") {
+    for (sf <- sfs) {
+      val counts = (1 to 2).map { _ =>
+        val df = SparkEntry.queries("rel_min_cost")(spark, sf)
+        df.collect()
+        val p = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        assert(p.contains("isFinalPlan=true"),
+          s"rel_min_cost at $sf: expected an executed adaptive plan")
+        assert(!p.contains("ReusedExchange"),
+          s"rel_min_cost at $sf: an exchange feeds two consumers again")
+        Cost.exchanges(df.queryExecution.executedPlan)
+      }
+      assert(counts.distinct.size == 1,
+        s"rel_min_cost at $sf: exchange counts differ across runs: $counts")
+    }
+  }
+
   test("parquet scans prune columns (no full-width reads)") {
     // No query legitimately needs every column of a wide table: a scan
     // whose ReadSchema carries ALL of a table's columns means pruning

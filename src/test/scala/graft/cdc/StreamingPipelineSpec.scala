@@ -83,7 +83,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
   test("TopicEnsurer creates each topic exactly once (K4)") {
     val created = mutable.ArrayBuffer.empty[String]
-    val ensurer = new TopicEnsurer(t => created.synchronized { created += t })
+    val ensurer = new TopicEnsurer((t, _) => created.synchronized { created += t })
     val batch = EnvelopeTransform(ChangeEvents.golden(spark), "test")
     ensurer.ensure(batch)
     ensurer.ensure(batch) // second batch, same topics → cached, no call
@@ -166,7 +166,8 @@ class StreamingPipelineSpec extends AnyFunSuite {
     ChangeEvents.golden(spark).coalesce(1)
       .write.mode(SaveMode.Append).parquet(srcDir)
     val envelopes = Pipeline.transform(Pipeline.read(spark, settings), settings)
-    val q = FileTopicSink.attach(envelopes, settings, outDir)
+    val q = Pipeline.writeForeach(envelopes, settings)((b, _) =>
+      FileTopicSink.append(b, outDir))
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()

@@ -170,9 +170,12 @@ class LegacyExtJsonSpec extends AnyFunSuite {
   }
 
   test("malformed JSON throws, never nulls a change event away") {
-    intercept[IllegalArgumentException] {
-      LegacyExtJson.convert("""{"a": """)
-    }
+    // trailing content after the first value is malformed too: a
+    // silent cut would drop the rest of the document
+    for (bad <- Seq("""{"a": """, """{"a": 1} x""", """{"_id": 5} {"b": 2}"""))
+      intercept[IllegalArgumentException](LegacyExtJson.convert(bad))
+    // trailing whitespace is not content
+    assert(LegacyExtJson.convert("{\"a\": 1} \n") === """{"a": 1}""")
   }
 
   test("expression matches direct convert under codegen and interpreted eval") {
