@@ -14,6 +14,9 @@ import org.apache.spark.sql.SparkSession
   *    rejects; with this flag it surfaces as LongType nanos. Other
   *    refreshes store TIMESTAMP(MICROS); `Tables.events` normalizes
   *    both spellings to LongType nanos for every consumer.
+  *  - `file:` bound to the fork-free local filesystem (LocalFs.scala) for
+  *    both Hadoop APIs, so sink files and checkpoint-log entries cost
+  *    no `chmod`/`readlink` child process each
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
@@ -37,6 +40,10 @@ object GraftSession {
       // one count() per session per input) a metadata operation at
       // 100 TB rather than a full scan
       .config("spark.sql.parquet.aggregatePushdown", "true")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val s = builder(cpus).getOrCreate()

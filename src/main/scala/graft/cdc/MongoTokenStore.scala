@@ -106,11 +106,26 @@ object MongoTokenStore {
   /** The JVM shapes of "the write timed out" (pymongo's `exc.timeout`
     * discriminator, `token_saver.py:70`), looked for along the cause
     * chain: the driver reports a socket read timeout as its own
-    * exception with a `SocketTimeoutException` cause.
+    * exception with a `SocketTimeoutException` cause, and its own
+    * timeouts as driver types with no JDK cause. The driver is not on
+    * the compile classpath, so those match by class name (the class or
+    * a superclass); an expired `withWTimeout` is a write-concern error
+    * with code 64 (WriteConcernFailed).
     */
   def isTimeout(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
       case _: TimeoutException | _: SocketTimeoutException => true
-      case _ => false
+      case d =>
+        val names = Iterator.iterate[Class[_]](d.getClass)(_.getSuperclass)
+          .takeWhile(_ != null).map(_.getName).toSet
+        names.exists(DriverTimeouts) || names(WriteConcernError) &&
+          d.getClass.getMethod("getCode").invoke(d) == WTimeoutCode
     }
+
+  private val DriverTimeouts = Set(
+    "com.mongodb.MongoTimeoutException",
+    "com.mongodb.MongoExecutionTimeoutException",
+    "com.mongodb.MongoOperationTimeoutException")
+  private val WriteConcernError = "com.mongodb.MongoWriteConcernException"
+  private val WTimeoutCode = 64
 }

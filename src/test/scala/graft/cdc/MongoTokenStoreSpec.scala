@@ -4,6 +4,7 @@ import java.net.SocketTimeoutException
 import java.sql.Timestamp
 import java.util.concurrent.TimeoutException
 
+import com.mongodb.{MongoExecutionTimeoutException, MongoOperationTimeoutException, MongoTimeoutException, MongoWriteConcernException}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the concrete Mongo-backed token store end-to-end through a
@@ -108,5 +109,40 @@ class MongoTokenStoreSpec extends AnyFunSuite {
       assert(coll.maxTimes.toSeq === Seq(5000L, 10000L), err().toString)
       assert(coll.docs.contains("r1"))
     }
+  }
+
+  test("an expired write-concern wtimeout (code 64) is retried") {
+    // what the driver throws when withWTimeout(maxTimeMs) expires: no
+    // JDK timeout anywhere on the cause chain
+    val coll = new FakeMongoCollection(failTimes = 2,
+      failWith = new MongoWriteConcernException(64, "waiting for replication timed out"))
+    new MongoTokenStore(coll).save(SavedToken("r1", "tok", t0))
+    assert(coll.maxTimes.toSeq === Seq(5000L, 10000L, 15000L))
+    assert(coll.docs.contains("r1"))
+  }
+
+  test("driver timeout types with no JDK cause are retried, also wrapped") {
+    for (err <- Seq[() => Throwable](
+        () => new MongoTimeoutException("server selection"),
+        () => new MongoOperationTimeoutException("operation"),
+        () => new MongoExecutionTimeoutException(50, "maxTimeMS expired"),
+        () => new RuntimeException("wrapped",
+          new MongoWriteConcernException(64, "wtimeout")))) {
+      val coll = new FakeMongoCollection(failTimes = 1, failWith = err())
+      new MongoTokenStore(coll).save(SavedToken("r1", "tok", t0))
+      assert(coll.maxTimes.toSeq === Seq(5000L, 10000L), err().toString)
+      assert(coll.docs.contains("r1"))
+    }
+  }
+
+  test("a write-concern error with another code propagates, no retry") {
+    val coll = new FakeMongoCollection(failTimes = 1,
+      failWith = new MongoWriteConcernException(100, "UnsatisfiableWriteConcern"))
+    val e = intercept[MongoWriteConcernException] {
+      new MongoTokenStore(coll).save(SavedToken("r1", "tok", t0))
+    }
+    assert(e.getCode === 100)
+    assert(coll.maxTimes.toSeq === Seq(5000L))
+    assert(!coll.docs.contains("r1"))
   }
 }
