@@ -35,11 +35,20 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
       }
 
   /** A path that is not a symlink has its plain status, which is what
-    * the stock code returns once `readlink` finds no target.
+    * the stock code returns once `readlink` finds no target. A symlink
+    * goes to the stock code without its scheme: that code runs
+    * `readlink` on `f.toString()`, which finds no target for a
+    * qualified `file:/…` path and so reports a plain file.
     */
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
-    else getFileStatus(f)
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val file = pathToFile(f)
+    if (!Files.isSymbolicLink(file.toPath)) getFileStatus(f)
+    else {
+      val st = super.getFileLinkStatus(new Path(file.getPath))
+      st.setPath(f)
+      st
+    }
+  }
 }
 
 /** `fs.file.impl`: the checksummed FileSystem API (file sink,

@@ -1,7 +1,11 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+
+import graft.functions.JsonLineCol
 
 /** The whole reference application as one Structured Streaming job
   * (SURVEY §0): change-stream source → op-type filter → CDC envelope →
@@ -75,13 +79,38 @@ object Pipeline {
 
 /** The reference's file-writer mode (`tests/mocks/kafka.py:85-100`,
   * `tests/test_file_writer/test_application.py`): envelopes appended
-  * per topic to files instead of Kafka. Spark-first this is a
-  * partitionBy("topic") JSON append — one directory per topic, each
-  * micro-batch adds files, at-least-once like the Kafka path.
+  * per topic to files instead of Kafka — one `topic=` directory per
+  * topic, each micro-batch adds files, at-least-once like the Kafka
+  * path.
+  *
+  * Each part file (`part-*.txt`) holds JSON lines, the bytes Spark's
+  * JSON datasource writes for the `key` and `value` columns
+  * (`JsonLine`); `value`, already a JSON string, is escaped once from
+  * its UTF-8 bytes instead of through Jackson's UTF-16 writer.
+  *
+  * For the duration of the write a task keeps up to
+  * `ConcurrentWriters` topic files open and appends each row to its
+  * topic's file in input order, so the planned write adds no sort by
+  * topic. A task that meets more topics than that falls back to
+  * Spark's own sort for its remaining rows.
   */
 object FileTopicSink {
-  def append(batch: DataFrame, dir: String): Unit =
-    batch.write.mode("append").partitionBy("topic").json(dir)
+  private[cdc] val ConcurrentWriters = 128
+  private val WritersKey = SQLConf.MAX_CONCURRENT_OUTPUT_FILE_WRITERS.key
+
+  def append(batch: DataFrame, dir: String): Unit = {
+    // set for this write and restored after it; a foreachBatch frame
+    // carries its query's own session, which no other query reads
+    val conf = batch.sparkSession.conf
+    val prev = conf.getOption(WritersKey)
+    conf.set(WritersKey, ConcurrentWriters.toLong)
+    try batch.select(col("topic"), JsonLineCol(col("key"), col("value")))
+      .write.mode("append").partitionBy("topic").text(dir)
+    finally prev match {
+      case Some(v) => conf.set(WritersKey, v)
+      case None => conf.unset(WritersKey)
+    }
+  }
 }
 
 /** K4 parity: the reference caches known topics and creates missing

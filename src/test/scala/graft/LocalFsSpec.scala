@@ -231,4 +231,18 @@ class LocalFsSpec extends AnyFunSuite {
       ours.getFileLinkStatus(new Path(base.resolve("missing").toString))
     }
   }
+
+  test("getFileLinkStatus reports a symlink given as a qualified file: path") {
+    val ours = fs(new ForkFreeLocalFileSystem(), conf("022"))
+    val base = Files.createTempDirectory("graft-localfs-qlink")
+    val file = Files.write(base.resolve("f.txt"), "x".getBytes("UTF-8"))
+    val link = Files.createSymbolicLink(base.resolve("l"), file)
+    val plain = ours.getFileLinkStatus(new Path(link.toString))
+    val qp = new Path("file:" + link)
+    val st = ours.getFileLinkStatus(qp)
+    assert(st.isSymlink)
+    assert(st.getSymlink === new Path("file:" + file))
+    assert(st.getPath === qp)
+    assert(fields(st).copy(_1 = plain.getPath) === fields(plain))
+  }
 }
