@@ -85,8 +85,7 @@ final class TokenStoreListener(queryName: String, store: TokenStore)
     if (p.name == queryName && p.sources.nonEmpty) {
       val end = p.sources.map(s => Option(s.endOffset).getOrElse("null"))
         .mkString("[", ",", "]")
-      store.save(SavedToken(queryName, end,
-        Timestamp.valueOf(java.time.LocalDateTime.now())))
+      store.save(SavedToken(queryName, end, new Timestamp(System.currentTimeMillis())))
     }
   }
 

@@ -35,18 +35,18 @@ import graft.cdc.{ChangeEventRow, ChangeEvents}
   *    token-only heartbeats advance it exactly like
   *    `watch.py:113-141` / fork P5.
   *
-  * Registered under the short name `graft-replay`. Fixtures are
-  * handed over via an in-memory registry (this is a test/replay
-  * source — a production deployment reads the mongodb connector
-  * through the same `Pipeline.read` seam).
+  * Registered under the short name `graft-replay` (a test/replay
+  * source; a deployment reads the mongodb connector through the same
+  * `Pipeline.read` seam). `register` serializes a fixture's rows once
+  * into an in-memory registry, so a restart does not re-pay the
+  * encoder. A task carries only a fixture name and an index range, and
+  * its reader indexes this JVM's registry: local mode (`local[n]`)
+  * only. Unregister a fixture only after every query reading it has
+  * stopped; a task planned before that fails loudly.
   */
 object ChangeEventReplaySource {
-  // Rows are serialized once, at registration, so a stream restart (a
-  // new ReplayMicroBatchStream over the same fixture) does not re-pay
-  // the driver-side encoder conversion, which takes seconds for large
-  // bench fixtures.
   private val fixtures =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[InternalRow]]
+    scala.collection.concurrent.TrieMap.empty[String, Array[InternalRow]]
 
   // Built once: deriving the encoder reflects over the case class,
   // which costs tens of milliseconds on every call.
@@ -55,14 +55,14 @@ object ChangeEventReplaySource {
   /** Register a fixture; returns the option map selecting it. */
   def register(name: String, rows: Seq[ChangeEventRow]): Map[String, String] = {
     val ser = encoder.createSerializer()
-    fixtures.put(name, rows.map(r => ser(r).copy()).toIndexedSeq)
+    fixtures.put(name, rows.iterator.map(r => ser(r).copy()).toArray)
     Map("fixture" -> name)
   }
 
   /** Drop a fixture (frees driver memory for large bench fixtures). */
   def unregister(name: String): Unit = fixtures.remove(name)
 
-  private[sources] def rows(name: String): IndexedSeq[InternalRow] =
+  private[sources] def rows(name: String): Array[InternalRow] =
     fixtures.getOrElse(name,
       throw new IllegalArgumentException(s"unknown replay fixture: $name"))
 }
@@ -123,10 +123,7 @@ final class ReplayMicroBatchStream(
   require(maxRowsPerBatch > 0, "maxRowsPerBatch must be positive")
   require(numPartitions > 0, "partitions must be positive")
 
-  // A bounded fixture, serialized once at registration (the
-  // production path is the mongodb connector).
-  private lazy val rows: IndexedSeq[InternalRow] =
-    ChangeEventReplaySource.rows(fixtureName)
+  private lazy val size = ChangeEventReplaySource.rows(fixtureName).length.toLong
 
   override def initialOffset(): Offset = SeqOffset(0L)
 
@@ -141,46 +138,47 @@ final class ReplayMicroBatchStream(
       case m: ReadMaxRows => m.maxRows()
       case _ => maxRowsPerBatch.toLong
     }
-    SeqOffset(math.min(rows.length.toLong, s + cap))
+    SeqOffset(math.min(size, s + cap))
   }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) drives this source")
 
-  override def reportLatestOffset(): Offset = SeqOffset(rows.length.toLong)
+  override def reportLatestOffset(): Offset = SeqOffset(size)
 
   override def deserializeOffset(json: String): Offset =
     SeqOffset(json.toLong)
 
   override def commit(end: Offset): Unit = ()
 
+  // Contiguous ranges, in order: per-key order holds.
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SeqOffset].n.toInt
     val e = end.asInstanceOf[SeqOffset].n.toInt
-    val slice = rows.slice(s, e)
-    if (slice.isEmpty) Array.empty
-    else slice.grouped(math.max(1,
-        (slice.length + numPartitions - 1) / numPartitions))
-      .map(g => ReplayPartition(g.toArray): InputPartition).toArray
+    val step = math.max(1, (e - s + numPartitions - 1) / numPartitions)
+    Array.range(s, e, step).map(from =>
+      ReplayPartition(fixtureName, from, math.min(from + step, e)): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+        val ReplayPartition(fixture, from, until) = p
+        val rows = ChangeEventReplaySource.rows(fixture)
         new PartitionReader[InternalRow] {
-          private val it = p.asInstanceOf[ReplayPartition].rows.iterator
-          private var cur: InternalRow = _
-          override def next(): Boolean =
-            if (it.hasNext) { cur = it.next(); true } else false
-          override def get(): InternalRow = cur
+          private var i = from - 1
+          override def next(): Boolean = { i += 1; i < until }
+          override def get(): InternalRow = rows(i)
           override def close(): Unit = ()
         }
+      }
     }
 
   override def stop(): Unit = ()
 }
 
-final case class ReplayPartition(rows: Array[InternalRow])
+/** Events `[from, until)` of the registered fixture `fixture`. */
+final case class ReplayPartition(fixture: String, from: Int, until: Int)
   extends InputPartition

@@ -51,6 +51,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       // wave 1: the 7 golden events → exactly 4 envelopes, ops c,u,u,d
       ChangeEvents.golden(spark).coalesce(1)
         .write.mode(SaveMode.Append).parquet(srcDir)
+      val before = System.currentTimeMillis()
       runOnce()
       val wave1 = received.toSeq
       assert(wave1.length === 4)
@@ -61,7 +62,12 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
       // resume token mirror advanced (C4 parity)
       val tok1 = store.load(settings.streamReaderName)
+      val after = System.currentTimeMillis()
       assert(tok1.nonEmpty, "listener should have saved a token")
+      // the date is the wall clock as an instant, not a local time
+      // re-read through the default zone
+      val saved = tok1.get.date.getTime
+      assert(saved >= before && saved <= after, s"date $saved not in [$before, $after]")
 
       // wave 2: append one more insert; restart from the same
       // checkpoint → ONLY the new event is delivered (no replay of

@@ -1,14 +1,19 @@
 package graft.sources
 
+import java.io.{ByteArrayOutputStream, ObjectOutputStream}
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cdc.{ChangeEvents, EnvelopeTransform, Ns}
+import graft.cdc.{ChangeEvents, EnvelopeTransform, Ns, ResumeToken}
 
 /** The replay MicroBatchStream against the reference reader's
   * contract: deployment-wide scope (S2), batch-size pacing (S3/S5),
-  * and offsets that advance on heartbeat-only events (S6/P5).
+  * and offsets that advance on heartbeat-only events (S6/P5); and its
+  * planning, which hands each task an index range, not rows.
   */
 class ChangeEventReplaySourceSpec extends AnyFunSuite {
 
@@ -78,5 +83,92 @@ class ChangeEventReplaySourceSpec extends AnyFunSuite {
     // second run with the same checkpoint: everything already
     // committed, nothing re-emitted
     assert(run() === 0L)
+  }
+
+  // n distinct events: the golden ones, each with its own token
+  private def numbered(n: Int) = (0 until n).map { i =>
+    val e = ChangeEvents.goldenEvents(i % ChangeEvents.goldenEvents.length)
+    e.copy(_id = ResumeToken(f"$i%08X"))
+  }
+
+  private def plan(fixture: String, partitions: Int, start: Long, end: Long) =
+    new ReplayMicroBatchStream(fixture, 1000, partitions)
+      .planInputPartitions(SeqOffset(start), SeqOffset(end))
+
+  private def read(stream: ReplayMicroBatchStream, p: InputPartition) = {
+    val r = stream.createReaderFactory().createReader(p)
+    val out = Iterator.continually(r).takeWhile(_.next()).map(_.get()).toVector
+    r.close()
+    out
+  }
+
+  private def serializedBytes(p: InputPartition): Int = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(p)
+    out.close()
+    bytes.size()
+  }
+
+  // (fixture rows, partitions, start, end)
+  private val planCases = Seq(
+    (10, 4, 0, 10), (3, 4, 0, 3), (10, 4, 5, 5), (11, 2, 10, 11),
+    (8, 4, 0, 8), (100, 3, 7, 57), (50000, 4, 0, 50000))
+
+  test("planning: contiguous ranges in order, exactly covering [start, end)") {
+    for ((n, partitions, start, end) <- planCases) {
+      val fixture = s"plan-$n-$partitions-$start-$end"
+      ChangeEventReplaySource.register(fixture, numbered(n))
+      try {
+        val clue = s"rows=$n partitions=$partitions [$start, $end)"
+        val parts = plan(fixture, partitions, start, end)
+        assert(parts.length <= partitions, clue)
+        assert(parts.toSeq === plan(fixture, partitions, start, end).toSeq,
+          s"$clue: two calls planned differently")
+        val ranges = parts.toSeq.map { case ReplayPartition(f, from, until) =>
+          assert(f === fixture, clue)
+          (from, until)
+        }
+        // the boundaries of grouping the batch's rows into
+        // ceil(size / partitions) runs
+        val step = math.max(1, (end - start + partitions - 1) / partitions)
+        assert(ranges === (start until end).grouped(step)
+          .map(g => (g.head, g.last + 1)).toSeq, clue)
+        // non-empty, contiguous, in order, exactly [start, end)
+        assert(ranges.forall { case (from, until) => from < until } &&
+          ranges.flatMap { case (from, until) => Range(from, until) } ===
+            (start until end), clue)
+        // the readers return the fixture's rows [start, end) in order
+        val stream = new ReplayMicroBatchStream(fixture, 1000, partitions)
+        val got: Seq[InternalRow] = parts.toSeq.flatMap(read(stream, _))
+        assert(got === ChangeEventReplaySource.rows(fixture).slice(start, end).toSeq,
+          clue)
+      } finally ChangeEventReplaySource.unregister(fixture)
+    }
+  }
+
+  test("planning: a partition serializes to under 1 KB, whatever the batch size") {
+    for ((n, partitions, start, end) <- planCases) {
+      val fixture = s"size-$n-$partitions-$start-$end"
+      ChangeEventReplaySource.register(fixture, numbered(n))
+      try {
+        val sizes = plan(fixture, partitions, start, end).map(serializedBytes)
+        assert(sizes.forall(_ < 1024),
+          s"rows=$n [$start, $end): partition bytes ${sizes.mkString(",")}")
+      } finally ChangeEventReplaySource.unregister(fixture)
+    }
+  }
+
+  test("a reader of a fixture unregistered after planning fails, naming it") {
+    val fixture = "unregistered-after-planning"
+    ChangeEventReplaySource.register(fixture, numbered(10))
+    val stream = new ReplayMicroBatchStream(fixture, 1000, 2)
+    val parts = stream.planInputPartitions(SeqOffset(0), SeqOffset(10))
+    assert(parts.nonEmpty)
+    ChangeEventReplaySource.unregister(fixture)
+    for (p <- parts) {
+      val e = intercept[IllegalArgumentException](read(stream, p))
+      assert(e.getMessage.contains(fixture), e.getMessage)
+    }
   }
 }
