@@ -41,8 +41,8 @@ import graft.cdc.{ChangeEventRow, ChangeEvents}
   * into an in-memory registry, so a restart does not re-pay the
   * encoder. A task carries only a fixture name and an index range, and
   * its reader indexes this JVM's registry: local mode (`local[n]`)
-  * only. Unregister a fixture only after every query reading it has
-  * stopped; a task planned before that fails loudly.
+  * only. Unregister or shorten a fixture only after every query reading
+  * it has stopped; a task planned before that fails loudly.
   */
 object ChangeEventReplaySource {
   private val fixtures =
@@ -141,9 +141,8 @@ final class ReplayMicroBatchStream(
     SeqOffset(math.min(size, s + cap))
   }
 
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) drives this source")
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) drives this source")
 
   override def reportLatestOffset(): Offset = SeqOffset(size)
 
@@ -167,6 +166,8 @@ final class ReplayMicroBatchStream(
       override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
         val ReplayPartition(fixture, from, until) = p
         val rows = ChangeEventReplaySource.rows(fixture)
+        require(until <= rows.length,
+          s"replay fixture $fixture has ${rows.length} rows, a task wants [$from, $until)")
         new PartitionReader[InternalRow] {
           private var i = from - 1
           override def next(): Boolean = { i += 1; i < until }

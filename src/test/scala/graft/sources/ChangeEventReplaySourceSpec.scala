@@ -171,4 +171,20 @@ class ChangeEventReplaySourceSpec extends AnyFunSuite {
       assert(e.getMessage.contains(fixture), e.getMessage)
     }
   }
+
+  test("a reader of a fixture re-registered shorter after planning fails, naming it") {
+    val fixture = "shortened-after-planning"
+    ChangeEventReplaySource.register(fixture, numbered(10))
+    try {
+      val stream = new ReplayMicroBatchStream(fixture, 1000, 2)
+      val parts = stream.planInputPartitions(SeqOffset(0), SeqOffset(10))
+      // a restart replays the logged batch [0, 10) against 7 rows
+      ChangeEventReplaySource.register(fixture, numbered(7))
+      val Array(first, second) = parts
+      assert(read(stream, first).length === 5)
+      val e = intercept[IllegalArgumentException](read(stream, second))
+      assert(e.getMessage.contains(fixture) && e.getMessage.contains("7 rows"),
+        e.getMessage)
+    } finally ChangeEventReplaySource.unregister(fixture)
+  }
 }

@@ -1,32 +1,35 @@
 #!/usr/bin/env python3
 """Summarize alternating perfbench pairs: a parent checkout against a change.
 
-Usage: python3 tools/pairs.py <dir> [--parent NAME] [--benchmark PATH]
+Usage: python3 tools/pairs.py <dir>
 
-<dir> holds the last-line JSON results of `perfbench/run.py`, one file per
-run, named `<side>-<seed>.json`, where <side> is the basename of the
-checkout that ran it. Runs of one workload sit in `<dir>/<workload>/`;
-files directly in <dir> are taken as one workload named after <dir>.
-The side called `parent` (see --parent) is the baseline; there must be
-exactly one other side.
+<dir> holds one subdirectory per workload; each holds the last-line JSON
+results of `perfbench/run.py`, one file per run, named
+`<side>-<seed>.json`, where <side> is the basename of the checkout that
+ran it. The side called `parent` is the baseline; there must be exactly
+one other side.
 
-For each workload and each end-to-end metric in BENCHMARK.json (read,
-never written) it prints a markdown table row: the parent's median,
-quartiles (linear interpolation) and min-max, the change's median and
-quartiles, the change/parent ratio of medians, the change's wins over
-the pairs (seeds run by both sides) and whether the metric is resolved,
-i.e. the parent's own min-max range, relative to its median, is inside
-the metric's bound. Below each table it names the metrics whose change
-median is worse than the parent's by more than the bound, the metrics
-that meet the gain rule (wins in >= 9 of 10 pairs and a median gap
-above the parent's interquartile range), and every run that is not
-correct, has failed events or printed no result.
+For each workload and each end-to-end metric in the repo's
+BENCHMARK.json (read, never written) it prints a markdown table row: the
+parent's median, quartiles (linear interpolation) and min-max, the
+change's median and quartiles, the change/parent ratio of medians, the
+change's wins over the pairs (seeds run by both sides) and whether the
+metric is resolved: the parent's own min-max range, relative to its
+median, is inside the metric's bound, or the change's min-max range lies
+wholly on the better side of the parent's. Below each table it names
+the metrics whose change median is worse than the parent's by more than
+the bound, the metrics that meet the gain rule (at least ten pairs, wins
+in >= 9 of 10 of them and a median gap above the parent's interquartile
+range), and every run that is not correct, has failed events or printed
+no result.
 """
-import argparse
 import json
 import os
 import statistics
 import sys
+
+PARENT = "parent"
+BENCHMARK = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json")
 
 
 def quartiles(xs):
@@ -63,11 +66,7 @@ def load_runs(folder):
 def workloads(root):
     subs = sorted(d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d)))
     found = [(d, load_runs(os.path.join(root, d))) for d in subs]
-    found = [(d, r) for d, r in found if r]
-    top = load_runs(root)
-    if top:
-        found.insert(0, (os.path.basename(os.path.abspath(root)), top))
-    return found
+    return [(d, r) for d, r in found if r]
 
 
 def value(res, name):
@@ -76,14 +75,14 @@ def value(res, name):
     return (res.get("metrics", {}).get(name) or {}).get("value")
 
 
-def table(name, runs, parent, metrics):
-    others = [s for s in runs if s != parent]
-    if parent not in runs or len(others) != 1:
-        sys.exit(f"{name}: expected side '{parent}' and one other side, got {sorted(runs)}")
+def table(name, runs, metrics):
+    others = [s for s in runs if s != PARENT]
+    if PARENT not in runs or len(others) != 1:
+        sys.exit(f"{name}: expected side '{PARENT}' and one other side, got {sorted(runs)}")
     change = others[0]
-    p_runs, c_runs = runs[parent], runs[change]
+    p_runs, c_runs = runs[PARENT], runs[change]
     seeds = sorted(set(p_runs) & set(c_runs))
-    print(f"### {name}: {change} vs {parent}, {len(seeds)} pairs "
+    print(f"### {name}: {change} vs {PARENT}, {len(seeds)} pairs "
           f"(seeds {', '.join(map(str, seeds))})\n")
     print("| metric | parent median | parent quartiles | parent min-max | change median "
           "| change quartiles | change/parent | change wins | resolved |")
@@ -102,7 +101,9 @@ def table(name, runs, parent, metrics):
         pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
         wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
         spread = (max(pv) - min(pv)) / pmed if pmed else float("inf")
+        apart = max(cv) < min(pv) if lower else min(cv) > max(pv)
         resolved = "yes" if spread <= bound else \
+            "yes (ranges apart)" if apart else \
             f"no (parent range {spread:.0%} > bound {bound:.0%})"
         ratio = cmed / pmed if pmed else float("nan")
         print(f"| {key} | {fmt(pmed)} | {fmt(pq1)}-{fmt(pq3)} | {fmt(min(pv))}-{fmt(max(pv))} "
@@ -110,15 +111,16 @@ def table(name, runs, parent, metrics):
               f"| {resolved} |")
         if (ratio - 1 if lower else 1 - ratio) > bound:
             worse.append(f"{key} ({ratio:.3f})")
-        if wins * 10 >= 9 * len(pairs) and abs(cmed - pmed) > pq3 - pq1 \
+        if len(pairs) >= 10 and wins * 10 >= 9 * len(pairs) \
+                and abs(cmed - pmed) > pq3 - pq1 \
                 and (cmed < pmed if lower else cmed > pmed):
             gains.append(key)
     print()
     print(f"Worse than the parent by more than the bound: {', '.join(worse) or 'none'}.")
-    print(f"Gain rule met (>= 9 of 10 wins, median gap > parent IQR): "
+    print(f"Gain rule met (>= 10 pairs, >= 9 of 10 wins, median gap > parent IQR): "
           f"{', '.join(gains) or 'none'}.")
     bad = []
-    for side in (parent, change):
+    for side in (PARENT, change):
         for seed, res in sorted(runs[side].items()):
             if res is None:
                 bad.append(f"{side}-{seed}: no result")
@@ -134,18 +136,15 @@ def table(name, runs, parent, metrics):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("dir")
-    ap.add_argument("--parent", default="parent", help="side name of the parent checkout")
-    ap.add_argument("--benchmark", default=os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "BENCHMARK.json"))
-    a = ap.parse_args()
-    with open(a.benchmark) as fh:
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    root = sys.argv[1]
+    with open(BENCHMARK) as fh:
         metrics = json.load(fh)["end_to_end"]
-    found = workloads(a.dir)
+    found = workloads(root)
     if not found:
-        sys.exit(f"no <side>-<seed>.json results under {a.dir}")
-    ok = all([table(name, runs, a.parent, metrics) for name, runs in found])
+        sys.exit(f"no <workload>/<side>-<seed>.json results under {root}")
+    ok = all([table(name, runs, metrics) for name, runs in found])
     sys.exit(0 if ok else 1)
 
 
