@@ -224,6 +224,12 @@ object Bench {
     * the two populations — ~17% above the calm maximum, strictly
     * below the measured contention floor (an r11 cut used 1.7, which
     * would have stamped a 1.65-1.7× contention ratio as agreed).
+    * Every ratio above was measured while `p1_cdc_envelope` ended in a
+    * global sort that the batch sample timed too. Without it, on a
+    * 4-core host at sf0.1 (5 runs a side), the ratio moved from
+    * 0.42-0.62 (below the band in all five) to 1.07-1.78 (inside the
+    * band in four, above [[BatchHighRatio]] in one). No calm ratio
+    * without the sort has been recorded yet.
     */
   private[graft] val BatchLowSlack = 1.25
   private[graft] val BatchHighRatio = 1.6

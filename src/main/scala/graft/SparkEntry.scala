@@ -35,7 +35,10 @@ object SparkEntry {
     EnvelopeTransform(ev, topicPrefix = "graft")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Row order
+    * is not part of a query's result: a query sorts only where a
+    * limit, a top-k or a window consumes the order.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CdcQueries.queries ++ RelationalQueries.queries ++
       TextQueries.queries ++ DedupQueries.queries ++

@@ -62,8 +62,7 @@ object AdvancedQueries {
     * like the component indexes it joins. The stage name embeds the
     * k-means cell knob (the one session knob the semantic component
     * depends on) — a tuned session can never read a stale verdict.
-    * Row order is unspecified (parquet read-back); the pipe_curate
-    * query re-applies its ORDER BY.
+    * Row order is unspecified (parquet read-back).
     */
   private def curateVerdict(s: SparkSession, d: String): DataFrame =
     StagedIndex.orStage(s,
@@ -101,8 +100,7 @@ object AdvancedQueries {
     * snapshot and scanned back (at 100 TB the session table is the
     * canonical derived artifact every product-analytics query joins,
     * not something each query re-derives from raw events). Stage name
-    * embeds the gap knob; row order unspecified — consumers re-apply
-    * their ORDER BY.
+    * embeds the gap knob; row order unspecified.
     */
   private def sessionsTable(s: SparkSession, d: String): DataFrame =
     StagedIndex.orStage(s, s"rel_sessions_v1_g$SessionGapMs", d,
@@ -138,7 +136,7 @@ object AdvancedQueries {
     // before packing. Scale shape: three doc-keyed equi-joins of
     // per-doc verdict tables, each of which already has a bounded
     // plan; nothing new shuffles beyond the id joins.
-    "pipe_curate" -> ((s, d) => curateVerdict(s, d).orderBy("doc_id")),
+    "pipe_curate" -> (curateVerdict(_, _)),
 
     // Curation verdict → packed training rows: the end-to-end hop a
     // training-data pipeline actually ships. The kept id set from
@@ -213,7 +211,6 @@ object AdvancedQueries {
       pack.join(split, "doc_id").join(curr, "doc_id")
         .select(col("doc_id"), col("lang"), col("split"),
           col("n_tokens"), col("bin"), col("offset"), col("pos"))
-        .orderBy("doc_id")
     }),
 
     "pipe_curriculum" -> ((s, d) => {
@@ -225,7 +222,6 @@ object AdvancedQueries {
       GroupRank.rank(base, "g0",
           Seq(col("decile").asc, col("h").asc, col("doc_id").asc))
         .select(col("doc_id"), col("decile"), col("rn").alias("pos"))
-        .orderBy("pos")
     }),
 
     // Leakage-safe train/valid/test split: the split is a
@@ -256,7 +252,6 @@ object AdvancedQueries {
           when(col("bucket") < 80L, "train")
             .when(col("bucket") < 90L, "valid")
             .otherwise("test"))
-        .orderBy("doc_id")
     }),
 
     // The curation dashboard: per-(lang, source) funnel counts — how
@@ -313,7 +308,6 @@ object AdvancedQueries {
           sum(when(col("kept"), 1L).otherwise(0L)).alias("kept"),
           sum(when(col("kept"), col("n_tokens")).otherwise(0L))
             .alias("kept_tokens"))
-        .orderBy("lang", "source")
     }),
 
     // Epoch plan under a token budget (Muennighoff et al. 2023,
@@ -364,7 +358,6 @@ object AdvancedQueries {
         .select(col("source"), col("kept_docs"), col("kept_tokens"),
           col("wt"), col("alloc_tokens"), col("plan_tokens"),
           col("epochs"), col("capped"))
-        .orderBy("source")
     }),
 
     // Joint text+media curation (the LAION-style multimodal funnel):
@@ -389,7 +382,6 @@ object AdvancedQueries {
         .select(col("media_id"), col("keep_quality"), col("keeper"),
           col("is_dup_media"),
           (col("keep_quality") && !col("is_dup_media")).alias("kept"))
-        .orderBy("media_id")
     }),
 
     // Ordered event funnel: first signup, then the first click within
@@ -427,7 +419,6 @@ object AdvancedQueries {
           col("t_purchase"),
           col("t_click").isNotNull.alias("reached_click"),
           col("t_purchase").isNotNull.alias("reached_purchase"))
-        .orderBy("user_id")
     }),
 
     // Cohort retention: users cohorted by signup day; a cohort member
@@ -456,7 +447,6 @@ object AdvancedQueries {
       active.groupBy("cohort_day", "offset")
         .agg(count(lit(1)).alias("retained"))
         .filter(col("offset") <= 7)
-        .orderBy("cohort_day", "offset")
     }),
 
     // As-of join: for every event, the most recent order of the same
@@ -496,7 +486,6 @@ object AdvancedQueries {
         .filter(col("kind") === 1)
         .select(col("event_id"), col("user_id"), col("ms"),
           col("asof_orderkey"), col("asof_cents"))
-        .orderBy("event_id")
     }),
 
     // Range (band) join: orders against a 6-row price-band dim on a
@@ -513,7 +502,6 @@ object AdvancedQueries {
       o.join(broadcast(bands), col("c").between(col("lo"), col("hi")))
         .groupBy("band")
         .agg(count(lit(1)).alias("n"), sum(col("c")).alias("sum_cents"))
-        .orderBy("band")
     }),
 
     // Discrete percentiles (p50/p90/p99 of order value per priority):
@@ -566,7 +554,6 @@ object AdvancedQueries {
             <= 0.05).alias("p50_within_tol"),
           (abs(col("a90") - col("p90")).cast("double") / col("p90")
             <= 0.05).alias("p90_within_tol"))
-        .orderBy("o_orderpriority")
     }),
 
     "rel_percentiles" -> ((s, d) => {
@@ -587,7 +574,6 @@ object AdvancedQueries {
           pick(1, 2).alias("p50"),
           pick(9, 10).alias("p90"),
           pick(99, 100).alias("p99"))
-        .orderBy("o_orderpriority")
     }),
 
     // Exact percentiles WITHOUT any per-group sort — the two-pass
@@ -631,14 +617,12 @@ object AdvancedQueries {
           min(when(col("p") === "p50", col("c"))).alias("p50"),
           min(when(col("p") === "p90", col("c"))).alias("p90"),
           min(when(col("p") === "p99", col("c"))).alias("p99"))
-        .orderBy("o_orderpriority")
     }),
 
     // Batch sessionization: per-user 30-min-gap sessions via lag +
     // running new-session count. One shuffle on user_id; the batch
     // analogue of streaming/EventTimeOps session windows.
-    "s7_sessions" -> ((s, d) =>
-      sessionsTable(s, d).orderBy("user_id", "session_no")),
+    "s7_sessions" -> (sessionsTable(_, _)),
 
     // Top event paths: the most common 3-step event-type sequences
     // across per-user ordered streams — the product-analytics "what do
@@ -709,7 +693,6 @@ object AdvancedQueries {
         .select(col("day"),
           greatest(col("peak_in_day"), col("carry_in"))
             .alias("peak_concurrency"))
-        .orderBy("day")
     }))
 
   // one oracle for both exact-percentile algorithms (rank-based and

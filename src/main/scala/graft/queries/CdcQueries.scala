@@ -57,7 +57,6 @@ object CdcQueries {
         coalesce(max(col("late_ms")), lit(0L)).alias("max_late_ms"),
         countDistinct(when(col("late_ms").isNotNull, col("user_id")))
           .alias("n_late_users"))
-      .orderBy("op_type")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -68,14 +67,12 @@ object CdcQueries {
       events(s, d)
         .filter(col("event_id") >= 100 && col("event_id") < 1100)
         .select(col("event_id"), col("user_id"),
-          round(col("value") * 100, 0).cast(LongType).alias("cents"))
-        .orderBy("event_id")),
+          round(col("value") * 100, 0).cast(LongType).alias("cents"))),
 
     "f1_optype_filter" -> ((s, d) =>
       events(s, d)
         .filter(col("event_type").isin(dataTypes: _*))
-        .select(col("event_id"), col("event_type"), col("user_id"))
-        .orderBy("event_id")),
+        .select(col("event_id"), col("event_type"), col("user_id"))),
 
     // P1/P2: CDC envelope projection (`change_event_handler.py:84-113`)
     // op map analog: purchase→c, click/view→u, signup→d.
@@ -89,8 +86,7 @@ object CdcQueries {
             .when(col("event_type").isin("click", "view"), "u")
             .otherwise("d").alias("op"),
           col("props").alias("after"),
-          round(col("value") * 100, 0).cast(LongType).alias("value_cents"))
-        .orderBy("event_id")),
+          round(col("value") * 100, 0).cast(LongType).alias("value_cents"))),
 
     // P3: topic routing (`change_event_handler.py:84-91`)
     // coalesce pins NULL semantics: Spark concat nulls the whole
@@ -99,8 +95,7 @@ object CdcQueries {
       events(s, d)
         .groupBy(concat(lit("cdc.events."),
           coalesce(col("event_type"), lit(""))).alias("topic"))
-        .agg(count(lit(1)).alias("n"))
-        .orderBy("topic")),
+        .agg(count(lit(1)).alias("n"))),
 
     // P4: byte-sum-mod-N producer routing (`change_handler.py:77-81`)
     // via the codegen ByteSumMod expression.
@@ -108,8 +103,7 @@ object CdcQueries {
       events(s, d)
         .select(ByteSumMod(col("user_id").cast("string"), 8).alias("part_id"))
         .groupBy("part_id")
-        .agg(count(lit(1)).alias("n"))
-        .orderBy("part_id")),
+        .agg(count(lit(1)).alias("n"))),
 
     // S6: monotonic sequence numbering (`watch.py:113-141`) — here the
     // per-key variant that matters for ordering guarantees.
@@ -118,8 +112,7 @@ object CdcQueries {
         .select(col("event_id"), col("user_id"))
         .withColumn("seq",
           row_number().over(
-            Window.partitionBy("user_id").orderBy("event_id")).cast(LongType))
-        .orderBy("event_id")),
+            Window.partitionBy("user_id").orderBy("event_id")).cast(LongType))),
 
     // C1: contiguous-prefix commit watermark
     // (`committing/commit_processing.py:96-118`): the highest event id
@@ -148,8 +141,7 @@ object CdcQueries {
           count(lit(1)).alias("n"),
           sum(when(col("event_type") =!= "error", 1L).otherwise(0L))
             .alias("confirmed"),
-          max(col("event_id")).alias("token"))
-        .orderBy("batch")),
+          max(col("event_id")).alias("token"))),
 
     // Snapshot materialization — the canonical downstream of a change
     // stream: last-writer-wins per documentKey, tombstones ('d')
@@ -169,7 +161,6 @@ object CdcQueries {
           max_by(col("doc"), col("event_id")).alias("doc"),
           max_by(col("cents"), col("event_id")).alias("cents"))
         .filter(col("op") =!= "d")
-        .orderBy("user_id")
     }),
 
     // SCD type-2 history build: each data event becomes a validity
@@ -184,7 +175,6 @@ object CdcQueries {
         .select(col("user_id"), col("event_id").alias("valid_from"),
           col("op"), col("cents"))
         .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-        .orderBy("user_id", "valid_from")
     }),
 
     // Incremental view maintenance from the change stream: a per-bucket
@@ -240,7 +230,6 @@ object CdcQueries {
           (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L)))
             .alias("sum_cents"))
         .filter(col("n_users") > 0)
-        .orderBy("bucket")
     }),
 
     // Snapshot reconciliation — the audit a CDC consumer runs when
@@ -275,8 +264,7 @@ object CdcQueries {
         .agg(count(lit(1)).alias("n_events"),
           min(col("event_id")).alias("first_id"),
           max(col("event_id")).alias("last_id"),
-          countDistinct(col("user_id")).alias("n_keys"))
-        .orderBy("topic", "op")),
+          countDistinct(col("user_id")).alias("n_keys"))),
 
     // Sequence-gap detection — the contiguity question at the heart
     // of the reference's commit protocol (`committing/
@@ -323,7 +311,6 @@ object CdcQueries {
         .select(explode(sequence(col("bstart"), col("bend")))
           .alias("event_id"))
         .join(data, Seq("event_id"), "left_anti")
-        .orderBy("event_id")
     }),
 
     "cdc_reconcile" -> ((s, d) => {
@@ -355,7 +342,6 @@ object CdcQueries {
         .groupBy("status")
         .agg(count(lit(1)).alias("n_keys"),
           sum(col("drift")).alias("cents_drift"))
-        .orderBy("status")
     }),
 
     // Out-of-order-arrival profile — the measurement a streaming
@@ -419,7 +405,6 @@ object CdcQueries {
           coalesce(col("state_id"), lit(-1L)).alias("state_id"),
           coalesce(col("state_op"), lit("none")).alias("state_op"),
           coalesce(col("state_cents"), lit(0L)).alias("state_cents"))
-        .orderBy("event_id")
     }))
 
   /** The change stream projected to last-writer-wins inputs: data ops

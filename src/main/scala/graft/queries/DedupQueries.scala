@@ -353,8 +353,7 @@ object DedupQueries {
           md5(concat_ws(" ", slice(split(col("text"), " "), 1, 5)))
             .alias("k"))
         .groupBy("k")
-        .agg(min(col("doc_id")).alias("keeper"), count(lit(1)).alias("n"))
-        .orderBy("keeper")),
+        .agg(min(col("doc_id")).alias("keeper"), count(lit(1)).alias("n"))),
 
     // N-gram Jaccard near-dup: inverted shingle index self-join,
     // exact |A∩B| / |A∪B| over the df-capped shingle universe (see
@@ -377,7 +376,6 @@ object DedupQueries {
         .filter(col("jac") >= 0.3)
         .select(col("ida"), col("idb"), col("common"), col("sa"),
           col("sb"), col("jac"))
-        .orderBy("ida", "idb")
     }),
 
     // N-gram CONTAINMENT near-dup (Broder's asymmetric measure):
@@ -403,7 +401,6 @@ object DedupQueries {
         .filter(col("max_cont") >= 0.5)
         .select(col("ida"), col("idb"), col("common"),
           col("cont_a"), col("cont_b"), col("max_cont"))
-        .orderBy("ida", "idb")
     }),
 
     // MinHash+LSH candidate pairs: 32 portable hash permutations,
@@ -417,8 +414,7 @@ object DedupQueries {
       // dd_cross_dedup / dd_sketch_error); this query is its report
       lshAgreePairs(s, d)
         .select(col("ida"), col("idb"), col("agree"),
-          (col("agree") / lit(K.toLong)).alias("est_jaccard"))
-        .orderBy("ida", "idb")),
+          (col("agree") / lit(K.toLong)).alias("est_jaccard"))),
 
     // Sketch-calibration histogram: |minhash-estimated − exact|
     // Jaccard error over the LSH candidate pairs, in 5%-wide buckets
@@ -435,8 +431,7 @@ object DedupQueries {
     // candidates that collide in a band WITHOUT sharing a (surviving)
     // shingle take the zero-overlap left-join branch.
     "dd_sketch_error" -> ((s, d) => {
-      // the staged pair spine directly (dd_minhash_lsh minus its
-      // report-only ORDER BY — no sort feeding an aggregation)
+      // the staged pair spine directly, as dd_minhash_lsh reports it
       val est = lshAgreePairs(s, d)
         .select(col("ida"), col("idb"), col("agree"))
       val sizes = cappedSizes(s, d)
@@ -463,7 +458,6 @@ object DedupQueries {
           expr("abs(est_micro - exact_micro) div 50000"))
         .groupBy("err_bucket")
         .agg(count(lit(1)).alias("n_pairs"))
-        .orderBy("err_bucket")
     }),
 
     // Banding-geometry sweep — the S-curve tuning table for the LSH
@@ -504,7 +498,6 @@ object DedupQueries {
         .withColumn("precision_ppm",
           when(col("n_candidates") > 0,
             expr("n_verified * 1000000 div n_candidates")).otherwise(0L))
-        .orderBy("bands")
     }),
 
     // SimHash: 16-bit signed-sum fingerprint over word hashes.
@@ -520,7 +513,7 @@ object DedupQueries {
       val sim = (0 until 16).map { j =>
         when(col(s"s$j") > 0, 1L << j).otherwise(0L)
       }.reduce(_ + _)
-      agg.select(col("doc_id"), sim.alias("simhash")).orderBy("doc_id")
+      agg.select(col("doc_id"), sim.alias("simhash"))
     }),
 
     // Near-dup clustering: connected components over the LSH candidate
@@ -534,8 +527,7 @@ object DedupQueries {
     // the corpus), never a corpus-wide operation.
     "dd_cluster" -> ((s, d) =>
       clusterLabels(s, d)
-        .select(col("id").alias("doc_id"), col("label").alias("cluster_id"))
-        .orderBy("doc_id")),
+        .select(col("id").alias("doc_id"), col("label").alias("cluster_id"))),
 
     // Near-dup component SIZE HISTOGRAM — the dataset-card table that
     // says whether duplication is a long tail of pairs or a few
@@ -560,7 +552,6 @@ object DedupQueries {
           (col("tot") - col("pr")).alias("n_clusters"))
       hist.unionByName(singles)
         .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
-        .orderBy("cluster_size")
     }),
 
     // Eval-set decontamination: flag every training document sharing
@@ -617,7 +608,6 @@ object DedupQueries {
           when(col("n_spans") > 0,
             col("n_dup_spans").cast("double") / col("n_spans"))
             .otherwise(0.0))
-        .orderBy("doc_id")
     }),
 
     // r13 probe (the r12 "noted, not changed" settled by measurement):
@@ -640,7 +630,6 @@ object DedupQueries {
         .join(broadcast(probe), "gh")
         .groupBy("doc_id")
         .agg(count(lit(1)).alias("n_shared"))
-        .orderBy("doc_id")
     }),
 
     // Incremental cross-snapshot dedup: dedupe a NEW crawl snapshot
@@ -681,7 +670,6 @@ object DedupQueries {
           when(col("is_exact"), "exact")
             .when(col("is_near"), "near")
             .otherwise("keep").alias("verdict"))
-        .orderBy("doc_id")
     }),
 
     // The end-to-end dedup operator a training-data pipeline actually
@@ -714,7 +702,6 @@ object DedupQueries {
           coalesce(col("label"), col("doc_id")).alias("keeper"),
           (coalesce(col("label"), col("doc_id")) =!= col("doc_id"))
             .alias("is_dup"))
-        .orderBy("doc_id")
     }),
 
     // Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003 — the
@@ -747,7 +734,6 @@ object DedupQueries {
         .groupBy("ida", "idb")
         .agg(count(lit(1)).alias("shared"))
         .filter(col("shared") >= 2L)
-        .orderBy("ida", "idb")
     }),
 
     // Cross-method agreement matrix: how much do the five pair-
@@ -805,7 +791,6 @@ object DedupQueries {
           (col("n1") + col("n2") - coalesce(col("n_both"), lit(0L)))
             .alias("n_either"))
         .withColumn("jac_micro", expr("(n_both * 1000000) div n_either"))
-        .orderBy("m1", "m2")
     }))
 
   /** Verify-stage threshold: signature agreement (of K) at or above
@@ -884,7 +869,6 @@ object DedupQueries {
         when(col("is_exact"), "exact")
           .when(col("is_near"), "near")
           .otherwise("keep").alias("verdict"))
-      .orderBy("doc_id")
   }
 
   /** One large-star step: every node u connects its strictly-larger

@@ -117,22 +117,19 @@ object MultimodalQueries {
       Multimodal.extractFeatures(
         Multimodal.asMedia(s, Tables.documents(s, d)),
         decoder(s))
-        .toDF()
-        .orderBy("media_id")),
+        .toDF()),
 
     "mm_frames" -> ((s, d) =>
       Multimodal.sampleFrames(
         Multimodal.asMedia(s, Tables.documents(s, d)),
         chunkBytes = 32, stride = 2)
-        .toDF()
-        .orderBy("media_id", "frame_no")),
+        .toDF()),
 
     "mm_resize" -> ((s, d) =>
       Multimodal.resize(
         Multimodal.asMedia(s, Tables.documents(s, d)),
         stride = 4, decoder(s))
-        .toDF()
-        .orderBy("media_id")),
+        .toDF()),
 
     // Perceptual-hash near-duplicate candidates: aHash every payload
     // through the decoder seam (stub: sampled bytes; imageio: real
@@ -142,8 +139,7 @@ object MultimodalQueries {
     // shape: hash is one decoder pass at scan speed; the pair scan
     // only ever meets inside a band bucket (never all-pairs), and the
     // Hamming rerank is two integer ops per candidate.
-    "mm_phash" -> ((s, d) =>
-      phashPairs(s, d).orderBy("ida", "idb")),
+    "mm_phash" -> (phashPairs(_, _)),
 
     // Hamming-distance histogram over the banded candidate pairs —
     // the threshold-tuning table for mm_dedup (where does the
@@ -157,8 +153,7 @@ object MultimodalQueries {
       phashPairs(s, d)
         .groupBy("hamming")
         .agg(count(lit(1)).alias("n_pairs"))
-        .withColumn("within", col("hamming") <= MmHamThresh)
-        .orderBy("hamming")),
+        .withColumn("within", col("hamming") <= MmHamThresh)),
 
     // Media dedup verdict: the image-side twin of dd_cluster +
     // dd_dedup_verdict. pHash pairs at Hamming ≤ MmHamThresh are
@@ -177,7 +172,6 @@ object MultimodalQueries {
           coalesce(col("keeper"), col("media_id")).alias("keeper"),
           (coalesce(col("keeper"), col("media_id")) < col("media_id"))
             .alias("is_dup"))
-        .orderBy("media_id")
     }),
 
     // Shot-boundary (scene-cut) detection — the video-pipeline step
@@ -207,7 +201,6 @@ object MultimodalQueries {
           coalesce(max(col("delta")), lit(0L)).alias("max_delta"),
           min(when(col("delta") > SceneCutThresh, col("frame_no")))
             .alias("first_cut"))
-        .orderBy("media_id")
     }),
 
     // Keyframe extraction — the sampler output a captioning or
@@ -236,7 +229,6 @@ object MultimodalQueries {
           min(col("frame_no")).alias("keyframe"),
           count(lit(1)).alias("n_frames"),
           expr("sum(luma) * 1000000 div count(1)").alias("mean_luma_micro"))
-        .orderBy("media_id", "shot_no")
     }))
 
   private val fpSql = (e: String) =>

@@ -112,7 +112,6 @@ object RelationalQueries {
           expr("((n_both * 1000000 div n_a) * n_total) div n_b"))
         .select(col("part_a"), col("part_b"), col("n_both"),
           col("n_a"), col("n_b"), col("lift_micro"))
-        .orderBy(col("n_both").desc, col("part_a").asc, col("part_b").asc)
     }),
 
     // Cohort lifetime-value table — the subscription-analytics
@@ -151,7 +150,6 @@ object RelationalQueries {
         .agg(count(lit(1)).alias("n_customers"),
           sum(col("n")).alias("n_orders"),
           sum(col("rc")).alias("rev_cents"))
-        .orderBy("cohort", "offset_m")
     }),
 
     // The full SQL rank-statistics family — row_number, ntile(4),
@@ -188,7 +186,6 @@ object RelationalQueries {
             expr("(rn - 1) * 1000000 div (grp_n - 1)")).otherwise(0L)
             .alias("pct_rank_micro"),
           expr("rn * 1000000 div grp_n").alias("cume_dist_micro"))
-        .orderBy("nationkey", "rn")
     }),
 
     // Weekly seasonality profile — the (day-of-week × hour) heatmap
@@ -213,7 +210,6 @@ object RelationalQueries {
         .withColumn("share_ppm", expr("n * 1000000 div n_tot"))
         .select(col("dow"), col("hour"), col("n"), col("cents_sum"),
           col("share_ppm"))
-        .orderBy("dow", "hour")
     }),
 
     // ABC (Pareto) classification of parts by revenue contribution —
@@ -243,7 +239,6 @@ object RelationalQueries {
             .otherwise("C"))
         .select(col("l_partkey"), col("rev_cents"),
           col("run").alias("cum_cents"), col("abc_class"))
-        .orderBy("l_partkey")
     }),
 
     // TPC-H Q1-style full-scan aggregation with map-side combine.
@@ -255,8 +250,7 @@ object RelationalQueries {
           sum(cents(col("l_extendedprice"))).alias("price_cents"),
           sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
             .alias("revenue_cents"),
-          count(lit(1)).alias("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
+          count(lit(1)).alias("n"))),
 
     // Fact-to-dimension join chain; both dims broadcast → zero shuffle
     // of the orders fact beyond the final (tiny) group-by.
@@ -270,7 +264,6 @@ object RelationalQueries {
         .agg(
           count(lit(1)).alias("n_orders"),
           sum(cents(col("o_totalprice"))).alias("cents"))
-        .orderBy("n_name")
     }),
 
     // Windowed top-k per group with deterministic tie-break.
@@ -284,7 +277,6 @@ object RelationalQueries {
         .filter(col("rk") <= 3)
         .select(col("c_mktsegment"), col("rk"), col("o_orderkey"),
           cents(col("o_totalprice")).alias("price_cents"))
-        .orderBy("c_mktsegment", "rk")
     }),
 
     // Set operations: EXCEPT / INTERSECT over distinct key sets.
@@ -293,7 +285,7 @@ object RelationalQueries {
       val sn = Tables.supplier(s, d).select(col("s_nationkey").alias("nk")).distinct()
       val custOnly = cn.except(sn).withColumn("tag", lit("cust_only"))
       val both = cn.intersect(sn).withColumn("tag", lit("both"))
-      custOnly.unionAll(both).select("tag", "nk").orderBy("tag", "nk")
+      custOnly.unionAll(both).select("tag", "nk")
     }),
 
     // ROLLUP with explicit grouping-set markers (coalesced so null
@@ -306,8 +298,7 @@ object RelationalQueries {
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).alias("rf"),
           coalesce(col("l_linestatus"), lit("ALL")).alias("ls"),
-          col("sum_qty"), col("n"))
-        .orderBy("rf", "ls")),
+          col("sum_qty"), col("n"))),
 
     // CUBE: all grouping-set combinations with coalesced markers.
     "rel_cube" -> ((s, d) =>
@@ -318,8 +309,7 @@ object RelationalQueries {
         .select(
           coalesce(col("o_orderstatus"), lit("ALL")).alias("st"),
           coalesce(col("o_orderpriority"), lit("ALL")).alias("pri"),
-          col("n"), col("cents"))
-        .orderBy("st", "pri")),
+          col("n"), col("cents"))),
 
     // Pivot: order counts+value by status, one column per priority.
     // Pivot values are enumerated explicitly — at scale an unlisted-
@@ -336,8 +326,7 @@ object RelationalQueries {
         .select(col("o_orderstatus"),
           col("1-URGENT").alias("p1"), col("2-HIGH").alias("p2"),
           col("3-MEDIUM").alias("p3"), col("4-NOT SPECIFIED").alias("p4"),
-          col("5-LOW").alias("p5"))
-        .orderBy("o_orderstatus")),
+          col("5-LOW").alias("p5"))),
 
     // Explicit GROUPING SETS (the general form rollup/cube special-
     // case), with grouping() markers instead of coalesce so NULL data
@@ -356,8 +345,7 @@ object RelationalQueries {
         .select(
           coalesce(col("o_orderstatus"), lit("ALL")).alias("st"),
           coalesce(col("o_orderpriority"), lit("ALL")).alias("pri"),
-          col("g_st"), col("g_pri"), col("n"), col("cents"))
-        .orderBy("st", "pri", "g_st", "g_pri")),
+          col("g_st"), col("g_pri"), col("n"), col("cents"))),
 
     // JSON column decode: parse the props payload with an explicit
     // schema (from_json — no inference, the rule for open documents,
@@ -373,8 +361,7 @@ object RelationalQueries {
           count(col("kv")).alias("n_k"),
           sum(col("kv")).alias("sum_k"),
           min(col("kv")).alias("min_k"),
-          max(col("kv")).alias("max_k"))
-        .orderBy("event_type")),
+          max(col("kv")).alias("max_k"))),
 
     // Skew-safe aggregation: salt the hot key space into 8 subkeys,
     // partially aggregate per (key, salt), then merge — the two-phase
@@ -390,7 +377,6 @@ object RelationalQueries {
         .agg(sum(col("q")).alias("pq"), count(lit(1)).alias("pn"))
       salted.groupBy(col("l_returnflag"))
         .agg(sum(col("pq")).alias("sum_qty"), sum(col("pn")).alias("n"))
-        .orderBy("l_returnflag")
     }),
 
     // Semi/anti joins: customers with vs without orders, per nation.
@@ -403,7 +389,7 @@ object RelationalQueries {
       val withoutO = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .groupBy(col("c_nationkey").alias("nk"))
         .agg(count(lit(1)).alias("n")).withColumn("tag", lit("no_orders"))
-      withO.unionAll(withoutO).select("tag", "nk", "n").orderBy("tag", "nk")
+      withO.unionAll(withoutO).select("tag", "nk", "n")
     }),
 
     // Exact distinct counts (the HLL/approx variant is
@@ -474,7 +460,6 @@ object RelationalQueries {
           sum(col("rev")).alias("total_cents"))
         .withColumn("promo_share",
           col("promo_cents").cast("double") / col("total_cents"))
-        .orderBy("yr", "mo")
     }),
 
     // Q5-shaped star join: fact ⋈ three broadcast dimension hops
@@ -493,7 +478,6 @@ object RelationalQueries {
           sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
             .alias("revenue_cents"),
           count(lit(1)).alias("n"))
-        .orderBy("r_name")
     }),
 
     // Scalar function library over orders: string/date/math.
@@ -511,8 +495,7 @@ object RelationalQueries {
             .alias("month_ms"),
           pmod(col("o_orderkey"), lit(7)).alias("k_mod"),
           abs(round(col("o_totalprice") * 100, 0).cast(LongType) - 1000000L)
-            .alias("cents_off"))
-        .orderBy("o_orderkey")),
+            .alias("cents_off"))),
 
     // Window navigation beyond running sums: quartile assignment
     // (ntile), percent_rank, cume_dist — the ranking statistics an
@@ -541,7 +524,6 @@ object RelationalQueries {
         .withColumn("cume", col("rn").cast("double") / col("grp_n"))
         .select(col("o_orderkey"), col("o_orderpriority"), col("cents"),
           col("rn"), col("quartile"), col("pct_rank"), col("cume"))
-        .orderBy("o_orderpriority", "rn")
     }),
 
     "rel_window_running" -> ((s, d) => {
@@ -559,7 +541,6 @@ object RelationalQueries {
           Window.partitionBy("o_custkey").orderBy(col("cents").desc,
             col("o_orderkey").asc)).cast(LongType))
         .drop("o_orderdate")
-        .orderBy("o_custkey", "o_orderkey")
     }),
 
     // Tumbling event-time window as integer-exact hour bucketing over
@@ -571,8 +552,7 @@ object RelationalQueries {
           col("event_type"),
           round(col("value") * 100, 0).cast(LongType).alias("cents"))
         .groupBy("hour_bucket", "event_type")
-        .agg(count(lit(1)).alias("n"), sum(col("cents")).alias("cents_sum"))
-        .orderBy("hour_bucket", "event_type")),
+        .agg(count(lit(1)).alias("n"), sum(col("cents")).alias("cents_sum"))),
 
     // Z-score outlier gate: per-type mean/variance from exact integer
     // (count, sum, sum-of-squares) aggregates — one map-side-combined
@@ -596,7 +576,6 @@ object RelationalQueries {
         .withColumn("z", z)
         .filter(abs(col("z")) > 3.0)
         .select(col("event_id"), col("event_type"), col("cents"), col("z"))
-        .orderBy("event_id")
     }),
 
     // Time-RANGE window frame: per-customer trailing-30-day order
@@ -621,7 +600,6 @@ object RelationalQueries {
           cents(col("o_totalprice")).alias("cents"))
         .withColumn("roll_n", count(lit(1)).over(wRange))
         .withColumn("roll_cents", sum(col("cents")).over(wRange))
-        .orderBy("o_orderkey")
     }),
 
     // Morton/z-order key for multi-dimensional data layout: interleave
@@ -640,8 +618,7 @@ object RelationalQueries {
         .select(col("event_id"),
           (col("user_id") % 65536L).alias("x"),
           (col("event_id") % 65536L).alias("y"))
-        .withColumn("zval", graft.functions.InterleaveBits(col("x"), col("y")))
-        .orderBy("event_id")),
+        .withColumn("zval", graft.functions.InterleaveBits(col("x"), col("y")))),
 
     // TPC-H Q15-shaped top supplier(s): quarterly revenue per supplier,
     // then the supplier(s) achieving the maximum — the aggregate-then-
@@ -664,7 +641,6 @@ object RelationalQueries {
       rev.join(mx, "rev_cents")
         .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("rev_cents"))
-        .orderBy("s_suppkey")
     }),
 
     // TPC-H Q18-shaped large-order report: per-order quantity totals
@@ -688,7 +664,6 @@ object RelationalQueries {
             .alias("order_sec"),
           cents(col("o_totalprice")).alias("total_cents"),
           col("sum_qty"))
-        .orderBy(col("total_cents").desc, col("o_orderkey").asc)
     }),
 
     // TPC-H Q2-shaped minimum-cost supplier: for every part in a dim-
@@ -723,7 +698,6 @@ object RelationalQueries {
         .join(broadcast(sup), "s_suppkey")
         .select(col("p_partkey"), col("p_name"), col("s_suppkey"),
           col("s_name"), col("cost_cents"))
-        .orderBy("p_partkey")
     }),
 
     // TPC-H Q17-shaped small-quantity revenue: total revenue of
@@ -774,7 +748,6 @@ object RelationalQueries {
         .agg(count(lit(1)).alias("n_custs"), sum(col("bal")).alias("bal_cents"))
         .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
         .select(col("n_name"), col("n_custs"), col("bal_cents"))
-        .orderBy("n_name")
     }),
 
     // TPC-H Q21-shaped sole-late-supplier report: suppliers who were
@@ -816,7 +789,6 @@ object RelationalQueries {
         .agg(count(lit(1)).alias("numwait"))
         .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("numwait"))
-        .orderBy(col("numwait").desc, col("s_suppkey").asc)
     }),
 
     // TPC-H Q8-shaped market share: NATION_9's share of yearly
@@ -846,7 +818,6 @@ object RelationalQueries {
             .otherwise(0L)).alias("nation_cents"))
         .withColumn("share_ppm",
           expr("(nation_cents * 1000000) div total_cents"))
-        .orderBy("yr")
     }),
 
     // Skyline operator (Börzsönyi, Kossmann & Stocker, ICDE 2001):
@@ -880,7 +851,6 @@ object RelationalQueries {
           expr("unix_millis(cast(o_orderdate as timestamp)) div 1000")
             .alias("order_sec"),
           col("pc").alias("price_cents"))
-        .orderBy("o_orderkey")
     }),
 
     // TPC-H Q3-shaped shipping priority: revenue still in flight for
@@ -947,7 +917,6 @@ object RelationalQueries {
         .groupBy("supp_nation", "cust_nation", "yr")
         .agg(sum(col("rev")).alias("volume_cents"),
           count(lit(1)).alias("n"))
-        .orderBy("supp_nation", "cust_nation", "yr")
     }),
 
     // TPC-H Q9-shaped product-line profit: revenue by supplier nation
@@ -976,7 +945,6 @@ object RelationalQueries {
         .groupBy(col("n_name").alias("nation"), col("yr"))
         .agg(sum(col("rev")).alias("profit_cents"),
           count(lit(1)).alias("n"))
-        .orderBy("nation", "yr")
     }),
 
     // TPC-H Q10-shaped returned-item report: the top-20 customers by
@@ -1030,7 +998,6 @@ object RelationalQueries {
         .withColumn("c_count", coalesce(col("c_count"), lit(0L)))
         .groupBy(col("c_count"))
         .agg(count(lit(1)).alias("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
     }),
 
     // Cumulative distinct users by hour — the growth-curve query —
@@ -1052,7 +1019,6 @@ object RelationalQueries {
       val w = Window.orderBy(col("hour"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       per.withColumn("cum_users", sum(col("new_users")).over(w))
-        .orderBy("hour")
     }),
 
     // Time-series densification (resampling with zero-fill): the
@@ -1078,7 +1044,6 @@ object RelationalQueries {
         .select(col("day"), col("event_type"),
           coalesce(col("n"), lit(0L)).alias("n"),
           coalesce(col("cents_sum"), lit(0L)).alias("cents_sum"))
-        .orderBy("day", "event_type")
     }),
 
     // Gaps-and-islands: consecutive-day activity streaks per user via
@@ -1098,7 +1063,6 @@ object RelationalQueries {
         .agg(count(lit(1)).alias("streak_len"))
         .groupBy(col("streak_len"))
         .agg(count(lit(1)).alias("n_streaks"))
-        .orderBy("streak_len")
     }),
 
     // TPC-H Q19-shaped disjunctive predicate: three (brand, size
@@ -1130,7 +1094,6 @@ object RelationalQueries {
         .groupBy(col("p_brand"))
         .agg(sum(col("rev")).alias("revenue_cents"),
           count(lit(1)).alias("n"))
-        .orderBy("p_brand")
     }),
 
     // UNPIVOT (wide -> long): per-returnflag measures melted into
@@ -1150,7 +1113,6 @@ object RelationalQueries {
       aggd.unpivot(Array(col("rf")),
           Array(col("qty"), col("price_cents"), col("disc_cents")),
           "measure", "value")
-        .orderBy("rf", "measure")
     }),
 
     // Join-key skew audit — the table an operator reads BEFORE
@@ -1166,8 +1128,7 @@ object RelationalQueries {
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).alias("n"))
         .groupBy(col("n").alias("rows_per_key"))
-        .agg(count(lit(1)).alias("n_keys"))
-        .orderBy("rows_per_key")),
+        .agg(count(lit(1)).alias("n_keys"))),
 
     // Shuffle-free fact-to-fact join via bucketed staging: lineitem
     // and orders are staged CLUSTERED BY orderkey INTO the same
@@ -1186,7 +1147,6 @@ object RelationalQueries {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).alias("n"),
           sum(col("rev")).alias("revenue_cents"))
-        .orderBy("o_orderpriority")
     }))
 
   lazy val oracles: Map[String, String] = Map(

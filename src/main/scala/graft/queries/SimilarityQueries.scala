@@ -203,7 +203,7 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w).cast(LongType))
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("vec_id"), col("dp"), col("cos"))
-    }.orderBy("qid", "rk")
+    }
 
   /** Per-probe lexical top-k: the probe DOCUMENT's distinct terms act
     * as the query, candidates score by the same exact-rational BM25
@@ -278,7 +278,6 @@ object SimilarityQueries {
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("doc_id"), col("lex_rank"),
           col("vec_rank"), col("rrf_micro"))
-        .orderBy("qid", "rk")
     }),
 
     // Hyperplane-LSH buckets: sign of dot(v, plane_s) for 6 shared
@@ -301,7 +300,6 @@ object SimilarityQueries {
         .agg(count(lit(1)).alias("pop"),
           min(col("vec_id")).alias("min_vec"),
           max(col("vec_id")).alias("max_vec"))
-        .orderBy("bucket")
     }),
 
     // Embedding-cosine near-duplicate pairs: candidates from shared
@@ -331,7 +329,6 @@ object SimilarityQueries {
         // result set is non-empty and the oracle check is substantive
         .filter(col("cos") >= 0.35)
         .select(col("ida"), col("idb"), col("cos"))
-        .orderBy("ida", "idb")
     }),
 
     // Threshold calibration sweep: how many near-dup pairs would each
@@ -370,7 +367,6 @@ object SimilarityQueries {
       hist.join(broadcast(taus), col("bin") >= col("tau_pct"))
         .groupBy("tau_pct")
         .agg(sum(col("n")).alias("n_pairs"))
-        .orderBy("tau_pct")
     }),
 
     // IVF variant: assign every vector to its nearest centroid
@@ -407,7 +403,6 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(wRank).cast(LongType))
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("vec_id"), col("cos"))
-        .orderBy("qid", "rk")
     }),
 
     // IVF with LEARNED centroids + multi-probe — the production IVF
@@ -435,7 +430,6 @@ object SimilarityQueries {
         .groupBy("qid")
         .agg(count(col("av")).alias("hits"))
         .withColumn("recall", col("hits").cast("double") / lit(TopK))
-        .orderBy("qid")
     }),
 
     "sim_lsh_ann" -> (lshAnn(_, _)),
@@ -469,7 +463,6 @@ object SimilarityQueries {
           expr("hits_single * 1000000 div k"))
         .withColumn("recall_multi_ppm",
           expr("hits_multi * 1000000 div k"))
-        .orderBy("qid")
     }),
 
     // Recall-vs-plane-count tuning curve — the audit table behind the
@@ -497,7 +490,6 @@ object SimilarityQueries {
         .withColumn("recall_ppm", expr("hits * 1000000 div total"))
         .select(col("planes"), col("hits"), col("total"),
           col("recall_ppm"))
-        .orderBy("planes")
     }),
 
     // Product quantization (Jégou et al. 2011, "Product Quantization
@@ -535,7 +527,6 @@ object SimilarityQueries {
         .select(col("m").cast(LongType).alias("m"), col("cid"),
           col("n_vecs"),
           expr("n_vecs * 1000000 div mtot").alias("share_ppm"))
-        .orderBy("m", "cid")
     }),
 
     "sim_ivfpq_ann" -> (ivfPqAnn(_, _)),
@@ -582,7 +573,6 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(wF).cast(LongType))
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("vec_id"), col("cos"))
-        .orderBy("qid", "rk")
     }),
 
     // Filtered (hybrid) vector search — the vector-DB pattern where a
@@ -612,7 +602,6 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(w).cast(LongType))
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("vec_id"), col("cos"))
-        .orderBy("qid", "rk")
     }),
 
     // SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -641,7 +630,6 @@ object SimilarityQueries {
         .select(col("vec_id"), col("cell"),
           coalesce(col("kmin"), col("vec_id")).alias("keeper"),
           col("kmin").isNotNull.alias("is_dup"))
-        .orderBy("vec_id")
     }),
 
     // k-NN graph construction: top-KnnK neighbors for EVERY corpus
@@ -679,7 +667,6 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(wR).cast(LongType))
         .filter(col("rk") <= KnnK)
         .select(col("vec_id"), col("rk"), col("nbr"), col("cos"))
-        .orderBy("vec_id", "rk")
     }),
 
     // PageRank over the kNN graph (Page et al. 1999) — the graph
@@ -729,7 +716,7 @@ object SimilarityQueries {
             expr("CAST(150000 + (85 * coalesce(m, 0)) div 100 AS BIGINT)")
               .alias("score"))
       }
-      last.orderBy("vec_id")
+      last
     }),
 
     // kNN label voting (Fix & Hodges 1951 / Cover & Hart 1967) over
@@ -766,7 +753,6 @@ object SimilarityQueries {
           coalesce(col("plabel"), lit(-1)).alias("pred"),
           (col("label") === coalesce(col("plabel"), lit(-1)))
             .alias("correct"))
-        .orderBy("vec_id")
     }),
 
     // Label propagation (Zhu & Ghahramani 2002; Raghavan et al. 2007)
@@ -801,7 +787,6 @@ object SimilarityQueries {
         .agg(count(lit(1)).alias("n"), sum(col("col")).alias("dim_sum"))
         .select(col("label").cast(LongType).alias("label"),
           col("dim").cast(LongType).alias("dim"), col("n"), col("dim_sum"))
-        .orderBy("label", "dim")
     }),
 
     // Per-dimension profile of the embedding space — the QA table a
@@ -828,7 +813,6 @@ object SimilarityQueries {
           max(col("col")).alias("q_max"))
         .select(col("dim").cast(LongType).alias("dim"), col("n"),
           col("dim_sum"), col("dim_sumsq"), col("q_min"), col("q_max"))
-        .orderBy("dim")
     }),
 
     // Per-source embedding drift — the distribution-shift monitor a
@@ -864,7 +848,6 @@ object SimilarityQueries {
           expr("(1000000 * dim_sum - pmod(1000000 * dim_sum, n)) div n" +
             " - (1000000 * sum_all - pmod(1000000 * sum_all, n_all))" +
             " div n_all").alias("drift_micro"))
-        .orderBy("source", "dim")
     }),
 
     // Nearest-neighbor margin per vector — cos(top1) − cos(top2) over
@@ -888,7 +871,6 @@ object SimilarityQueries {
         .select(col("vec_id"),
           floor((col("cos1") - col("cos2")) * lit(1000000d))
             .cast(LongType).alias("margin_micro"))
-        .orderBy("vec_id")
     }),
 
     // Degree distribution of the undirected kNN graph — the one-look
@@ -916,7 +898,6 @@ object SimilarityQueries {
         .select(coalesce(col("deg"), lit(0L)).alias("deg"))
         .groupBy("deg")
         .agg(count(lit(1)).alias("n_nodes"))
-        .orderBy("deg")
     }),
 
     // Cluster purity of the learned k-means cells against the label
@@ -949,7 +930,6 @@ object SimilarityQueries {
           col("top_label").cast(LongType).alias("top_label"),
           col("top_n"), col("cell_n"))
         .withColumn("purity_ppm", expr("top_n * 1000000 div cell_n"))
-        .orderBy("cell")
     }),
 
     // Recall-vs-nprobe tuning curve for the IVF index: recall@TopK
@@ -976,7 +956,6 @@ object SimilarityQueries {
         .withColumn("recall_ppm", expr("hits * 1000000 div total"))
         .select(col("nprobe"), col("hits"), col("total"),
           col("recall_ppm"))
-        .orderBy("nprobe")
     }),
 
     // Cell-population audit of the learned k-means partition — the
@@ -998,7 +977,6 @@ object SimilarityQueries {
         .select(col("cell").cast(LongType).alias("cell"),
           col("n_vectors"),
           expr("n_vectors * 1000000 div n_total").alias("share_ppm"))
-        .orderBy("cell")
     }),
 
     // Out-of-distribution score per vector — the embedding-side
@@ -1028,7 +1006,6 @@ object SimilarityQueries {
           GroupRank.ntileFromRank(10, col("rn"), col("grp_n"))
             .alias("decile"))
         .withColumn("is_ood", col("decile") === 1L)
-        .orderBy("vec_id")
     }),
 
     // k-core decomposition (Seidman 1983, "Network structure and
@@ -1076,7 +1053,6 @@ object SimilarityQueries {
         .select(col("vec_id"),
           coalesce(col("alive"), lit(false)).alias("in_core"),
           coalesce(col("core_deg"), lit(0L)).alias("core_deg"))
-        .orderBy("vec_id")
     }),
 
     "graph_label_prop" -> ((s, d) => {
@@ -1112,7 +1088,6 @@ object SimilarityQueries {
       last.join(nodes.select(col("vec_id"), col("label")), "vec_id")
         .select(col("vec_id"), col("seed"), col("lbl"),
           (col("lbl") === col("label")).alias("agrees"))
-        .orderBy("vec_id")
     }),
 
     // FAISS-style SQ8 scalar quantization: each dimension affinely
@@ -1172,7 +1147,6 @@ object SimilarityQueries {
         .withColumn("rk", row_number().over(wR).cast(LongType))
         .filter(col("rk") <= TopK)
         .select(col("qid"), col("rk"), col("vec_id"), col("cos"))
-        .orderBy("qid", "rk")
     }),
 
     // Modularity of the LABEL partition over the staged kNN graph
@@ -1220,7 +1194,6 @@ object SimilarityQueries {
           col("intra_arcs"),
           expr("(1000000 * (intra_arcs * m2 - d_sum * d_sum))" +
             " div (m2 * m2)").alias("q_ppm"))
-        .orderBy("label")
     }),
 
     // Triangle counting + local clustering coefficient over the staged
@@ -1270,7 +1243,6 @@ object SimilarityQueries {
           when(col("deg") >= 2L,
             expr("(2 * tri * 1000000) div (deg * (deg - 1))"))
             .otherwise(lit(0L)))
-        .orderBy("vec_id")
     }),
 
     // Neighbor-set Jaccard link prediction over the staged kNN edges
@@ -1408,7 +1380,6 @@ object SimilarityQueries {
       .filter(col("rk") <= TopK)
       .select(col("qid"), col("rk"), col("vec_id"), col("approx_dot"),
         col("cos"))
-      .orderBy("qid", "rk")
   }
 
   private def pqAnn(s: SparkSession, d: String): DataFrame = {
@@ -1576,7 +1547,7 @@ object SimilarityQueries {
         s"_k${TopK}_q${NQueries}_v1",
       d, Seq(s"$d/embeddings.parquet")) {
       ivfKmeansBuild(s, d, probes)
-    }.orderBy("qid", "rk")
+    }
 
   private def ivfKmeansBuild(s: SparkSession, d: String,
       probes: Int): DataFrame = {
@@ -1637,7 +1608,7 @@ object SimilarityQueries {
         s"_k${TopK}_q${NQueries}_v1",
       d, Seq(s"$d/embeddings.parquet")) {
       multiProbeAnnBuild(s, d)
-    }.orderBy("qid", "rk")
+    }
 
   private def multiProbeAnnBuild(s: SparkSession, d: String): DataFrame = {
     val all = quantized(s, d)
@@ -1696,7 +1667,7 @@ object SimilarityQueries {
       s"sim_lsh_topk_p${nPlanes}_k${TopK}_q${NQueries}_v1",
       d, Seq(s"$d/embeddings.parquet")) {
       lshAnnBuild(s, d, nPlanes)
-    }.orderBy("qid", "rk")
+    }
 
   private def lshAnnBuild(s: SparkSession, d: String, nPlanes: Int)
       : DataFrame = {

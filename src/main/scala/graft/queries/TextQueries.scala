@@ -72,8 +72,7 @@ object TextQueries {
     * expressions are identical, which `StreamingTextParitySpec` pins
     * (the dedup-at-ingest story needs the quality gate to run on the
     * change stream with bit-identical verdicts). No shuffle, no
-    * state; the `tx_gopher_rules` query is this transform plus the
-    * oracle's deterministic ORDER BY.
+    * state; the `tx_gopher_rules` query is this transform alone.
     */
   def gopherRules(docs: DataFrame): DataFrame = {
     // ONE native GopherMetrics call per row (r12) — the interpreted
@@ -514,7 +513,6 @@ object TextQueries {
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         expr(s"(run - n_tokens) div $PackLen").alias("bin"),
         ((col("run") - col("n_tokens")) % PackLen).alias("offset"))
-      .orderBy("doc_id")
   }
 
   /** Composite-gate core behind `tx_filter_verdict` (specs drive it
@@ -569,7 +567,6 @@ object TextQueries {
         topFrac.alias("top_frac"), dupFrac.alias("dup3_frac"),
         mask.alias("fail_mask"),
         (mask === 0L).alias("keep"))
-      .orderBy("doc_id")
   }
 
   /** The staged per-doc gate-verdict table — [[filterVerdictOf]]'s
@@ -580,7 +577,7 @@ object TextQueries {
     * Every rule is per-document, so the artifact is PER-ROW and
     * appendable: an ingest derives verdicts for the new part files
     * only — O(delta), the shingle-index contract. Rows are unordered
-    * (parquet read-back); consumers re-apply their ORDER BY.
+    * (parquet read-back).
     */
   private[queries] def filterVerdicts(s: SparkSession, d: String): DataFrame =
     StagedIndex.orStageAppendable(s, "tx_gate_verdict_v1", d,
@@ -807,7 +804,7 @@ object TextQueries {
     * which re-derived the LM scoring + corpus-wide decile rank per
     * run. Deterministic from the snapshot (no session knobs), so it
     * stages like the verdict tables; rows are unordered (parquet
-    * read-back) and consumers apply their own ORDER BY.
+    * read-back).
     */
   private[queries] def qualityDeciles(s: SparkSession, d: String)
       : DataFrame =
@@ -855,7 +852,6 @@ object TextQueries {
       .filter(col("rk") <= 3)
       .select(col("doc_id"), col("rk"), col("term"), col("tf"),
         col("df"), col("score"))
-      .orderBy("doc_id", "rk")
   }
 
   /** Redaction order is part of the contract: email first (its
@@ -898,8 +894,7 @@ object TextQueries {
     // Rolling-hash document fingerprint (custom codegen expression).
     "tx_fingerprint" -> ((s, d) =>
       Tables.documents(s, d)
-        .select(col("doc_id"), Fingerprint(col("text")).alias("fp"))
-        .orderBy("doc_id")),
+        .select(col("doc_id"), Fingerprint(col("text")).alias("fp"))),
 
     // Corpus-level n-gram statistics: top-20 word bigrams by DOCUMENT
     // frequency (WordShingles de-dups within a doc). Scale shape: one
@@ -924,8 +919,7 @@ object TextQueries {
           size(w).cast(LongType).alias("n_tokens"),
           length(col("text")).cast(LongType).alias("n_chars_q"),
           (length(col("text")).cast(LongType) /
-            size(w).cast(LongType)).alias("chars_per_token"))
-        .orderBy("doc_id")),
+            size(w).cast(LongType)).alias("chars_per_token"))),
 
     // Quality scoring: stopword ratio + type-token ratio, exact-int
     // numerators so the derived doubles are bit-identical everywhere.
@@ -941,7 +935,6 @@ object TextQueries {
           uniqN.alias("uniq_n"),
           (stopN / nTok).alias("stop_ratio"),
           (uniqN / nTok).alias("ttr"))
-        .orderBy("doc_id")
     }),
 
     // Gopher-style quality rules (Rae et al. 2021, "Scaling Language
@@ -957,7 +950,7 @@ object TextQueries {
     // per-row expressions at scan speed, no shuffle but the output
     // ORDER BY.
     "tx_gopher_rules" -> ((s, d) =>
-      gopherRules(Tables.documents(s, d)).orderBy("doc_id")),
+      gopherRules(Tables.documents(s, d))),
 
     // BPE vocabulary INDUCTION (Sennrich, Haddow & Birch 2016,
     // "Neural Machine Translation of Rare Words with Subword Units"):
@@ -982,8 +975,7 @@ object TextQueries {
     // to parquet like the other iteration states).
     "tx_bpe_learn" -> ((s, d) =>
       bpeRounds(s, d)._1
-        .select(col("round"), col("pair"), col("merged"), col("cnt"))
-        .orderBy("round")),
+        .select(col("round"), col("pair"), col("merged"), col("cnt"))),
 
     // Apply the learned vocabulary: the post-round-R word table IS
     // the segmentation lookup (wd → its subword sequence), so
@@ -1005,7 +997,6 @@ object TextQueries {
         .agg(sum(col("n_sub")).alias("n_subwords"),
           sum(col("n_sym")).alias("n_symbols"),
           count(lit(1)).alias("n_words"))
-        .orderBy("doc_id")
     }),
 
     // Tokenizer fertility per language (Petrov et al. 2023, "Language
@@ -1033,7 +1024,6 @@ object TextQueries {
           expr("subwords * 1000000 div words"))
         .withColumn("compression_micro",
           expr("symbols * 1000000 div subwords"))
-        .orderBy("lang")
     }),
 
     // BPE-ish regex tokenization: letter runs, digit runs, and
@@ -1047,7 +1037,6 @@ object TextQueries {
           col("doc_id"),
           size(toks).cast(LongType).alias("n_bpe"),
           size(array_distinct(toks)).cast(LongType).alias("n_bpe_uniq"))
-        .orderBy("doc_id")
     }),
 
     // Flesch reading-ease (Flesch 1948; the readability gate of
@@ -1060,10 +1049,9 @@ object TextQueries {
     // so both engines agree bit-for-bit (the no-transcendental
     // discipline of tx_tfidf/tx_lm_score). `band` is the coarse
     // easy/standard/difficult cut downstream mixture policies key on.
-    // Scale shape: per-row regex counting at scan speed; no shuffle
-    // but the output ORDER BY.
+    // Scale shape: per-row regex counting at scan speed; no shuffle.
     "tx_readability" -> ((s, d) =>
-      readabilityOf(Tables.documents(s, d)).orderBy("doc_id")),
+      readabilityOf(Tables.documents(s, d))),
 
     // Content novelty over corpus growth: per document, the fraction
     // of its word-3-grams whose FIRST corpus occurrence is this
@@ -1116,7 +1104,6 @@ object TextQueries {
         .withColumn("novel_ppm",
           when(col("n_grams") > 0,
             expr("n_new * 1000000 div n_grams")).otherwise(0L))
-        .orderBy("doc_id")
     }),
 
     // Language-ID n-gram/marker heuristic (the corpus carries no real
@@ -1133,7 +1120,6 @@ object TextQueries {
           cntThe.alias("cnt_the"), cntA.alias("cnt_a"),
           predicted.alias("predicted"),
           when(predicted === col("lang"), 1L).otherwise(0L).alias("hit"))
-        .orderBy("doc_id")
     }),
 
     // Language-ID the published way (Cavnar & Trenkle 1994, "N-Gram-
@@ -1195,7 +1181,6 @@ object TextQueries {
           coalesce(col("score"), lit(0L)).alias("score"),
           when(coalesce(col("plang"), lit("und")) === col("lang"), 1L)
             .otherwise(0L).alias("hit"))
-        .orderBy("doc_id")
     }),
 
     // Language-model quality scoring, the CCNet/Wenzek et al. (2020)
@@ -1211,7 +1196,7 @@ object TextQueries {
     // way it is vocabulary-sized (|chars|²) and broadcast, so scoring
     // is explode + broadcast-join + keyed agg — the corpus never
     // shuffles unreduced.
-    "tx_lm_score" -> ((s, d) => lmScoreOf(s, d).orderBy("doc_id")),
+    "tx_lm_score" -> (lmScoreOf(_, _)),
 
     // Inverted-index build — the retrieval-side corpus structure
     // (term → sorted posting list + df) a search/RAG stack derives
@@ -1234,7 +1219,6 @@ object TextQueries {
         .agg(expr("array_join(transform(sort_array(collect_list(" +
           "doc_id)), x -> cast(x as string)), ',')").alias("postings"))
         .select(col("term"), col("df"), col("postings"))
-        .orderBy(col("df").desc, col("term").asc)
     }),
 
     // BM25-shaped lexical retrieval (Robertson & Walker 1994; the
@@ -1278,7 +1262,7 @@ object TextQueries {
     // ntileFromRank turns (rank, n) into the SQL-standard ntile(10)
     // arithmetically. Scale shape: lmScoreOf's staged/broadcast plan
     // plus one balanced range shuffle of the doc-sized score table.
-    "tx_quality_bins" -> ((s, d) => qualityDeciles(s, d).orderBy("doc_id")),
+    "tx_quality_bins" -> (qualityDeciles(_, _)),
 
     // Text normalization: lowercase, strip non-alphanumerics to
     // spaces, collapse runs, trim — the canonical pre-tokenization
@@ -1316,7 +1300,6 @@ object TextQueries {
           coalesce(col("n_cut_words"), lit(0L)).alias("n_cut_words"))
         .withColumn("keep_ppm",
           expr("(n_words - n_cut_words) * 1000000 div n_words"))
-        .orderBy("doc_id")
     }),
 
     // Duplicated-span CUTTING — the rewrite step tx_span_strip only
@@ -1370,7 +1353,6 @@ object TextQueries {
             .alias("kept_text"),
           coalesce(col("m").getField("n_kept_words"), lit(0L))
             .alias("n_kept_words"))
-        .orderBy("doc_id")
     }),
 
     // Per-domain boilerplate stripping — the CCNet/C4 curation pass
@@ -1395,8 +1377,8 @@ object TextQueries {
     // reassembly run row-locally at scan speed through the native
     // StripSegments kernel (byte-parity pinned by StripSegmentsSpec;
     // the oracle keeps the exploded anti-join spelling and still
-    // hash-matches). Corpus text never crosses an exchange but the
-    // output ORDER BY. No corpus-wide state: a new domain only ever
+    // hash-matches). Corpus text never crosses an exchange. No
+    // corpus-wide state: a new domain only ever
     // meets its own lines.
     "tx_boilerplate" -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -1454,7 +1436,6 @@ object TextQueries {
             .alias("n_stripped_lines"),
           coalesce(col("m").getField("kept_text"), lit(""))
             .alias("kept_text"))
-        .orderBy("doc_id")
     }),
 
     "tx_normalize" -> ((s, d) => {
@@ -1466,7 +1447,6 @@ object TextQueries {
           col("doc_id"),
           norm.alias("norm"),
           size(split(norm, " ")).cast(LongType).alias("n_norm_tokens"))
-        .orderBy("doc_id")
     }),
 
     // Gopher-style repetition quality gate (Rae et al. 2021 repetition
@@ -1480,8 +1460,8 @@ object TextQueries {
       // nw (token count) are row-local facts of one document, so the
       // native TermCounts kernel + array_max replace the old
       // explode → groupBy(doc_id, wd) → re-agg → self-join pipeline
-      // (2 corpus exchanges + 1 join → pure per-row projection; the
-      // only remaining exchange is the output ORDER BY). The
+      // (2 corpus exchanges + 1 join → pure per-row projection with
+      // no exchange). The
       // isNotNull filter reproduces the old inner join's implicit
       // contract: a NULL-text doc produced no exploded rows and was
       // dropped.
@@ -1502,7 +1482,6 @@ object TextQueries {
           topFrac.alias("top_frac"), col("tot3"), col("d3"),
           dupFrac.alias("dup3_frac"),
           (topFrac <= 0.15 && dupFrac <= 0.02).alias("keep"))
-        .orderBy("doc_id")
     }),
 
     // PII detection + redaction: email / phone / IPv4 regex hits and
@@ -1531,7 +1510,6 @@ object TextQueries {
           redact(col("pt")).alias("redacted"))
         .withColumn("has_pii",
           col("n_email") + col("n_phone") + col("n_ip") > 0)
-        .orderBy("doc_id")
     }),
 
     // Corpus TF-IDF: document frequency per term (one map-side
@@ -1552,8 +1530,7 @@ object TextQueries {
     // dup-3-gram). Same scale shape as tx_repetition: one
     // map-side-combining (doc, word) count, a per-doc re-agg, one
     // doc-keyed join against a scan-speed projection.
-    "tx_filter_verdict" -> ((s, d) =>
-      filterVerdicts(s, d).orderBy("doc_id")),
+    "tx_filter_verdict" -> (filterVerdicts(_, _)),
 
     // The classifier's GENERALIZATION calibration — train the
     // likelihood-ratio weights on even doc_ids only, score the
@@ -1606,7 +1583,6 @@ object TextQueries {
           col("keep"),
           when((coalesce(col("vote_ppm"), lit(QcKeepPpm)) >= QcKeepPpm)
             === col("keep"), 1L).otherwise(0L).alias("hit"))
-        .orderBy("doc_id")
     }),
 
     // The classifier feature family that GENERALIZES on this corpus —
@@ -1650,7 +1626,6 @@ object TextQueries {
           col("keep"),
           when((col("vote_ppm") >= QcKeepPpm) === col("keep"), 1L)
             .otherwise(0L).alias("hit"))
-        .orderBy("doc_id")
     }),
 
     // The LEARNED quality classifier — the DCLM/fastText production
@@ -1688,7 +1663,6 @@ object TextQueries {
           col("keep"),
           when((coalesce(col("vote_ppm"), lit(QcKeepPpm)) >= QcKeepPpm)
             === col("keep"), 1L).otherwise(0L).alias("hit"))
-        .orderBy("doc_id")
     }),
 
     // Count-min sketch (Cormode & Muthukrishnan 2005): estimate
@@ -1732,7 +1706,6 @@ object TextQueries {
         .agg(min(col("cnt")).alias("est_n"))
       est.select(col("wd"), col("true_n"), col("est_n"),
           (col("est_n") - col("true_n")).alias("overcount"))
-        .orderBy(col("true_n").desc, col("wd").asc)
     }),
 
     // Sequence packing for training batches: lay documents head-to-
@@ -1764,7 +1737,6 @@ object TextQueries {
             .otherwise(0L)).alias("straddlers"))
         .withColumn("fill_micro",
           expr(s"total_tokens * 1000000 div (n_bins * $PackLen)"))
-        .orderBy("lang")
     }),
 
     // Deterministic stratified sampling: rank docs inside each lang
@@ -1783,7 +1755,6 @@ object TextQueries {
         .withColumnRenamed("grp_n", "stratum_n")
         .filter(col("rn") <= expr("(stratum_n + 9) div 10"))
         .select(col("doc_id"), col("lang"), col("rn"), col("stratum_n"))
-        .orderBy("lang", "rn")
     }),
 
     // Per-source document cap — the C4/RefinedWeb-style curation rule
@@ -1801,7 +1772,6 @@ object TextQueries {
         .filter(col("rn") <= SourceCap)
         .select(col("doc_id"), col("source"), col("rn").alias("rk"),
           col("grp_n").alias("src_n"))
-        .orderBy("source", "rk")
     }),
 
     // Temperature-resampled multilingual mixing (the mC4/XLM-R α=0.5
@@ -1834,7 +1804,6 @@ object TextQueries {
         .join(broadcast(quota), "lang")
         .filter(col("rn") <= col("quota"))
         .select(col("doc_id"), col("lang"), col("rn"), col("quota"))
-        .orderBy("lang", "rn")
     }),
 
     // Deterministic global shuffle into balanced training shards —
@@ -1855,7 +1824,6 @@ object TextQueries {
         .select(col("doc_id"),
           expr(s"(rn - 1) % $NShards").alias("shard"),
           expr(s"(rn - 1) div $NShards").alias("pos"))
-        .orderBy("shard", "pos")
     }),
 
     // Corpus mixture planner — the per-(lang, source) sampling-weight
@@ -1881,7 +1849,6 @@ object TextQueries {
           col("wt"),
           expr("(wt * 1000000) div tw").alias("share_ppm"),
           expr("(tokens * 1000000) div tt").alias("raw_ppm"))
-        .orderBy("lang", "source")
     }),
 
     // PMI collocation mining (Church & Hanks 1990): bigrams whose
@@ -1939,8 +1906,7 @@ object TextQueries {
         .agg(count(lit(1)).alias("n_docs"),
           sum(col("n_tokens")).alias("tokens"),
           min(col("n_tokens")).alias("min_tokens"),
-          max(col("n_tokens")).alias("max_tokens"))
-        .orderBy("lang", "bin")),
+          max(col("n_tokens")).alias("max_tokens"))),
 
     // Class-based TF-IDF (the c-TF-IDF of BERTopic, Grootendorst
     // 2022): terms characteristic of each LANGUAGE rather than each
@@ -1974,7 +1940,6 @@ object TextQueries {
         .filter(col("rk") <= 5)
         .select(col("lang"), col("rk"), col("term"), col("tf"),
           col("ldf"), col("score_micro"))
-        .orderBy("lang", "rk")
     }),
 
     // DSIR-style importance weighting (Xie et al. 2023, "Data
@@ -1992,7 +1957,6 @@ object TextQueries {
       Tables.documents(s, d).select("doc_id", "lang")
         .join(broadcast(top), "doc_id")
         .select(col("doc_id"), col("lang"), col("score_ppm"))
-        .orderBy(col("score_ppm").desc, col("doc_id").asc)
     }),
 
     // The DSIR capstone — importance RESAMPLING, not just scoring:
@@ -2020,7 +1984,6 @@ object TextQueries {
           sum(when(col("keep"), 1L).otherwise(0L)).alias("n_kept"),
           sum(when(col("keep"), col("score_ppm")).otherwise(0L))
             .alias("kept_score_sum"))
-        .orderBy("lang", "source")
     }),
 
     // Lexical-diversity quality signal: Simpson diversity index over
@@ -2055,7 +2018,6 @@ object TextQueries {
           sumsq.alias("sumsq"))
         .withColumn("div_ppm",
           expr("1000000 - (1000000 * sumsq) div (n_words * n_words)"))
-        .orderBy("doc_id")
     }),
 
     // Heaps'-law vocabulary-growth curve — the corpus statistic that
@@ -2097,7 +2059,6 @@ object TextQueries {
           coalesce(col("n_new_terms"), lit(0L)).alias("n_new_terms"))
         .withColumn("tokens_cum", sum(col("n_tokens")).over(wc))
         .withColumn("vocab_cum", sum(col("n_new_terms")).over(wc))
-        .orderBy("bucket")
     }))
 
   lazy val oracles: Map[String, String] = Map(

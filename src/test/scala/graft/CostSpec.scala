@@ -29,14 +29,16 @@ class CostSpec extends AnyFunSuite {
     try f(cost) finally spark.sparkContext.removeSparkListener(cost)
   }
 
-  test("p3_topic_route: two exchanges, one row per topic") {
+  test("p3_topic_route: one exchange, one row per topic") {
     val c = withCost(sample)
-    // hash exchange under the topic count, range exchange under orderBy
-    assert(c.exchanges == 2)
+    // the hash exchange under the topic count, read once: no range
+    // exchange, and no sampling job re-running its map stage
+    assert(c.exchanges == 1)
     assert(c.outputRows == 5L)
     assert(c.outputRows == SparkEntry.queries(query)(spark, sf).count())
     assert(c.stages > 0 && c.tasks >= c.stages)
     assert(c.shuffleRecordsWritten > 0 && c.shuffleRecordsRead > 0)
+    assert(c.shuffleRecordsRead == c.shuffleRecordsWritten)
   }
 
   test("identical runs report identical counters") {

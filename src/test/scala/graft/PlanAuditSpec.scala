@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit,
+  LogicalPlan, Project, Sort}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-shape audit over EVERY query's physical plan: the properties
@@ -435,6 +437,39 @@ class PlanAuditSpec extends AnyFunSuite {
       }
       assert(counts.distinct.size == 1,
         s"rel_min_cost at $sf: exchange counts differ across runs: $counts")
+    }
+  }
+
+  // --- row order ------------------------------------------------------
+  // A query's result is an unordered bag: the oracle compare sorts both
+  // sides, so a global sort at the root only buys a range-sampling job
+  // and an extra exchange. A sort stays where a limit consumes it.
+  private lazy val analyzedRoots: Seq[(String, LogicalPlan)] =
+    SparkEntry.queries.toSeq.map { case (n, f) =>
+      n -> underProjections(f(spark, sfs.head).queryExecution.analyzed)
+    }
+
+  private def underProjections(p: LogicalPlan): LogicalPlan = p match {
+    case Project(_, child) => underProjections(child)
+    case other => other
+  }
+
+  test("no query ends in a global sort under projections only") {
+    val sorted = analyzedRoots.collect {
+      case (n, Sort(_, true, _, _)) => n
+    }.sorted
+    assert(sorted.isEmpty,
+      s"${sorted.size} queries sort their whole result: ${sorted.mkString(", ")}")
+  }
+
+  test("a root limit keeps the global sort directly under it") {
+    val limited = analyzedRoots.collect {
+      case (n, GlobalLimit(_, LocalLimit(_, child))) => n -> child
+    }
+    assert(limited.nonEmpty, "no query ends in a limit")
+    limited.foreach { case (n, child) =>
+      assert(PartialFunction.cond(child) { case Sort(_, true, _, _) => true },
+        s"$n limits an unsorted result: ${child.nodeName} under its limit")
     }
   }
 

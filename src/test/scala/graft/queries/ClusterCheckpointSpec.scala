@@ -26,7 +26,7 @@ class ClusterCheckpointSpec extends AnyFunSuite {
     spark.conf.set("graft.stage.dir",
       Files.createTempDirectory("ckpt_stage").toString)
     try graft.SparkEntry.queries("dd_cluster")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     finally spark.conf.unset("graft.stage.dir")
   }
 

@@ -27,7 +27,7 @@ class PackFilterSpec extends AnyFunSuite {
     ).toDF("doc_id", "lang", "text")
     val got = TextQueries.packOf(docs).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSeq
+        r.getLong(3), r.getLong(4))).toSeq.sortBy(_._1)
     assert(got === Seq(
       (1L, "en", 1500L, 0L, 0L),    // starts bin 0, offset 0
       (2L, "en", 800L, 0L, 1500L),  // starts bin 0, offset 1500

@@ -214,9 +214,16 @@ class Round5OpsSpec extends AnyFunSuite {
       assert(ids.sorted.sameElements(ids), s"term $term postings unsorted")
       assert(ids.distinct.length == ids.length, s"term $term dup postings")
     }
-    val dfs = rows.map(_._2)
-    assert(dfs.zip(dfs.tail).forall { case (a, b) => a >= b },
-      "terms must come in non-increasing df order")
+    // the rows are the TopTerms first terms of the (df desc, term asc)
+    // order, re-derived here from the raw text
+    val allDf = graft.Tables.documents(spark, sf).select("text").collect()
+      .flatMap(r => Option(r.getString(0)).toSeq
+        .flatMap(_.split(" ", -1).distinct))
+      .groupBy(identity).view.mapValues(_.length.toLong).toSeq
+    val want = allDf.sortBy { case (t, n) => (-n, t) }
+      .take(TextQueries.TopTerms)
+    assert(rows.map(r => (r._1, r._2)).sortBy { case (t, n) => (-n, t) }
+      .toSeq == want, "terms must be the top-df terms")
   }
 
   test("tx_quality_bins: ntile sizing, monotone deciles, lm-score " +

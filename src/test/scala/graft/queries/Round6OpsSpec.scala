@@ -136,9 +136,19 @@ class Round6OpsSpec extends AnyFunSuite {
   test("rel_basket_affinity: support ordering, triangle form, bounded lift") {
     val rows = q("rel_basket_affinity").collect()
     assert(rows.nonEmpty && rows.length <= 20)
-    val support = rows.map(_.getLong(2))
-    assert(support.zip(support.tail).forall { case (a, b) => a >= b },
-      "not support-ordered")
+    // the rows are the 20 first pairs of the (support desc, a, b)
+    // order, re-derived here from the distinct (order, part) items
+    val items = graft.Tables.lineitem(spark, sf)
+      .select("l_orderkey", "l_partkey").distinct().collect()
+      .groupBy(_.getLong(0)).values.map(_.map(_.getLong(1)).sorted)
+    val support = items.toSeq
+      .flatMap(ps => ps.combinations(2).map(p => (p(0), p(1))))
+      .groupBy(identity).view.mapValues(_.length.toLong).toSeq
+    val top = support.sortBy { case ((a, b), n) => (-n, a, b) }.take(20)
+      .map { case ((a, b), n) => (a, b, n) }
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy { case (a, b, n) => (-n, a, b) }.toSeq === top,
+      "not the top-support pairs")
     rows.foreach { r =>
       val (a, b, both, na, nb, lift) = (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))

@@ -73,7 +73,7 @@ class SemDedupSpec extends AnyFunSuite {
     val got = graft.SparkEntry.queries("dd_semdedup")(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      .toSeq
+      .toSeq.sortBy(_._1)
     assert(got === expected)
   }
 

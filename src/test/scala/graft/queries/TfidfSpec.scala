@@ -21,7 +21,7 @@ class TfidfSpec extends AnyFunSuite {
     val got = TextQueries.tfidfTopK(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
-      .toSeq
+      .toSeq.sortBy(r => (r._1, r._2))
     val expected = Seq(
       (1L, 1L, "a", 2L, 2L, 3.0),
       (1L, 2L, "b", 1L, 2L, 1.5),

@@ -6,7 +6,10 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 For each query dir under verifyOutDir: load the Spark parquet result,
 run the matching oracle SQL from oracle_sql.json in DuckDB with views
 over <sfDir>/*.parquet, sort columns by name, sort rows, and compare
-values exactly. Prints PASS/FAIL per query.
+values exactly. Prints PASS/FAIL per query, and MISSING for every
+oracle key with no committed result directory. Row order is not part
+of a query's result, so both sides are compared as sorted bags. Exits
+1 on any FAIL or MISSING.
 """
 import json
 import sys
@@ -34,8 +37,18 @@ def main(sf_dir: str, out_dir: str) -> None:
     import os
 
     fails = 0
-    for qdir in sorted(glob.glob(f"{out_dir}/*/")):
-        name = os.path.basename(qdir.rstrip("/"))
+    # graft.Verify logs a query that throws and moves on, so a query
+    # with no committed result directory (no _SUCCESS marker) never
+    # ran: that is a failure, not a skip.
+    ran = {
+        os.path.basename(os.path.dirname(m))
+        for m in glob.glob(f"{out_dir}/*/_SUCCESS")
+    }
+    for name in sorted(set(oracle) - ran):
+        print(f"MISSING {name}: no result directory")
+        fails += 1
+    for name in sorted(ran):
+        qdir = f"{out_dir}/{name}"
         got = pd.concat(
             [pd.read_parquet(f) for f in sorted(glob.glob(f"{qdir}/*.parquet"))],
             ignore_index=True,
