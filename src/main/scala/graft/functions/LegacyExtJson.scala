@@ -1,13 +1,16 @@
 package graft.functions
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import com.fasterxml.jackson.core.JsonToken._
+import com.fasterxml.jackson.core.io.{NumberInput, NumberOutput}
 import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
-import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftshim.{toColumn, toExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** E3: MongoDB extended-JSON dialect conversion — canonical/relaxed →
@@ -30,155 +33,286 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Regex      `{"$regularExpression": {pattern, options}}`
   *                             → `{"$regex": p, "$options": o}`
   *
+  * A wrapper's name must be its object's only field; otherwise the
+  * object is plain and its values convert like any other.
+  *
   * Output formatting replicates `json.dumps` defaults (what json_util
   * delegates to): `", "` / `": "` separators, `ensure_ascii` (every
   * non-ASCII UTF-16 unit as `\\uXXXX`), input key order preserved.
   * Already-legacy input passes through unchanged, so the codec is
   * idempotent. Floating-point literals re-render in CPython
   * float-repr form (`pyFloatRepr`) — Python-parity output bytes,
-  * regardless of the source's formatting; integer literals pass
-  * through verbatim.
+  * regardless of the source's formatting; integer literals keep their
+  * value (`-0` becomes `0`). A wrapper's name must be its object's only
+  * field, or the object is plain.
   *
-  * Malformed JSON throws — the reference crashes on undumpable input
-  * too (`KeyError`/`TypeError`); silently nulling would drop a change
-  * event from the stream.
+  * One Jackson `JsonParser` pass reads the UTF-8 bytes and writes the
+  * ASCII output into one growable byte array. Malformed input throws
+  * `IllegalArgumentException` — the reference crashes on undumpable
+  * input too (`KeyError`/`TypeError`); silently nulling would drop a
+  * change event from the stream. Empty input, trailing tokens, a
+  * repeated key and invalid UTF-8 (as Jackson decodes it) count too.
   */
 object LegacyExtJson {
 
-  // Floating-point literals (bare or $numberDouble-wrapped) do NOT
-  // preserve source text: they re-render through pyFloatRepr so the
-  // output is exactly what Python's json.dumps would emit for the
-  // same double — the byte-parity contract is with json_util, not
-  // with the input's formatting.
-  // FAIL_ON_TRAILING_TOKENS: a default readTree stops after the first
-  // value, so `{"_id": 5} {"b": 2}` would convert to `{"_id": 5}`
-  // and drop the rest; trailing whitespace still passes.
-  private val mapper: ObjectMapper = new ObjectMapper()
-    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+  private val factory = new JsonFactory()
 
-  def convert(s: String): String = {
-    val node =
-      try mapper.readTree(s)
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"legacy_ext_json: input is not valid JSON: ${e.getMessage}")
-      }
-    val sb = new java.lang.StringBuilder(s.length)
-    write(node, sb)
-    sb.toString
+  // wrapper name -> the inner fields read from an object value. The
+  // number wrappers read none; they and $date wrap any value, $binary,
+  // $regularExpression and $timestamp an object only.
+  private val NoFields: (String, String) = (null, null)
+  private val Wrappers: Map[String, (String, String)] = Map(
+    "$date" -> ("$numberLong", null), "$numberLong" -> NoFields,
+    "$numberInt" -> NoFields, "$numberDouble" -> NoFields,
+    "$binary" -> ("base64", "subType"), "$regularExpression" -> ("pattern", "options"),
+    "$timestamp" -> ("t", "i"))
+
+  // per ASCII char: 0 = copied, -1 = `\u00XX`, else the char after `\`
+  private val Esc: Array[Byte] = {
+    val t = new Array[Byte](128)
+    (0 until 0x20).foreach(t(_) = -1)
+    t(0x7f) = -1
+    Seq('"' -> '"', '\\' -> '\\', '\n' -> 'n', '\r' -> 'r', '\t' -> 't',
+      '\b' -> 'b', '\f' -> 'f').foreach { case (c, e) => t(c) = e.toByte }
+    t
   }
+  private val Hex = "0123456789abcdef".getBytes("US-ASCII")
 
-  private def write(n: JsonNode, sb: java.lang.StringBuilder): Unit = {
-    if (n.isObject) writeObject(n, sb)
-    else if (n.isArray) {
-      sb.append('[')
-      var first = true
-      val it = n.elements()
-      while (it.hasNext) {
-        if (!first) sb.append(", ")
-        first = false
-        write(it.next(), sb)
-      }
-      sb.append(']')
-    }
-    else if (n.isTextual) writeString(n.asText(), sb)
-    else if (n.isNumber) {
-      // floating-point literals re-render in Python repr form (what
-      // json.dumps emits) so Java-driver exponent notation (1.0E10)
-      // and already-legacy Python text (10000000000.0) both normalize
-      // to the reference's bytes; integer literals pass through
-      if (n.isFloatingPointNumber) sb.append(pyFloatRepr(n.asDouble()))
-      else sb.append(n.asText())
-    }
-    else if (n.isBoolean) sb.append(if (n.asBoolean()) "true" else "false")
-    else sb.append("null") // null node
-  }
+  def convert(s: String): String = convert(UTF8String.fromString(s)).toString
 
-  private def writeObject(n: JsonNode, sb: java.lang.StringBuilder): Unit = {
-    val size = n.size()
-    // ---- canonical wrappers that change shape in the legacy dialect
-    if (size == 1 && n.has("$date")) { writeDate(n.get("$date"), sb); return }
-    if (size == 1 && n.has("$numberLong")) {
-      sb.append(java.lang.Long.parseLong(n.get("$numberLong").asText()))
-      return
-    }
-    if (size == 1 && n.has("$numberInt")) {
-      sb.append(java.lang.Integer.parseInt(n.get("$numberInt").asText()))
-      return
-    }
-    if (size == 1 && n.has("$numberDouble")) {
-      writeDoubleText(n.get("$numberDouble").asText(), sb)
-      return
-    }
-    if (size == 1 && n.has("$binary") && n.get("$binary").isObject) {
-      val b = n.get("$binary")
-      sb.append("{\"$binary\": ")
-      writeString(b.get("base64").asText(), sb)
-      sb.append(", \"$type\": ")
-      writeString(b.get("subType").asText(), sb)
-      sb.append('}')
-      return
-    }
-    if (size == 1 && n.has("$regularExpression") &&
-        n.get("$regularExpression").isObject) {
-      val r = n.get("$regularExpression")
-      sb.append("{\"$regex\": ")
-      writeString(r.get("pattern").asText(), sb)
-      sb.append(", \"$options\": ")
-      writeString(r.get("options").asText(), sb)
-      sb.append('}')
-      return
-    }
-    if (size == 1 && n.has("$timestamp") && n.get("$timestamp").isObject) {
-      // normalize to json_util's {"t": ..., "i": ...} member order
-      val t = n.get("$timestamp")
-      sb.append("{\"$timestamp\": {\"t\": ").append(t.get("t").asLong())
-        .append(", \"i\": ").append(t.get("i").asLong()).append("}}")
-      return
-    }
-    // ---- plain object: recurse, preserving the input's key order
-    sb.append('{')
-    var first = true
-    val fields = n.fields()
-    while (fields.hasNext) {
-      val e = fields.next()
-      if (!first) sb.append(", ")
-      first = false
-      writeString(e.getKey, sb)
-      sb.append(": ")
-      write(e.getValue, sb)
-    }
-    sb.append('}')
-  }
-
-  /** legacy `$date` is integer epoch-millis; accepts canonical
-    * (`{"$numberLong": "ms"}`), relaxed (ISO-8601 string), and
-    * already-legacy (number) input forms
+  /** Reads `s`'s backing bytes in place when they are an on-heap array
+    * (as inside an `UnsafeRow`).
     */
-  private def writeDate(v: JsonNode, sb: java.lang.StringBuilder): Unit = {
-    val millis: Long =
-      if (v.isObject && v.has("$numberLong"))
-        java.lang.Long.parseLong(v.get("$numberLong").asText())
-      else if (v.isTextual)
-        java.time.OffsetDateTime.parse(v.asText()).toInstant.toEpochMilli
-      else if (v.isNumber) v.asLong()
-      else throw new IllegalArgumentException(
-        s"legacy_ext_json: unrecognized $$date value: $v")
-    sb.append("{\"$date\": ").append(millis).append('}')
+  def convert(s: UTF8String): UTF8String = s.getBaseObject match {
+    case a: Array[Byte] =>
+      new Pass(a).run((s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ => new Pass(s.getBytes).run(0, s.numBytes)
   }
 
-  /** canonical `$numberDouble` payloads are strings; the legacy
-    * dialect inlines them as bare tokens in Python float-repr form
-    * (json.dumps delegates to float.__repr__), including the
-    * non-standard `NaN`/`Infinity` literals
-    */
-  private def writeDoubleText(t: String, sb: java.lang.StringBuilder): Unit =
-    t match {
-      case "NaN" => sb.append("NaN")
-      case "Infinity" => sb.append("Infinity")
-      case "-Infinity" => sb.append("-Infinity")
-      case s => sb.append(pyFloatRepr(java.lang.Double.parseDouble(s)))
+  // a wrapper's value as the tree's asText/asLong read it: a String
+  // ("null" for null, "" for a container), a Number or a Boolean
+  private def text(v: AnyRef): String =
+    if (v != null) v.toString else throw new IllegalArgumentException(
+      "legacy_ext_json: a wrapper's inner field is missing")
+
+  private def long(v: AnyRef): Long = v match {
+    case n: Number => n.longValue
+    case b: java.lang.Boolean => if (b) 1L else 0L
+    case _ => NumberInput.parseAsLong(text(v), 0L)
+  }
+
+  /** One conversion; the current parser reads `in` from `base` on. */
+  private final class Pass(in: Array[Byte]) {
+    private var out: Array[Byte] = _
+    private var at = 0
+    private var base = 0
+    // the keys of the objects open in the output, innermost last
+    private var keys = new Array[String](16)
+    private var nKeys = 0
+
+    def run(off: Int, len: Int): UTF8String = {
+      // Jackson reads UTF-16/32 after a byte order mark or a NUL in the
+      // first four bytes and skips a UTF-8 mark; JSON text has neither
+      if (len > 0 && in(off) < 0 || (off until off + math.min(len, 4)).exists(in(_) == 0))
+        bad("not UTF-8 JSON text")
+      out = new Array[Byte](len + (len >> 3) + 16)
+      base = off
+      val p = factory.createParser(in, off, len)
+      try {
+        if (p.nextToken() == null) bad("empty input")
+        value(p)
+        if (p.nextToken() != null) bad("trailing tokens after the value")
+      } catch { case e: java.io.IOException => bad(e.getMessage) }
+      finally p.close()
+      UTF8String.fromBytes(out, 0, at)
     }
+
+    private def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"legacy_ext_json: input is not valid JSON: $why")
+
+    private def value(p: JsonParser): Unit = p.currentToken match {
+      case VALUE_STRING => string(p.getTextCharacters, p.getTextOffset, p.getTextLength)
+      case START_OBJECT => obj(p)
+      case VALUE_NUMBER_INT =>
+        if (p.getNumberType == JsonParser.NumberType.BIG_INTEGER)
+          ascii(p.getBigIntegerValue.toString)
+        else putLong(p.getLongValue)
+      case VALUE_NUMBER_FLOAT => ascii(pyFloatRepr(p.getDoubleValue))
+      case START_ARRAY =>
+        put('[')
+        if (p.nextToken() != END_ARRAY) {
+          value(p)
+          while (p.nextToken() != END_ARRAY) { ascii(", "); value(p) }
+        }
+        put(']')
+      case t => ascii(if (t == VALUE_TRUE) "true" else if (t == VALUE_FALSE) "false" else "null")
+    }
+
+    /** An object, START_OBJECT to END_OBJECT. A wrapper-named first field
+      * is written as a plain one; if the object ends after it, the output
+      * goes back to `mark` and the wrapper's legacy form replaces it. A
+      * container value is read for the wrapper's inner fields, not
+      * written, and parsed again from its bytes if more fields follow.
+      */
+    private def obj(p: JsonParser): Unit = {
+      val mark = at
+      if (p.nextToken() == END_OBJECT) { ascii("{}"); return }
+      val w = p.currentName
+      val names = if (w.startsWith("$")) Wrappers.getOrElse(w, null) else null
+      var first = names != null // and so the object may be a wrapper
+      val start = nKeys
+      put('{')
+      do {
+        if (at > mark + 1) ascii(", ")
+        key(p, start)
+        val t = p.nextToken()
+        if (!first) { value(p); p.nextToken() }
+        else {
+          first = false
+          val open = t == START_OBJECT || t == START_ARRAY
+          val from = if (open) p.currentTokenLocation.getByteOffset.toInt else 0
+          val v: AnyRef =
+            if (t == START_OBJECT && !(names eq NoFields)) inner(p, names)
+            else { val s = scalar(p); if (!open) value(p); s }
+          val until = if (open) p.currentTokenLocation.getByteOffset.toInt + 1 else 0
+          if (p.nextToken() == END_OBJECT &&
+              (t == START_OBJECT || (names eq NoFields) || w == "$date")) {
+            at = mark
+            nKeys = start
+            return wrapper(w, v)
+          }
+          if (open) reparse(from, until)
+        }
+      } while (p.currentToken != END_OBJECT)
+      nKeys = start
+      put('}')
+    }
+
+    /** Writes the current field's key. A parsed tree (a Python dict)
+      * keeps a repeated key's last value at its first position, which
+      * one pass cannot do: a key repeated in its object throws.
+      */
+    private def key(p: JsonParser, start: Int): Unit = {
+      val k = p.currentName
+      var i = start
+      while (i < nKeys) { if (keys(i) == k) bad(s"repeated key $k"); i += 1 }
+      if (nKeys == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * nKeys)
+      keys(nKeys) = k
+      nKeys += 1
+      string(p.getTextCharacters, p.getTextOffset, p.getTextLength)
+      ascii(": ")
+    }
+
+    private def reparse(from: Int, until: Int): Unit = {
+      val outer = base
+      base = outer + from
+      val q = factory.createParser(in, base, until - from)
+      try { q.nextToken(); value(q) } finally { q.close(); base = outer }
+    }
+
+    // the object at START_OBJECT, read to END_OBJECT for two fields' values
+    private def inner(p: JsonParser, names: (String, String)): Array[AnyRef] = {
+      val got = new Array[AnyRef](2)
+      while (p.nextToken() != END_OBJECT) {
+        val n = p.currentName
+        p.nextToken()
+        val v = scalar(p)
+        if (n == names._1) got(0) = v else if (n == names._2) got(1) = v
+      }
+      got
+    }
+
+    private def scalar(p: JsonParser): AnyRef = p.currentToken match {
+      case VALUE_STRING => p.getText
+      case VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT => p.getNumberValue
+      case VALUE_TRUE | VALUE_FALSE => java.lang.Boolean.valueOf(p.getBooleanValue)
+      case VALUE_NULL => "null"
+      case _ => p.skipChildren(); ""
+    }
+
+    private def wrapper(w: String, v: AnyRef): Unit = {
+      def f = v.asInstanceOf[Array[AnyRef]]
+      w match {
+        case "$date" =>
+          // legacy `$date` is integer epoch-millis, from canonical
+          // `{"$numberLong": "ms"}`, relaxed ISO-8601 or legacy input
+          val ms = v match {
+            case f: Array[AnyRef] if f(0) != null => java.lang.Long.parseLong(text(f(0)))
+            case s: String =>
+              try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
+              catch { case e: java.time.DateTimeException => bad(e.getMessage) }
+            case n: Number => n.longValue
+            case _ => bad("unrecognized $date value")
+          }
+          ascii("{\"$date\": ")
+          putLong(ms)
+          put('}')
+        case "$numberLong" => putLong(java.lang.Long.parseLong(text(v)))
+        case "$numberInt" => putLong(java.lang.Integer.parseInt(text(v)))
+        case "$numberDouble" => text(v) match {
+          case t @ ("NaN" | "Infinity" | "-Infinity") => ascii(t)
+          case t => ascii(pyFloatRepr(java.lang.Double.parseDouble(t)))
+        }
+        case "$timestamp" => // json_util's {"t": ..., "i": ...} member order
+          ascii("{\"$timestamp\": {\"t\": ")
+          putLong(long(f(0)))
+          ascii(", \"i\": ")
+          putLong(long(f(1)))
+          ascii("}}")
+        case _ =>
+          val binary = w == "$binary"
+          ascii(if (binary) "{\"$binary\": " else "{\"$regex\": ")
+          string(text(f(0)))
+          ascii(if (binary) ", \"$type\": " else ", \"$options\": ")
+          string(text(f(1)))
+          put('}')
+      }
+    }
+
+    private def room(n: Int): Unit =
+      if (at + n > out.length) out = java.util.Arrays.copyOf(out, math.max(2 * out.length, at + n))
+
+    private def put(c: Char): Unit = { room(1); out(at) = c.toByte; at += 1 }
+
+    private def ascii(s: String): Unit = {
+      room(s.length)
+      var i = 0
+      while (i < s.length) { out(at + i) = s.charAt(i).toByte; i += 1 }
+      at += s.length
+    }
+
+    private def putLong(v: Long): Unit = { room(20); at = NumberOutput.outputLong(v, out, at) }
+
+    private def string(s: String): Unit = string(s.toCharArray, 0, s.length)
+
+    /** Python json.dumps default escaping: ensure_ascii, named escapes
+      * for the C0 controls that have them, `\\uXXXX` for the rest and
+      * for every char above 0x7E (surrogate halves escape per UTF-16
+      * unit, exactly like CPython).
+      */
+    private def string(cs: Array[Char], from: Int, len: Int): Unit = {
+      room(len + 2) // a byte a char and the quotes; an escape asks for more
+      put('"')
+      var i = from
+      while (i < from + len) {
+        val c = cs(i)
+        val e: Byte = if (c < 0x80) Esc(c) else -1
+        if (e == 0) { out(at) = c.toByte; at += 1 }
+        else {
+          room(from + len - i + 6)
+          out(at) = '\\'.toByte
+          if (e > 0) { out(at + 1) = e; at += 2 }
+          else {
+            out(at + 1) = 'u'.toByte
+            for (k <- 0 to 3) out(at + 2 + k) = Hex((c >> (12 - 4 * k)) & 0xf)
+            at += 6
+          }
+        }
+        i += 1
+      }
+      put('"')
+    }
+  }
 
   /** CPython float.__repr__: shortest round-trip digits, positional
     * form while the decimal exponent is in [-4, 16), otherwise
@@ -216,6 +350,8 @@ object LegacyExtJson {
     // collect the significant digits and where the point falls
     val s = DoubleToDecimal.toString(abs)
     val ePos = s.indexOf('E')
+    // 1e-3 <= abs < 1e7: CPython's positional text is Schubfach's
+    if (ePos < 0) return if (neg) "-" + s else s
     val mantEnd = if (ePos < 0) s.length else ePos
     val sig = new java.lang.StringBuilder(17)
     var intLen = 0 // mantissa chars before the point, leading zeros included
@@ -263,38 +399,13 @@ object LegacyExtJson {
     sb.toString
   }
 
-  /** Python json.dumps default escaping: ensure_ascii, named escapes
-    * for the C0 controls that have them, `\\uXXXX` for the rest and
-    * for every char above 0x7E (surrogate halves escape per UTF-16
-    * unit, exactly like CPython).
-    */
-  private def writeString(s: String, sb: java.lang.StringBuilder): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '\b' => sb.append("\\b")
-        case '\f' => sb.append("\\f")
-        case _ =>
-          if (c < 0x20 || c > 0x7e) sb.append(f"\\u${c.toInt}%04x")
-          else sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('"')
-  }
 }
 
 /** `legacy_ext_json(col)` as a Catalyst expression: string → string,
   * codegen'd as a single static call so it stays inside whole-stage
-  * codegen (the conversion itself is allocation-light: one Jackson
-  * parse + one StringBuilder per value).
+  * codegen. Both paths hand the `UTF8String` itself to
+  * `LegacyExtJson.convert`, which reads its backing bytes in place: one
+  * parser pass and one output array per value.
   */
 case class LegacyExtJsonExpr(child: Expression) extends UnaryExpression {
 
@@ -309,13 +420,10 @@ case class LegacyExtJsonExpr(child: Expression) extends UnaryExpression {
         child.dataType.simpleString)
 
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      LegacyExtJson.convert(input.asInstanceOf[UTF8String].toString))
+    LegacyExtJson.convert(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.LegacyExtJson.convert($c.toString()))")
+    defineCodeGen(ctx, ev, c => s"graft.functions.LegacyExtJson.convert($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): LegacyExtJsonExpr = copy(child = newChild)

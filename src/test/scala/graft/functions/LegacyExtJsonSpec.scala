@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.{ChangeEvents, EnvelopeTransform, UpdateDescription}
@@ -191,6 +192,69 @@ class LegacyExtJsonSpec extends AnyFunSuite {
       val interp = df.select(LegacyExtJsonCol(col("j"))).head().getString(0)
       assert(interp === viaExpr)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("a repeated key throws; the tree kept the last value at the first position") {
+    val in = """{"a": 1, "b": 2, "a": 3}"""
+    intercept[IllegalArgumentException](LegacyExtJson.convert(in))
+    assert(LegacyExtJsonTree.convert(in) === """{"a": 3, "b": 2}""")
+    // a repeated wrapper name made the tree see a one-field wrapper
+    intercept[IllegalArgumentException](
+      LegacyExtJson.convert("""{"$date": 1, "$date": 2}"""))
+    // inside a wrapper's inner object the last value wins, as in the tree
+    val inner = """{"$binary": {"base64": "YQ==", "base64": "Yg==", "subType": "00"}}"""
+    assert(LegacyExtJson.convert(inner) === LegacyExtJsonTree.convert(inner))
+    // the same key in different objects is not a repeat
+    assert(LegacyExtJson.convert("""{"a": {"a": 1}, "b": [{"a": 2}, {"a": 3}]}""") ===
+      """{"a": {"a": 1}, "b": [{"a": 2}, {"a": 3}]}""")
+  }
+
+  test("invalid UTF-8 throws; the tree read it as U+FFFD") {
+    def bytes(xs: Int*) = UTF8String.fromBytes(xs.map(_.toByte).toArray)
+    val q = '"'.toInt
+    for (bad <- Seq(
+        bytes(q, 0xff, q), // never a UTF-8 byte
+        bytes(q, 0xc3, q), // a cut 2-byte sequence
+        bytes(q, 0xe6, 0x97, q), // a cut 3-byte sequence
+        bytes(q, 0xed, 0xa0, 0x80, q), // an encoded surrogate
+        bytes('{', q, 0x80, q, ':', '1', '}'), // a bare continuation byte, in a key
+        bytes(0xef, 0xbb, 0xbf, '1'), // a byte order mark
+        bytes('{', 0, '}', 0))) // UTF-16 to Jackson's encoding sniffing
+      intercept[IllegalArgumentException](LegacyExtJson.convert(bad))
+    assert(LegacyExtJsonTree.convert(bytes(q, 0xff, q).toString) === "\"\\ufffd\"")
+  }
+
+  test("empty or blank input throws; the tree converted it to null") {
+    for (blank <- Seq("", " ", "\n\t "))
+      intercept[IllegalArgumentException](LegacyExtJson.convert(blank))
+    assert(LegacyExtJsonTree.convert(" ") === "null")
+  }
+
+  test("reads a string in place at an offset, on-heap or off-heap, in both eval paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.Platform
+    val in = s"""{"_id": {"$$oid": "$oid"}, "t": {"$$date": {"$$numberLong": "1720890531823"}}, "s": "é"}"""
+    val want = s"""{"_id": {"$$oid": "$oid"}, "t": {"$$date": 1720890531823}, "s": "\\u00e9"}"""
+    val bytes = in.getBytes("UTF-8")
+    // a slice of a larger array
+    val padded = Array.fill[Byte](7)('x') ++ bytes ++ Array.fill[Byte](5)('}')
+    assert(LegacyExtJson.convert(UTF8String.fromBytes(padded, 7, bytes.length)).toString === want)
+    // off-heap bytes
+    val addr = Platform.allocateMemory(bytes.length)
+    try {
+      Platform.copyMemory(bytes, Platform.BYTE_ARRAY_OFFSET, null, addr, bytes.length)
+      assert(LegacyExtJson.convert(UTF8String.fromAddress(null, addr, bytes.length))
+        .toString === want)
+    } finally Platform.freeMemory(addr)
+    // the second field of an UnsafeRow: a slice of the row's buffer
+    val row = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
+      StringType, StringType))(InternalRow(UTF8String.fromString("pad"), UTF8String.fromString(in)))
+    assert(row.getUTF8String(1).getBaseOffset > Platform.BYTE_ARRAY_OFFSET)
+    val expr = LegacyExtJsonExpr(BoundReference(1, StringType, nullable = true))
+    assert(expr.eval(row).toString === want)
+    assert(UnsafeProjection.create(Seq(expr))(row).getUTF8String(0).toString === want)
   }
 
   test("canonical-mode update fixture converts to the exact legacy envelope bytes") {

@@ -46,6 +46,9 @@ LAYERS = [
         "org.apache.spark.sql.execution.SortExec",
         "org.apache.spark.sql.execution.UnsafeExternalRowSorter",
         "org.apache.spark.util.collection.unsafe.sort.")),
+    # the legacy-dialect codec is called from the envelope's codegen'd
+    # code, so it is tested before the envelope
+    ("legacy codec", has("graft.functions.LegacyExtJson")),
     # the map stage's codegen'd source scan and envelope run inside the
     # shuffle writer's input iterator, so they are tested first
     ("envelope codegen", lambda fs: in_map_stage(fs) and has(

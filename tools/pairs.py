@@ -14,9 +14,12 @@ BENCHMARK.json (read, never written) it prints a markdown table row: the
 parent's median, quartiles (linear interpolation) and min-max, the
 change's median and quartiles, the change/parent ratio of medians, the
 change's wins over the pairs (seeds run by both sides) and whether the
-metric is resolved: the parent's own min-max range, relative to its
-median, is inside the metric's bound, or the change's min-max range lies
-wholly on the better side of the parent's. Below each table it names
+metric is resolved. Next to the wins it gives the wins within each
+block of ten consecutive seeds (3300-3309, 3310-3319, ...), so a gain or
+loss that only one block of runs carries shows. A metric is resolved
+when the parent's own min-max range, relative to its median, is inside
+the metric's bound, or the change's min-max range lies wholly on the
+better side of the parent's. Below each table it names
 the metrics whose change median is worse than the parent's by more than
 the bound, the metrics that meet the gain rule (at least ten pairs, wins
 in >= 9 of 10 of them and a median gap above the parent's interquartile
@@ -75,6 +78,17 @@ def value(res, name):
     return (res.get("metrics", {}).get(name) or {}).get("value")
 
 
+def blocks(seeds, won):
+    """' (3301-3305: 5/5, 3311-3315: 0/5)': wins per block of ten seeds."""
+    groups = {}
+    for s in seeds:
+        groups.setdefault(s // 10, []).append(s)
+    if len(groups) < 2:
+        return ""
+    return " (" + ", ".join(f"{g[0]}-{g[-1]}: {sum(s in won for s in g)}/{len(g)}"
+                            for _, g in sorted(groups.items())) + ")"
+
+
 def table(name, runs, metrics):
     others = [s for s in runs if s != PARENT]
     if PARENT not in runs or len(others) != 1:
@@ -97,9 +111,10 @@ def table(name, runs, metrics):
             continue
         pmed, cmed = statistics.median(pv), statistics.median(cv)
         (pq1, pq3), (cq1, cq3) = quartiles(pv), quartiles(cv)
-        pairs = [(value(p_runs[s], key), value(c_runs[s], key)) for s in seeds]
-        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
-        wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
+        pairs = {s: (value(p_runs[s], key), value(c_runs[s], key)) for s in seeds}
+        pairs = {s: (p, c) for s, (p, c) in pairs.items() if p is not None and c is not None}
+        won = {s for s, (p, c) in pairs.items() if (c < p if lower else c > p)}
+        wins = len(won)
         spread = (max(pv) - min(pv)) / pmed if pmed else float("inf")
         apart = max(cv) < min(pv) if lower else min(cv) > max(pv)
         resolved = "yes" if spread <= bound else \
@@ -107,7 +122,7 @@ def table(name, runs, metrics):
             f"no (parent range {spread:.0%} > bound {bound:.0%})"
         ratio = cmed / pmed if pmed else float("nan")
         print(f"| {key} | {fmt(pmed)} | {fmt(pq1)}-{fmt(pq3)} | {fmt(min(pv))}-{fmt(max(pv))} "
-              f"| {fmt(cmed)} | {fmt(cq1)}-{fmt(cq3)} | {ratio:.3f} | {wins}/{len(pairs)} "
+              f"| {fmt(cmed)} | {fmt(cq1)}-{fmt(cq3)} | {ratio:.3f} | {wins}/{len(pairs)}{blocks(sorted(pairs), won)} "
               f"| {resolved} |")
         if (ratio - 1 if lower else 1 - ratio) > bound:
             worse.append(f"{key} ({ratio:.3f})")
