@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Remove the words at the given 1-based positions and re-join with
@@ -24,33 +22,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * included), and a fully-cut doc yields ("", 0) — the legacy
   * left-join-restore branch.
   *
-  * Why an expression: the legacy spelling shuffles one row PER WORD
+  * Why a kernel: the legacy spelling shuffles one row PER WORD
   * twice (anti-join, then the reassembly groupBy) and pays a per-doc
   * array_sort; this moves the corpus text exactly once (the doc-keyed
   * join that attaches `cuts`) and rewrites at scan speed. The
   * interpreted-HOF row-local spelling (zip_with + filter +
   * array_contains per word) measured SLOWER than the exploded
   * baseline (1.49 s vs 1.39 s at sf0.1) — per-element lambda
-  * interpretation again, the H60BucketSum finding. String building
-  * dominates and gains nothing from codegen, so CodegenFallback (the
-  * WordShingles rationale).
+  * interpretation again, the H60BucketSum finding.
   *
   * `cuts` may arrive unsorted (collect_set) and may contain
   * positions past the word count (a doc's trailing gram covers
   * positions that exist, but defensive anyway); both are handled by
   * sorting a copy and merge-walking.
   */
-case class CutWordsExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+object CutWords {
+  /** cuts: array<bigint> of 1-based word positions to remove. */
+  def apply(text: Column, cuts: Column): Column =
+    kernelCall("cut_words", this, "eval", StructType(Seq(
+      StructField("kept_text", StringType, nullable = false),
+      StructField("n_kept_words", LongType, nullable = false))),
+      Seq(text -> StringType, cuts -> ArrayType(LongType)))
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("kept_text", StringType, nullable = false),
-    StructField("n_kept_words", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(textAny: Any, cutsAny: Any): Any = {
-    val words = textAny.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val cutsData = cutsAny.asInstanceOf[ArrayData]
+  def eval(text: UTF8String, cutsData: ArrayData): InternalRow = {
+    val words = Grams.words(text)
     val nCuts = cutsData.numElements()
     val cuts = new Array[Long](nCuts)
     var i = 0
@@ -72,18 +67,6 @@ case class CutWordsExpr(left: Expression, right: Expression)
       p += 1L
       i += 1
     }
-    val row = new GenericInternalRow(2)
-    row.update(0, UTF8String.fromString(sb.toString))
-    row.setLong(1, kept)
-    (row: InternalRow)
+    InternalRow(UTF8String.fromString(sb.toString), kept)
   }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CutWordsExpr = copy(left = l, right = r)
-}
-
-object CutWords {
-  /** cuts: array<bigint> of 1-based word positions to remove. */
-  def apply(text: Column, cuts: Column): Column =
-    toColumn(CutWordsExpr(toExpression(text), toExpression(cuts)))
 }

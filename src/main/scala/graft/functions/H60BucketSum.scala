@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Σ table(h60(gram) mod table.length) over a text's word-`k`-grams —
@@ -13,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * scorer here (DSIR importance, the quality classifier's bucket
   * votes).
   *
-  * Why an expression and not Columns: the declarative spelling —
+  * Why a kernel and not Columns: the declarative spelling —
   * `aggregate(bigrams, 0L, (acc, g) => acc + element_at(tableLit,
   * pmod(h60(g), B) + 1))` — evaluates its lambda INTERPRETED per
   * element (Spark's higher-order functions run the lambda through
@@ -25,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * 3.2k docs/s with the dense ARRAY literal (O(1) fetch, but the
   * HOF lambda still interpreted). This walks the words once in
   * tight JVM code — ThreadLocal MD5, reused StringBuilder, O(1)
-  * table index — the [[PosGramHashes]] discipline; the md5 work
-  * dominates, so CodegenFallback's one boxed call per ROW is noise.
+  * table index — the [[PosGramHashes]] discipline. The table is
+  * passed to the call as an `Array[Long]` literal, not copied per row.
   *
   * Hash parity contract (shared with PosGramHashes/WinnowHashes):
   * h60(s) = first 15 hex chars of md5(s) as a 60-bit integer —
@@ -35,64 +33,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * BIGINT)`. Token semantics match `split(text, " ", -1)`; fewer
   * than `k` words sums to 0.
   */
-case class H60BucketSumExpr(child: Expression, table: IndexedSeq[Long],
-    k: Int) extends UnaryExpression with CodegenFallback {
-
-  require(k >= 1, "gram width must be >= 1")
-  require(table.nonEmpty, "bucket table must be non-empty")
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val md =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  // table as a bare array for the hot loop (IndexedSeq in the case
-  // class keeps TreeNode equality value-based)
-  @transient private lazy val tableArr: Array[Long] = table.toArray
-
-  private def h60(s: String): Long = {
-    val digest = md.get()
-    digest.reset()
-    val d = digest.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4 // top 60 bits = first 15 hex chars
+object H60BucketSum {
+  def apply(c: Column, table: Seq[Long], k: Int): Column = {
+    require(k >= 1, "gram width must be >= 1")
+    require(table.nonEmpty, "bucket table must be non-empty")
+    kernelCall("h60_bucket_sum", this, "eval", LongType, Seq(c -> StringType),
+      Seq(table.toArray, k))
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String, table: Array[Long], k: Int): Long = {
+    val words = Grams.words(s)
     val m = words.length - k + 1
     if (m <= 0) return 0L
-    val t = tableArr
-    val b = t.length
+    val b = table.length
     val sb = new java.lang.StringBuilder(64)
     var sum = 0L
     var i = 0
     while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j))
-        j += 1
-      }
       // h60 is non-negative (60-bit), so % == pmod here
-      sum += t((h60(sb.toString) % b).toInt)
+      sum += table((Grams.h60(Grams.gram(words, i, k, sb)) % b).toInt)
       i += 1
     }
     sum
   }
-
-  override protected def withNewChildInternal(c: Expression): H60BucketSumExpr =
-    copy(child = c)
-}
-
-object H60BucketSum {
-  def apply(c: Column, table: Seq[Long], k: Int): Column =
-    toColumn(H60BucketSumExpr(toExpression(c), table.toIndexedSeq, k))
 }

@@ -1,13 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,45 +94,11 @@ object JsonLine {
   }
 }
 
-/** `JsonLine.encode(key, value)` as a Catalyst expression: never null,
-  * codegen'd as one static call so it stays inside whole-stage codegen.
+/** `JsonLine.encode(key, value)` as one static call: never null, and a
+  * null key or value is passed on to `encode`, which leaves it out.
   */
-case class JsonLineExpr(key: Expression, value: Expression)
-    extends BinaryExpression {
-
-  override def left: Expression = key
-  override def right: Expression = value
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType == StringType && value.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "json_line requires two string arguments, got " +
-        s"${key.dataType.simpleString}, ${value.dataType.simpleString}")
-
-  override def eval(input: InternalRow): Any =
-    JsonLine.encode(key.eval(input).asInstanceOf[UTF8String],
-      value.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = key.genCode(ctx)
-    val v = value.genCode(ctx)
-    ev.copy(code = code"""
-      |${k.code}
-      |${v.code}
-      |UTF8String ${ev.value} = graft.functions.JsonLine.encode(
-      |  ${k.isNull} ? null : ${k.value}, ${v.isNull} ? null : ${v.value});
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JsonLineExpr =
-    copy(key = newLeft, value = newRight)
-}
-
 object JsonLineCol {
   def apply(key: Column, value: Column): Column =
-    toColumn(JsonLineExpr(toExpression(key), toExpression(value)))
+    kernelCall("json_line", JsonLine, "encode", StringType,
+      Seq(key -> StringType, value -> StringType), propagateNull = false)
 }

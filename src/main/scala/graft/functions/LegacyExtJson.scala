@@ -6,10 +6,8 @@ import com.fasterxml.jackson.core.io.{NumberInput, NumberOutput}
 import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -352,12 +350,11 @@ object LegacyExtJson {
     val ePos = s.indexOf('E')
     // 1e-3 <= abs < 1e7: CPython's positional text is Schubfach's
     if (ePos < 0) return if (neg) "-" + s else s
-    val mantEnd = if (ePos < 0) s.length else ePos
     val sig = new java.lang.StringBuilder(17)
     var intLen = 0 // mantissa chars before the point, leading zeros included
     var lead = 0 // leading zeros
     var i = 0
-    while (i < mantEnd) {
+    while (i < ePos) {
       val c = s.charAt(i)
       if (c == '.') intLen = i
       else if (c == '0' && sig.length == 0) lead += 1
@@ -367,8 +364,7 @@ object LegacyExtJson {
     var end = sig.length
     while (sig.charAt(end - 1) == '0') end -= 1
     var digits = sig.substring(0, end)
-    var e10 = intLen - lead - 1 +
-      (if (ePos < 0) 0 else Integer.parseInt(s, ePos + 1, s.length, 10))
+    var e10 = intLen - lead - 1 + Integer.parseInt(s, ePos + 1, s.length, 10)
     if (digits.length == 2 && abs < java.lang.Double.MIN_NORMAL) {
       val one = new java.math.BigDecimal(abs)
         .round(new java.math.MathContext(1, java.math.RoundingMode.HALF_EVEN))
@@ -398,38 +394,13 @@ object LegacyExtJson {
     }
     sb.toString
   }
-
 }
 
-/** `legacy_ext_json(col)` as a Catalyst expression: string → string,
-  * codegen'd as a single static call so it stays inside whole-stage
-  * codegen. Both paths hand the `UTF8String` itself to
-  * `LegacyExtJson.convert`, which reads its backing bytes in place: one
-  * parser pass and one output array per value.
+/** `legacy_ext_json(col)`: string → string, one static call to
+  * `LegacyExtJson.convert`, which reads the `UTF8String`'s backing
+  * bytes in place: one parser pass and one output array per value.
   */
-case class LegacyExtJsonExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"legacy_ext_json requires a string argument, got " +
-        child.dataType.simpleString)
-
-  override def nullSafeEval(input: Any): Any =
-    LegacyExtJson.convert(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LegacyExtJson.convert($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): LegacyExtJsonExpr = copy(child = newChild)
-}
-
 object LegacyExtJsonCol {
   def apply(c: Column): Column =
-    toColumn(LegacyExtJsonExpr(toExpression(c)))
+    kernelCall("legacy_ext_json", LegacyExtJson, "convert", StringType, Seq(c -> StringType))
 }

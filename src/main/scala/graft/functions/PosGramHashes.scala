@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Positional word-`k`-gram hashes in one pass: for every 1-based
@@ -17,9 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array_join → md5 HOF chain, which re-materialized a k-word string
   * via generic array ops per position; this walks the word array
   * once with a reused StringBuilder at md5 speed (the same
-  * WinnowHashes discipline — array builders gain little from
-  * codegen, so CodegenFallback; the md5 work is tight JVM code
-  * either way).
+  * WinnowHashes discipline).
   *
   * Hash parity contract: h60(s) = first 15 hex chars of md5(s) as a
   * 60-bit integer — identical to
@@ -29,63 +25,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * words yields an empty array (the `size(w) >= 16` filter's
   * behavior).
   */
-case class PosGramHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  require(k >= 1, "gram width must be >= 1")
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("p", LongType, nullable = false),
-      StructField("gh", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val md =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  private def h60(s: String): Long = {
-    val digest = md.get()
-    digest.reset()
-    val d = digest.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4 // top 60 bits = first 15 hex chars
+object PosGramHashes {
+  def apply(c: Column, k: Int): Column = {
+    require(k >= 1, "gram width must be >= 1")
+    kernelCall("pos_gram_hashes", this, "eval", ArrayType(
+      StructType(Seq(
+        StructField("p", LongType, nullable = false),
+        StructField("gh", LongType, nullable = false))),
+      containsNull = false), Seq(c -> StringType), Seq(k))
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String, k: Int): ArrayData = {
+    val words = Grams.words(s)
     val m = words.length - k + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m)
     val sb = new java.lang.StringBuilder(64)
     var i = 0
     while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j))
-        j += 1
-      }
-      val row = new GenericInternalRow(2)
-      row.setLong(0, i + 1L) // 1-based position
-      row.setLong(1, h60(sb.toString))
-      out(i) = (row: InternalRow)
+      // 1-based position
+      out(i) = InternalRow(i + 1L, Grams.h60(Grams.gram(words, i, k, sb)))
       i += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): PosGramHashesExpr =
-    copy(child = c)
-}
-
-object PosGramHashes {
-  def apply(c: Column, k: Int): Column =
-    toColumn(PosGramHashesExpr(toExpression(c), k))
 }

@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Drop the fixed-width word segments ("lines") whose h60 hash is in
@@ -26,45 +24,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(substring(md5(g), 1, 15), 16, 10)` (the PosGramHashes
   * contract).
   *
-  * Why an expression: the legacy spelling shuffled one row PER LINE
+  * Why a kernel: the legacy spelling shuffled one row PER LINE
   * — carrying the line STRING — twice (the (source, lh) anti-join,
   * then the reassembly groupBy(doc_id)), ~1.5× corpus bytes over the
   * network each, for a decision that only needs the per-domain
   * boilerplate hash SET (bounded by lines with df ≥ threshold — the
   * frequent tail of a domain, small by construction). Attaching that
   * set by one dimension join and stripping row-locally moves corpus
-  * text zero times. String building + md5 dominate and gain nothing
-  * from codegen, so CodegenFallback (the WordShingles rationale).
+  * text zero times.
   */
-case class StripSegmentsExpr(left: Expression, right: Expression, w: Int)
-    extends BinaryExpression with CodegenFallback {
-
-  require(w >= 1, "segment width must be >= 1")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("kept_text", StringType, nullable = false),
-    StructField("n_kept", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val md =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  private def h60(s: String): Long = {
-    val digest = md.get()
-    digest.reset()
-    val d = digest.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4 // top 60 bits = first 15 hex chars
+object StripSegments {
+  /** drop: array<bigint> of h60 hashes of segments to strip. */
+  def apply(text: Column, drop: Column, w: Int): Column = {
+    require(w >= 1, "segment width must be >= 1")
+    kernelCall("strip_segments", this, "eval", StructType(Seq(
+      StructField("kept_text", StringType, nullable = false),
+      StructField("n_kept", LongType, nullable = false))),
+      Seq(text -> StringType, drop -> ArrayType(LongType)), Seq(w))
   }
 
-  override def nullSafeEval(textAny: Any, dropAny: Any): Any = {
-    val words = textAny.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val dropData = dropAny.asInstanceOf[ArrayData]
+  def eval(text: UTF8String, dropData: ArrayData, w: Int): InternalRow = {
+    val words = Grams.words(text)
     val nDrop = dropData.numElements()
     val drop = new java.util.HashSet[java.lang.Long](math.max(nDrop * 2, 8))
     var i = 0
@@ -75,35 +55,14 @@ case class StripSegmentsExpr(left: Expression, right: Expression, w: Int)
     var kept = 0L
     var li = 0
     while (li < nl) {
-      seg.setLength(0)
-      var j = li * w
-      val end = math.min(j + w, words.length)
-      while (j < end) {
-        if (j > li * w) seg.append(' ')
-        seg.append(words(j))
-        j += 1
-      }
-      val s = seg.toString
-      if (!drop.contains(h60(s))) {
+      val s = Grams.gram(words, li * w, math.min(w, words.length - li * w), seg)
+      if (!drop.contains(Grams.h60(s))) {
         if (kept > 0L) sb.append(' ')
         sb.append(s)
         kept += 1L
       }
       li += 1
     }
-    val row = new GenericInternalRow(2)
-    row.update(0, UTF8String.fromString(sb.toString))
-    row.setLong(1, kept)
-    (row: InternalRow)
+    InternalRow(UTF8String.fromString(sb.toString), kept)
   }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): StripSegmentsExpr =
-    copy(left = l, right = r)
-}
-
-object StripSegments {
-  /** drop: array<bigint> of h60 hashes of segments to strip. */
-  def apply(text: Column, drop: Column, w: Int): Column =
-    toColumn(StripSegmentsExpr(toExpression(text), toExpression(drop), w))
 }

@@ -3,11 +3,9 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The shared single-pass gate-metric kernel: token count, distinct
@@ -19,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[functions] object GateMetricsKernel {
   /** Returns [n_tokens, uniq_n, stop_n, maxn, d3]. */
-  def of(text: String): Array[Long] = {
-    val words = text.split(" ", -1)
+  def of(text: UTF8String): Array[Long] = {
+    val words = Grams.words(text)
     val n = words.length
     val counts = mutable.HashMap.empty[String, Long]
     var stopN = 0L
@@ -62,23 +60,12 @@ private[functions] object GateMetricsKernel {
   * Values are bit-identical to the aggregate spelling (the oracle
   * compare and the parity specs both pin it).
   */
-case class TextGateMetricsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      GateMetricsKernel.of(input.asInstanceOf[UTF8String].toString)
-        .map(v => v: Any))
-
-  override protected def withNewChildInternal(c: Expression)
-      : TextGateMetricsExpr = copy(child = c)
-}
-
 object TextGateMetrics {
-  def apply(c: Column): Column = toColumn(TextGateMetricsExpr(toExpression(c)))
+  def apply(c: Column): Column =
+    kernelCall("text_gate_metrics", this, "eval", ArrayType(LongType, containsNull = false),
+      Seq(c -> StringType))
+
+  def eval(s: UTF8String): ArrayData = new GenericArrayData(GateMetricsKernel.of(s))
 }
 
 /** The Gopher rule-family metrics as an array<long> [n_words, chars,
@@ -95,14 +82,13 @@ object TextGateMetrics {
   *  - top_cnt is the max per-token occurrence count (the sorted-run
   *    and nested-filter spellings compute the same value).
   */
-case class GopherMetricsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+object GopherMetrics {
+  def apply(c: Column): Column =
+    kernelCall("gopher_metrics", this, "eval", ArrayType(LongType, containsNull = false),
+      Seq(c -> StringType))
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String): ArrayData = {
+    val words = Grams.words(s)
     val n = words.length
     val counts = mutable.HashMap.empty[String, Long]
     var chars = 0L
@@ -127,16 +113,8 @@ case class GopherMetricsExpr(child: Expression)
     var topCnt = 0L
     val it = counts.valuesIterator
     while (it.hasNext) { val v = it.next(); if (v > topCnt) topCnt = v }
-    new GenericArrayData(
-      Array[Any](n.toLong, chars, alphaN, stopN, topCnt))
+    new GenericArrayData(Array[Any](n.toLong, chars, alphaN, stopN, topCnt))
   }
-
-  override protected def withNewChildInternal(c: Expression)
-      : GopherMetricsExpr = copy(child = c)
-}
-
-object GopherMetrics {
-  def apply(c: Column): Column = toColumn(GopherMetricsExpr(toExpression(c)))
 }
 
 /** Σ votes(fid) over a document's five STRUCTURAL feature ids — the
@@ -147,7 +125,7 @@ object GopherMetrics {
   * `element_at` map lookups — measured 2.8k docs/s on StreamProbe
   * structclf; every HOF lambda evaluates interpreted per element, so
   * a 60-token doc paid ~3.6k boxed lambda calls for the top-word scan
-  * alone. This expression is one token pass + one hash map.
+  * alone. This kernel is one token pass + one hash map.
   *
   * Metric semantics are bit-identical to
   * `TextQueries.filterVerdictOf` (the batch derivation behind the
@@ -164,23 +142,19 @@ object GopherMetrics {
   *    in their slots).
   *
   * One pass builds the per-token count map (the top-word numerator),
-  * a second short pass the 3-shingle set; allocation, not virtual
-  * dispatch, dominates — CodegenFallback, the WordShingles rationale.
+  * a second short pass the 3-shingle set.
   */
-case class StructGateVotesExpr(child: Expression, votes: Seq[Long])
-    extends UnaryExpression with CodegenFallback {
+object StructGateVotes {
+  def apply(c: Column, votesDense: Seq[Long]): Column = {
+    require(votesDense.length == 500,
+      s"dense vote table must have 500 slots (5 families × 100), " +
+        s"got ${votesDense.length}")
+    kernelCall("struct_gate_votes", this, "eval", LongType, Seq(c -> StringType),
+      Seq(votesDense.toArray))
+  }
 
-  require(votes.length == 500,
-    s"dense vote table must have 500 slots (5 families × 100), " +
-      s"got ${votes.length}")
-
-  private lazy val voteArr: Array[Long] = votes.toArray
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val m = GateMetricsKernel.of(input.asInstanceOf[UTF8String].toString)
+  def eval(s: UTF8String, votes: Array[Long]): Long = {
+    val m = GateMetricsKernel.of(s)
     val n = m(0)
     val uniqN = m(1)
     val stopN = m(2)
@@ -196,19 +170,11 @@ case class StructGateVotesExpr(child: Expression, votes: Seq[Long])
     def bin(x: Double, scale: Int, cap: Long): Long =
       math.min(math.floor(x * scale).toLong, cap)
     var sum = 0L
-    sum += voteArr(math.min(n.toLong / 25L, 19L).toInt)
-    sum += voteArr(100 + bin(ttr, 10, 9L).toInt)
-    sum += voteArr(200 + bin(stopR, 100, 9L).toInt)
-    sum += voteArr(300 + bin(topFrac, 20, 19L).toInt)
-    sum += voteArr(400 + bin(dupFrac, 50, 9L).toInt)
+    sum += votes(math.min(n.toLong / 25L, 19L).toInt)
+    sum += votes(100 + bin(ttr, 10, 9L).toInt)
+    sum += votes(200 + bin(stopR, 100, 9L).toInt)
+    sum += votes(300 + bin(topFrac, 20, 19L).toInt)
+    sum += votes(400 + bin(dupFrac, 50, 9L).toInt)
     sum
   }
-
-  override protected def withNewChildInternal(c: Expression)
-      : StructGateVotesExpr = copy(child = c)
-}
-
-object StructGateVotes {
-  def apply(c: Column, votesDense: Seq[Long]): Column =
-    toColumn(StructGateVotesExpr(toExpression(c), votesDense))
 }

@@ -4,14 +4,12 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-document term frequencies as one row-local expression:
+/** Per-document term frequencies as one row-local call:
   * `array<struct<term, tf>>` with terms in first-occurrence order —
   * the whole-row replacement for `explode(split(text, " "))` followed
   * by `groupBy(doc_id, term).count()`.
@@ -31,23 +29,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * from consecutive/leading/trailing spaces are kept), so counts are
   * bit-identical to the explode + groupBy spelling and the DuckDB
   * oracles' string_split.
-  *
-  * Array-building expression → CodegenFallback (the WordShingles
-  * rationale: cost is allocation, not virtual calls).
   */
-case class TermCountsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+object TermCounts {
+  def apply(c: Column): Column =
+    kernelCall("term_counts", this, "eval", ArrayType(
+      StructType(Seq(
+        StructField("term", StringType, nullable = false),
+        StructField("tf", LongType, nullable = false))),
+      containsNull = false), Seq(c -> StringType))
 
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("term", StringType, nullable = false),
-      StructField("tf", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String): ArrayData = {
+    val words = Grams.words(s)
     val counts = mutable.LinkedHashMap.empty[String, Long]
     var i = 0
     while (i < words.length) {
@@ -58,17 +50,7 @@ case class TermCountsExpr(child: Expression)
       i += 1
     }
     new GenericArrayData(counts.iterator.map { case (t, c) =>
-      val r = new GenericInternalRow(2)
-      r.update(0, UTF8String.fromString(t))
-      r.setLong(1, c)
-      r: InternalRow
+      InternalRow(UTF8String.fromString(t), c): Any
     }.toArray[Any])
   }
-
-  override protected def withNewChildInternal(c: Expression): TermCountsExpr =
-    copy(child = c)
-}
-
-object TermCounts {
-  def apply(c: Column): Column = toColumn(TermCountsExpr(toExpression(c)))
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken
@@ -22,54 +20,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(substring(md5(g), 1, 15), 16, 10)` and to the DuckDB
   * oracle's `CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)`.
   * Token semantics match `split(text, " ", -1)`.
-  *
-  * Array-building expressions gain little from codegen (allocation-
-  * bound, not virtual-call-bound), so CodegenFallback like
-  * WordShingles; the md5 work happens in tight JVM code either way.
   */
-case class WinnowHashesExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  require(k >= 1, "gram width must be >= 1")
-  require(w >= 1, "window width must be >= 1")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val md =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  private def h60(s: String): Long = {
-    val digest = md.get()
-    digest.reset()
-    val d = digest.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4 // top 60 bits = first 15 hex chars
+object WinnowHashes {
+  def apply(c: Column, k: Int, w: Int): Column = {
+    require(k >= 1, "gram width must be >= 1")
+    require(w >= 1, "window width must be >= 1")
+    kernelCall("winnow_hashes", this, "eval", ArrayType(LongType, containsNull = false),
+      Seq(c -> StringType), Seq(k, w))
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String, k: Int, w: Int): ArrayData = {
+    val words = Grams.words(s)
     val m = words.length - k + 1 // gram count
     if (m < w) return new GenericArrayData(Array.empty[Any])
     val hs = new Array[Long](m)
     val sb = new java.lang.StringBuilder(64)
     var i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j))
-        j += 1
-      }
-      hs(i) = h60(sb.toString)
-      i += 1
-    }
+    while (i < m) { hs(i) = Grams.h60(Grams.gram(words, i, k, sb)); i += 1 }
     val sel = new java.util.LinkedHashSet[Long]()
     var jw = 0
     while (jw <= m - w) {
@@ -89,12 +56,4 @@ case class WinnowHashesExpr(child: Expression, k: Int, w: Int)
     while (it.hasNext) { out(o) = it.next(); o += 1 }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): WinnowHashesExpr =
-    copy(child = c)
-}
-
-object WinnowHashes {
-  def apply(c: Column, k: Int, w: Int): Column =
-    toColumn(WinnowHashesExpr(toExpression(c), k, w))
 }

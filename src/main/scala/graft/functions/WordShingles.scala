@@ -3,11 +3,9 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.kernelCall
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word n-gram shingles of a space-separated text, in first-
@@ -19,44 +17,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * consecutive/leading spaces are kept), so the output SET equals the
   * HOF chain's and the DuckDB oracles' (string_split + list
   * comprehension + list_distinct).
-  *
-  * Array-building expressions don't benefit much from codegen (the
-  * cost is allocation, not virtual calls), so this is CodegenFallback.
   */
-case class WordShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+object WordShingles {
+  def apply(c: Column, n: Int): Column = {
+    require(n >= 1, "shingle width must be >= 1")
+    kernelCall("word_shingles", this, "eval", ArrayType(StringType, containsNull = false),
+      Seq(c -> StringType), Seq(n))
+  }
 
-  require(n >= 1, "shingle width must be >= 1")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString.split(" ", -1)
+  def eval(s: UTF8String, n: Int): ArrayData = {
+    val words = Grams.words(s)
     if (words.length < n) return new GenericArrayData(Array.empty[Any])
     val seen = mutable.LinkedHashSet.empty[String]
     val sb = new java.lang.StringBuilder(64)
     var i = 0
-    while (i + n <= words.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
+    while (i + n <= words.length) { seen.add(Grams.gram(words, i, n, sb)); i += 1 }
     new GenericArrayData(
       seen.iterator.map(s => UTF8String.fromString(s): Any).toArray)
   }
-
-  override protected def withNewChildInternal(c: Expression): WordShinglesExpr =
-    copy(child = c)
-}
-
-object WordShingles {
-  def apply(c: Column, n: Int): Column =
-    toColumn(WordShinglesExpr(toExpression(c), n))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fingerprint
+
 /** Multimodal column handling: image/audio/video as opaque binary
   * columns with typed metadata, decoded/feature-extracted through a
   * partition-wise pipeline.
@@ -130,16 +132,6 @@ object Multimodal {
     case _ => StubDecoder
   }
 
-  /** Same fold as graft.functions.FingerprintExpr — portable payload
-    * fingerprint.
-    */
-  def rollingHash(bytes: Array[Byte]): Long = {
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) { h = (h * 31L + (bytes(i) & 0xff)) % 1000000007L; i += 1 }
-    h
-  }
-
   /** Perceptual-hash bit width. 60 (not 64) keeps every band and the
     * full hash in positive BIGINT range in both engines — no
     * sign-bit/overflow divergence between Spark longs and the oracle.
@@ -202,7 +194,7 @@ object Multimodal {
       it.map { m =>
         val (w, h) = decoder.dims(m.kind, m.content)
         MediaFeatures(m.media_id, m.kind, m.content.length.toLong,
-          rollingHash(m.content), w, h)
+          Fingerprint.fold(m.content), w, h)
       }
     }
   }
@@ -231,7 +223,7 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.flatMap { m =>
       sampledChunks(m.content, chunkBytes, stride).map { case (chunk, i) =>
-        Frame(m.media_id, i, chunk.length.toLong, rollingHash(chunk))
+        Frame(m.media_id, i, chunk.length.toLong, Fingerprint.fold(chunk))
       }
     }
   }
@@ -278,7 +270,7 @@ object Multimodal {
         val out = decoder.downscale(m.kind, m.content, stride)
         val (w, h) = decoder.dims(m.kind, out)
         ResizedMedia(m.media_id, m.content.length.toLong,
-          out.length.toLong, rollingHash(out), w, h)
+          out.length.toLong, Fingerprint.fold(out), w, h)
       }
     }
   }

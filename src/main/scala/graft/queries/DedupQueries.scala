@@ -816,8 +816,8 @@ object DedupQueries {
 
   /** Winnowing core behind `dd_winnow` (specs drive it on synthetic
     * frames): word-5-gram h60 hashes, window w = 4, rightmost-min
-    * selection, distinct (doc_id, h) fingerprints. One custom
-    * expression per row (functions.WinnowHashes — md5-speed single
+    * selection, distinct (doc_id, h) fingerprints. One kernel call
+    * per row (functions.WinnowHashes — md5-speed single
     * pass; the interpreted HOF chain it replaced ran minutes at
     * sf0.1) — zero shuffle up to the returned distinct.
     */

@@ -610,7 +610,7 @@ object RelationalQueries {
     // every file for a (user, id-range) probe and touching the handful
     // whose per-file stats overlap the 2-D box — ZorderLayoutSpec
     // proves the pruning property on written files. The interleave is
-    // a codegen'd native expression (graft.functions.InterleaveBits);
+    // one static kernel call per row (graft.functions.InterleaveBits);
     // pure integer bit arithmetic, reproduced exactly by the oracle.
     "rel_zorder" -> ((s, d) =>
       Tables.events(s, d)

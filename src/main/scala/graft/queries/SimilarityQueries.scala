@@ -141,9 +141,9 @@ object SimilarityQueries {
   private def quant(c: Column): Column =
     transform(c, x => round(x * 10000, 0).cast(LongType))
 
-  // native codegen'd loop — the aggregate(zip_with(...)) HOF form is
-  // interpreted and allocates a products array per pair (see
-  // functions.DotProductExpr)
+  // one static loop inside whole-stage codegen — the
+  // aggregate(zip_with(...)) HOF form is interpreted and allocates a
+  // products array per pair (see functions.DotProduct)
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct(a, b)
 

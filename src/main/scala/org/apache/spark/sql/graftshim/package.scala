@@ -1,15 +1,30 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.types.{DataType, ObjectType}
 
-/** Bridge to the `private[sql]` Column↔Expression converters that
-  * Spark 4 moved behind `org.apache.spark.sql.classic`. Lives in the
-  * spark.sql package solely to satisfy the access modifier; contains
-  * no Spark internals beyond the two calls.
+/** Bridge to the `private[sql]` Spark internals the engine needs: the
+  * Column↔Expression converters that Spark 4 moved behind
+  * `org.apache.spark.sql.classic`, the kernel call (whose input types
+  * are `AbstractDataType`s) and a few listener and error hooks. Lives
+  * in the spark.sql package solely to satisfy the access modifiers.
   */
 package object graftshim {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `kernel.function(args, consts)` as a [[KernelCall]] column named
+    * `name`: `kernel` is a Scala object, each arg is paired with the
+    * type it must have, and an `Array[Long]` const is passed as is.
+    */
+  def kernelCall(name: String, kernel: AnyRef, function: String,
+      resultType: DataType, args: Seq[(Column, DataType)], consts: Seq[Any] = Nil,
+      propagateNull: Boolean = true, returnNullable: Boolean = false): Column =
+    toColumn(KernelCall(name, kernel.getClass, function, resultType,
+      args.map(a => toExpression(a._1)), args.map(_._2), consts.map {
+        case t: Array[Long] => Literal(t, ObjectType(classOf[Array[Long]]))
+        case v => Literal(v)
+      }, propagateNull, returnNullable))
 
   /** Spark 4 hides AnalysisException's plain-message constructor behind
     * error classes; function builders still want a plain analysis-time

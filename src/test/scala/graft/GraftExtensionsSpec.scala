@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -40,6 +40,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(spark.sql(
         "SELECT dot_product(array(1L, 2L), array(3L, 4L)) AS d")
         .head().getLong(0) === 11L)
+      // a mistyped argument fails analysis; it is not cast
+      intercept[AnalysisException](
+        spark.sql("SELECT dot_product(array(1, 2), array(3, 4))").collect())
 
       // word_shingles + the minhash_sig aggregate from plain SQL
       val sh = spark.sql(
@@ -58,6 +61,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(spark.sql(
         """SELECT legacy_ext_json('{"a": {"$numberLong": "42"}}') AS v""")
         .head().getString(0) === """{"a": 42}""")
+      intercept[AnalysisException](spark.sql("SELECT legacy_ext_json(1)").collect())
 
       // winnow_hashes: selected hashes are a subset of the gram h60
       // hashes, computed here via the SQL md5 chain it must match

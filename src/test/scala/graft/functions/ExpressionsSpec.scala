@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,15 +44,17 @@ class ExpressionsSpec extends AnyFunSuite {
     val df = Seq(
       (Seq(1L, 2L, 3L), Seq(4L, -5L, 6L)),
       (Seq.empty[Long], Seq.empty[Long]),
-      (Seq(10000L, -10000L), Seq(10000L, 10000L)))
+      (Seq(10000L, -10000L), Seq(10000L, 10000L)),
+      // length mismatch: NULL, as zip_with's null padding nulls the sum
+      (Seq(1L, 2L), Seq(1L)))
       .toDF("a", "b")
     val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0L), (acc, v) => acc + v)
     def check(): Unit = {
       val rows = df.select(DotProduct(col("a"), col("b")).alias("d"),
         hof.alias("h")).collect()
-      rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
-      assert(rows.map(_.getLong(0)).toSeq === Seq(12L, 0L, 0L))
+      rows.foreach(r => assert(r.get(0) === r.get(1)))
+      assert(rows.map(_.get(0)).toSeq === Seq(12L, 0L, 0L, null))
     }
     check()
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
@@ -88,6 +90,9 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(got.toSeq === cases.map { case (x, y) => ref(x, y) })
     }
     check()
+    // a non-bigint argument fails analysis; it is not cast
+    intercept[AnalysisException](
+      df.select(InterleaveBits(col("x").cast("int"), col("y"))).collect())
     // monotone locality sanity: full-range corners
     assert(InterleaveBits.eval(0xffffL, 0xffffL) === 0xffffffffL)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")

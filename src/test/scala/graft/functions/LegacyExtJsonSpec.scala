@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftshim.{toColumn, toExpression, KernelCall}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -192,6 +193,9 @@ class LegacyExtJsonSpec extends AnyFunSuite {
       val interp = df.select(LegacyExtJsonCol(col("j"))).head().getString(0)
       assert(interp === viaExpr)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+    // a non-string argument fails analysis, in the sink's line encoder too
+    intercept[AnalysisException](df.select(LegacyExtJsonCol(lit(1))).collect())
+    intercept[AnalysisException](df.select(JsonLineCol(col("j"), lit(1))).collect())
   }
 
   test("a repeated key throws; the tree kept the last value at the first position") {
@@ -231,6 +235,7 @@ class LegacyExtJsonSpec extends AnyFunSuite {
   }
 
   test("reads a string in place at an offset, on-heap or off-heap, in both eval paths") {
+    // the kernel call's evaluable form is the StaticInvoke it is replaced by
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
     import org.apache.spark.sql.types.StringType
@@ -252,7 +257,8 @@ class LegacyExtJsonSpec extends AnyFunSuite {
     val row = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
       StringType, StringType))(InternalRow(UTF8String.fromString("pad"), UTF8String.fromString(in)))
     assert(row.getUTF8String(1).getBaseOffset > Platform.BYTE_ARRAY_OFFSET)
-    val expr = LegacyExtJsonExpr(BoundReference(1, StringType, nullable = true))
+    val expr = toExpression(LegacyExtJsonCol(toColumn(BoundReference(1, StringType,
+      nullable = true)))).asInstanceOf[KernelCall].replacement
     assert(expr.eval(row).toString === want)
     assert(UnsafeProjection.create(Seq(expr))(row).getUTF8String(0).toString === want)
   }
