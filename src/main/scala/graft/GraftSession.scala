@@ -7,7 +7,12 @@ import org.apache.spark.sql.SparkSession
   *
   *  - shuffle.partitions = cores (local mode; a cluster deployment
   *    would size this to 2-3× total cores or rely on AQE coalescing)
-  *  - AQE on (runtime re-plan: skew joins, partition coalescing)
+  *  - AQE on (runtime re-plan: skew joins, partition coalescing) for
+  *    batch queries, off for stateless streaming ones: there AQE would
+  *    run a micro-batch's shuffle map stage as a job of its own before
+  *    the sink runs (`ForeachBatchSink` materializes the plan first),
+  *    and the pipeline's only exchange, `repartition(n, key)`, is one
+  *    AQE never coalesces
   *  - UTC session timezone (oracle parity)
   *  - nanosAsLong: some driver refreshes store `events.ts` as parquet
   *    TIMESTAMP(NANOS), which Spark's vectorized reader otherwise
@@ -24,6 +29,7 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.streaming.stateless.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

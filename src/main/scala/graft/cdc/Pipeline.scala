@@ -1,9 +1,20 @@
 package graft.cdc
 
+import java.io.{IOException, OutputStream}
+import java.util.UUID
+
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.JsonLineCol
 
@@ -86,29 +97,96 @@ object Pipeline {
   * Each part file (`part-*.txt`) holds JSON lines, the bytes Spark's
   * JSON datasource writes for the `key` and `value` columns
   * (`JsonLine`); `value`, already a JSON string, is escaped once from
-  * its UTF-8 bytes instead of through Jackson's UTF-16 writer.
+  * its UTF-8 bytes instead of through Jackson's UTF-16 writer. Paths
+  * are what `write.partitionBy("topic").text(dir)` writes: a null or
+  * empty topic goes to `topic=__HIVE_DEFAULT_PARTITION__`, and a file
+  * is `part-<partition>-<job uuid>.c000.txt`.
   *
-  * For the duration of the write a task keeps up to
-  * `ConcurrentWriters` topic files open and appends each row to its
-  * topic's file in input order, so the planned write adds no sort by
-  * topic. A task that meets more topics than that falls back to
-  * Spark's own sort for its remaining rows.
+  * `append` is one Spark job over the batch's rows and no SQL
+  * execution of its own, so inside `foreachBatch` the micro-batch is
+  * one job and one SQL execution. Each task appends each row to its
+  * topic's file in input order (no sort by topic) under
+  * `_temporary/<task attempt>/`, through the session's Hadoop
+  * `FileSystem` (fork-free `file:`, `.crc` files). It keeps one
+  * buffered stream per topic it meets until it ends: about 72 KiB a
+  * topic (the file's `io.file.buffer.size` buffer, which Spark sets
+  * to 64 KiB, plus the `.crc` file's and the checksum chunks'), so
+  * about 11 MiB for a task that meets 150 topics. The driver then
+  * renames every file into place and writes `_SUCCESS` (the job
+  * commit), and deletes `_temporary` whether the job succeeded or
+  * not, so a failed batch shows no file.
+  *
+  * Tasks read the Hadoop conf from one broadcast per session, taken
+  * at the session's first append, instead of each deserializing a
+  * `Configuration`.
   */
 object FileTopicSink {
-  private[cdc] val ConcurrentWriters = 128
-  private val WritersKey = SQLConf.MAX_CONCURRENT_OUTPUT_FILE_WRITERS.key
+
+  private val Temporary = "_temporary"
+
+  private val confs =
+    new java.util.WeakHashMap[SparkSession, Broadcast[SerializableConfiguration]]()
+
+  private def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    confs.synchronized(confs.computeIfAbsent(spark, s => s.sparkContext.broadcast(
+      new SerializableConfiguration(s.sessionState.newHadoopConf()))))
 
   def append(batch: DataFrame, dir: String): Unit = {
-    // set for this write and restored after it; a foreachBatch frame
-    // carries its query's own session, which no other query reads
-    val conf = batch.sparkSession.conf
-    val prev = conf.getOption(WritersKey)
-    conf.set(WritersKey, ConcurrentWriters.toLong)
-    try batch.select(col("topic"), JsonLineCol(col("key"), col("value")))
-      .write.mode("append").partitionBy("topic").text(dir)
-    finally prev match {
-      case Some(v) => conf.set(WritersKey, v)
-      case None => conf.unset(WritersKey)
+    val spark = batch.sparkSession
+    val conf = hadoopConf(spark)
+    val rows = batch.select(col("topic"), JsonLineCol(col("key"), col("value")))
+      .queryExecution.toRdd
+    val job = UUID.randomUUID().toString
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf.value.value)
+    try {
+      val files = spark.sparkContext.runJob(rows,
+        (ctx: TaskContext, it: Iterator[InternalRow]) => writeTask(conf, dir, job, ctx, it))
+        .flatten
+      files.map(f => new Path(f._2).getParent).distinct.foreach(fs.mkdirs)
+      for ((from, to) <- files)
+        if (!fs.rename(new Path(from), new Path(to)))
+          throw new IOException(s"could not rename $from to $to")
+      fs.create(new Path(root, "_SUCCESS"), true).close()
+    } finally fs.delete(new Path(root, Temporary), true)
+  }
+
+  /** Writes one task's rows and returns its (temporary, final) file
+    * paths; on a failure it deletes what it wrote.
+    */
+  private def writeTask(conf: Broadcast[SerializableConfiguration], dir: String,
+      job: String, ctx: TaskContext, rows: Iterator[InternalRow])
+      : Seq[(String, String)] = {
+    val tmp = new Path(new Path(dir, Temporary), ctx.taskAttemptId().toString)
+    val fs = tmp.getFileSystem(conf.value.value)
+    val name = f"part-${ctx.partitionId()}%05d-$job.c000.txt"
+    // by topic, and by directory: a null and an empty topic share one
+    val byTopic = new java.util.HashMap[UTF8String, OutputStream]()
+    val byDir = mutable.LinkedHashMap.empty[String, OutputStream]
+    def closeAll(): Unit = byDir.values.foreach(_.close())
+    try {
+      while (rows.hasNext) {
+        val row = rows.next()
+        val topic = row.getUTF8String(0)
+        var out = byTopic.get(topic)
+        if (out == null) {
+          val sub = ExternalCatalogUtils.getPartitionPathString("topic",
+            if (topic == null) null else topic.toString)
+          out = byDir.getOrElseUpdate(sub,
+            fs.create(new Path(new Path(tmp, sub), name), false))
+          byTopic.put(if (topic == null) null else topic.clone(), out)
+        }
+        row.getUTF8String(1).writeTo(out)
+        out.write('\n')
+      }
+      closeAll()
+      byDir.keys.map(sub => new Path(new Path(tmp, sub), name).toString ->
+        new Path(new Path(dir, sub), name).toString).toSeq
+    } catch {
+      case t: Throwable =>
+        try { closeAll(); fs.delete(tmp, true) }
+        catch { case e: Throwable => t.addSuppressed(e) }
+        throw t
     }
   }
 }

@@ -39,8 +39,14 @@ LAYERS = [
         "org.apache.spark.sql.catalyst.json.JacksonGenerator",
         "org.apache.spark.sql.execution.datasources.json.JsonOutputWriter",
         "com.fasterxml.jackson.core.json.WriterBasedJsonGenerator")),
-    ("text writer", has(
-        "org.apache.spark.sql.execution.datasources.text.TextOutputWriter")),
+    # Spark's text writer, or FileTopicSink's own write task outside the
+    # rows it pulls (the line encoder and shuffle read run inside it)
+    ("text writer", lambda fs: has(
+        "org.apache.spark.sql.execution.datasources.text.TextOutputWriter")(fs)
+        or (has("graft.cdc.FileTopicSink")(fs)
+            and has("org.apache.spark.scheduler.ResultTask.")(fs) and not has(
+                "graft.functions.", "org.apache.spark.sql.catalyst.expressions.GeneratedClass",
+                "org.apache.spark.storage.", "org.apache.spark.shuffle.")(fs))),
     ("line encoder", has("graft.functions.JsonLine")),
     ("partitionBy sort", has(
         "org.apache.spark.sql.execution.SortExec",
