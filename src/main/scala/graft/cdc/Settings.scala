@@ -25,9 +25,6 @@ package graft.cdc
   *                       producers_count parity (P4); None lets the
   *                       Kafka sink's keyed partitioner do it
   * @param streamReaderName identity for the SavedToken mirror (C4)
-  * @param newTopic        creation spec for auto-created topics (K4 —
-  *                        `settings.py:31-34` NewTopicConfiguration:
-  *                        partitions, replication factor, topic config)
   */
 case class Settings(
     sourceFormat: String = "mongodb",
@@ -38,42 +35,31 @@ case class Settings(
     checkpointLocation: String,
     triggerInterval: String = "30 seconds",
     sinkPartitions: Option[Int] = None,
-    streamReaderName: String = "graft-stream-reader",
-    newTopic: TopicSpec = TopicSpec())
+    streamReaderName: String = "graft-stream-reader")
 
 /** S3 config parity: the reference exposes `full_document` and
   * `full_document_before_change` enums (`settings.py:20-28`) that are
   * handed to `collection.watch(...)`
   * (`change_stream_reading/watch.py:86-91`). Spark-side those are
-  * source options, but the option KEY depends on the source: the
-  * mongo-spark connector (v10.1+) spells them
-  * `change.stream.lookup.full.document[.before.change]`, while the
-  * replay/test sources carry the event schema's own field names.
-  * This helper owns that mapping so callers state intent once.
+  * source options, which the mongo-spark connector (v10.1+) spells
+  * `change.stream.lookup.full.document[.before.change]`. This helper
+  * owns that mapping so callers state intent once. The replay source
+  * takes neither: its events carry their images as recorded.
   */
 object Settings {
   val MongoFullDocument = "change.stream.lookup.full.document"
   val MongoFullDocumentBeforeChange =
     "change.stream.lookup.full.document.before.change"
-  val ReplayFullDocument = "fullDocument"
-  val ReplayFullDocumentBeforeChange = "fullDocumentBeforeChange"
 
   /** Reference enum values pass through verbatim ("updateLookup",
-    * "whenAvailable", "required", ...) — only the key is spelled per
-    * source format.
+    * "whenAvailable", "required", ...).
     */
   def changeStreamOptions(
-      sourceFormat: String,
       fullDocument: Option[String] = None,
       fullDocumentBeforeChange: Option[String] = None)
-      : Map[String, String] = {
-    val (fdKey, fdbKey) =
-      if (sourceFormat == "mongodb")
-        (MongoFullDocument, MongoFullDocumentBeforeChange)
-      else (ReplayFullDocument, ReplayFullDocumentBeforeChange)
-    fullDocument.map(fdKey -> _).toMap ++
-      fullDocumentBeforeChange.map(fdbKey -> _).toMap
-  }
+      : Map[String, String] =
+    fullDocument.map(MongoFullDocument -> _).toMap ++
+      fullDocumentBeforeChange.map(MongoFullDocumentBeforeChange -> _).toMap
 }
 
 /** K4: what auto-created topics are created *with* — the reference's

@@ -1,9 +1,11 @@
 package graft.functions
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.core.JsonToken._
-import com.fasterxml.jackson.core.io.{NumberInput, NumberOutput}
+import com.fasterxml.jackson.core.io.NumberOutput
 import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.TextNode
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftshim.kernelCall
@@ -32,7 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *                             → `{"$regex": p, "$options": o}`
   *
   * A wrapper's name must be its object's only field; otherwise the
-  * object is plain and its values convert like any other.
+  * object is plain and its values convert like any other. Within a
+  * wrapper-named field's value a repeated key keeps its last value at
+  * its first position, as a parsed tree (a Python dict) does.
   *
   * Output formatting replicates `json.dumps` defaults (what json_util
   * delegates to): `", "` / `": "` separators, `ensure_ascii` (every
@@ -41,29 +45,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * idempotent. Floating-point literals re-render in CPython
   * float-repr form (`pyFloatRepr`) — Python-parity output bytes,
   * regardless of the source's formatting; integer literals keep their
-  * value (`-0` becomes `0`). A wrapper's name must be its object's only
-  * field, or the object is plain.
+  * value (`-0` becomes `0`).
   *
   * One Jackson `JsonParser` pass reads the UTF-8 bytes and writes the
   * ASCII output into one growable byte array. Malformed input throws
   * `IllegalArgumentException` — the reference crashes on undumpable
   * input too (`KeyError`/`TypeError`); silently nulling would drop a
-  * change event from the stream. Empty input, trailing tokens, a
-  * repeated key and invalid UTF-8 (as Jackson decodes it) count too.
+  * change event from the stream. Empty input, trailing tokens, a key
+  * repeated in an object written field by field and invalid UTF-8 (as
+  * Jackson decodes it) count too.
   */
 object LegacyExtJson {
 
-  private val factory = new JsonFactory()
+  private val mapper = new ObjectMapper()
 
-  // wrapper name -> the inner fields read from an object value. The
-  // number wrappers read none; they and $date wrap any value, $binary,
-  // $regularExpression and $timestamp an object only.
-  private val NoFields: (String, String) = (null, null)
-  private val Wrappers: Map[String, (String, String)] = Map(
-    "$date" -> ("$numberLong", null), "$numberLong" -> NoFields,
-    "$numberInt" -> NoFields, "$numberDouble" -> NoFields,
-    "$binary" -> ("base64", "subType"), "$regularExpression" -> ("pattern", "options"),
-    "$timestamp" -> ("t", "i"))
+  // $date and the number wrappers wrap any value; $binary,
+  // $regularExpression and $timestamp an object only
+  private val Wrappers = Set("$date", "$numberLong", "$numberInt", "$numberDouble",
+    "$binary", "$regularExpression", "$timestamp")
 
   // per ASCII char: 0 = copied, -1 = `\u00XX`, else the char after `\`
   private val Esc: Array[Byte] = {
@@ -87,23 +86,10 @@ object LegacyExtJson {
     case _ => new Pass(s.getBytes).run(0, s.numBytes)
   }
 
-  // a wrapper's value as the tree's asText/asLong read it: a String
-  // ("null" for null, "" for a container), a Number or a Boolean
-  private def text(v: AnyRef): String =
-    if (v != null) v.toString else throw new IllegalArgumentException(
-      "legacy_ext_json: a wrapper's inner field is missing")
-
-  private def long(v: AnyRef): Long = v match {
-    case n: Number => n.longValue
-    case b: java.lang.Boolean => if (b) 1L else 0L
-    case _ => NumberInput.parseAsLong(text(v), 0L)
-  }
-
-  /** One conversion; the current parser reads `in` from `base` on. */
+  /** One conversion of `in`'s bytes. */
   private final class Pass(in: Array[Byte]) {
     private var out: Array[Byte] = _
     private var at = 0
-    private var base = 0
     // the keys of the objects open in the output, innermost last
     private var keys = new Array[String](16)
     private var nKeys = 0
@@ -114,8 +100,7 @@ object LegacyExtJson {
       if (len > 0 && in(off) < 0 || (off until off + math.min(len, 4)).exists(in(_) == 0))
         bad("not UTF-8 JSON text")
       out = new Array[Byte](len + (len >> 3) + 16)
-      base = off
-      val p = factory.createParser(in, off, len)
+      val p = mapper.createParser(in, off, len)
       try {
         if (p.nextToken() == null) bad("empty input")
         value(p)
@@ -146,40 +131,32 @@ object LegacyExtJson {
       case t => ascii(if (t == VALUE_TRUE) "true" else if (t == VALUE_FALSE) "false" else "null")
     }
 
-    /** An object, START_OBJECT to END_OBJECT. A wrapper-named first field
-      * is written as a plain one; if the object ends after it, the output
-      * goes back to `mark` and the wrapper's legacy form replaces it. A
-      * container value is read for the wrapper's inner fields, not
-      * written, and parsed again from its bytes if more fields follow.
+    /** An object, START_OBJECT to END_OBJECT. A wrapper-named first
+      * field's value is read as a `JsonNode`; if the object ends after
+      * it and the wrapper applies, its legacy form replaces the object
+      * from `mark` on, else the node is written as a plain value.
       */
     private def obj(p: JsonParser): Unit = {
       val mark = at
       if (p.nextToken() == END_OBJECT) { ascii("{}"); return }
       val w = p.currentName
-      val names = if (w.startsWith("$")) Wrappers.getOrElse(w, null) else null
-      var first = names != null // and so the object may be a wrapper
+      var first = w.startsWith("$") && Wrappers(w) // and so the object may be a wrapper
       val start = nKeys
       put('{')
       do {
         if (at > mark + 1) ascii(", ")
         key(p, start)
-        val t = p.nextToken()
+        p.nextToken()
         if (!first) { value(p); p.nextToken() }
         else {
           first = false
-          val open = t == START_OBJECT || t == START_ARRAY
-          val from = if (open) p.currentTokenLocation.getByteOffset.toInt else 0
-          val v: AnyRef =
-            if (t == START_OBJECT && !(names eq NoFields)) inner(p, names)
-            else { val s = scalar(p); if (!open) value(p); s }
-          val until = if (open) p.currentTokenLocation.getByteOffset.toInt + 1 else 0
-          if (p.nextToken() == END_OBJECT &&
-              (t == START_OBJECT || (names eq NoFields) || w == "$date")) {
-            at = mark
-            nKeys = start
-            return wrapper(w, v)
-          }
-          if (open) reparse(from, until)
+          val v: JsonNode =
+            if (p.currentToken == VALUE_STRING) TextNode.valueOf(p.getText)
+            else mapper.readTree[JsonNode](p)
+          if (p.nextToken() == END_OBJECT && wrapper(w, v, mark)) { nKeys = start; return }
+          val q = v.traverse()
+          q.nextToken()
+          value(q)
         }
       } while (p.currentToken != END_OBJECT)
       nKeys = start
@@ -201,70 +178,51 @@ object LegacyExtJson {
       ascii(": ")
     }
 
-    private def reparse(from: Int, until: Int): Unit = {
-      val outer = base
-      base = outer + from
-      val q = factory.createParser(in, base, until - from)
-      try { q.nextToken(); value(q) } finally { q.close(); base = outer }
-    }
-
-    // the object at START_OBJECT, read to END_OBJECT for two fields' values
-    private def inner(p: JsonParser, names: (String, String)): Array[AnyRef] = {
-      val got = new Array[AnyRef](2)
-      while (p.nextToken() != END_OBJECT) {
-        val n = p.currentName
-        p.nextToken()
-        val v = scalar(p)
-        if (n == names._1) got(0) = v else if (n == names._2) got(1) = v
-      }
-      got
-    }
-
-    private def scalar(p: JsonParser): AnyRef = p.currentToken match {
-      case VALUE_STRING => p.getText
-      case VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT => p.getNumberValue
-      case VALUE_TRUE | VALUE_FALSE => java.lang.Boolean.valueOf(p.getBooleanValue)
-      case VALUE_NULL => "null"
-      case _ => p.skipChildren(); ""
-    }
-
-    private def wrapper(w: String, v: AnyRef): Unit = {
-      def f = v.asInstanceOf[Array[AnyRef]]
+    /** Writes `{w: v}`'s legacy form from `mark` on, reading `v` as the
+      * tree codec does; false, with nothing written, when `w` wraps an
+      * object only and `v` is none.
+      */
+    private def wrapper(w: String, v: JsonNode, mark: Int): Boolean = {
+      if (!v.isObject && (w == "$binary" || w == "$regularExpression" || w == "$timestamp"))
+        return false
+      def field(n: String): JsonNode = Option(v.get(n)).getOrElse(bad(s"$w has no $n field"))
+      at = mark
       w match {
         case "$date" =>
           // legacy `$date` is integer epoch-millis, from canonical
           // `{"$numberLong": "ms"}`, relaxed ISO-8601 or legacy input
-          val ms = v match {
-            case f: Array[AnyRef] if f(0) != null => java.lang.Long.parseLong(text(f(0)))
-            case s: String =>
-              try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
+          val ms =
+            if (v.isObject && v.has("$numberLong"))
+              java.lang.Long.parseLong(v.get("$numberLong").asText)
+            else if (v.isTextual)
+              try java.time.OffsetDateTime.parse(v.asText).toInstant.toEpochMilli
               catch { case e: java.time.DateTimeException => bad(e.getMessage) }
-            case n: Number => n.longValue
-            case _ => bad("unrecognized $date value")
-          }
+            else if (v.isNumber) v.asLong
+            else bad("unrecognized $date value")
           ascii("{\"$date\": ")
           putLong(ms)
           put('}')
-        case "$numberLong" => putLong(java.lang.Long.parseLong(text(v)))
-        case "$numberInt" => putLong(java.lang.Integer.parseInt(text(v)))
-        case "$numberDouble" => text(v) match {
+        case "$numberLong" => putLong(java.lang.Long.parseLong(v.asText))
+        case "$numberInt" => putLong(java.lang.Integer.parseInt(v.asText))
+        case "$numberDouble" => v.asText match {
           case t @ ("NaN" | "Infinity" | "-Infinity") => ascii(t)
           case t => ascii(pyFloatRepr(java.lang.Double.parseDouble(t)))
         }
         case "$timestamp" => // json_util's {"t": ..., "i": ...} member order
           ascii("{\"$timestamp\": {\"t\": ")
-          putLong(long(f(0)))
+          putLong(field("t").asLong)
           ascii(", \"i\": ")
-          putLong(long(f(1)))
+          putLong(field("i").asLong)
           ascii("}}")
         case _ =>
           val binary = w == "$binary"
           ascii(if (binary) "{\"$binary\": " else "{\"$regex\": ")
-          string(text(f(0)))
+          string(field(if (binary) "base64" else "pattern").asText)
           ascii(if (binary) ", \"$type\": " else ", \"$options\": ")
-          string(text(f(1)))
+          string(field(if (binary) "subType" else "options").asText)
           put('}')
       }
+      true
     }
 
     private def room(n: Int): Unit =
@@ -344,35 +302,18 @@ object LegacyExtJson {
     if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
     val neg = d < 0
     val abs = math.abs(d)
-    // Schubfach renders `iii.fff` for 1e-3 <= abs < 1e7, else `d.dddEn`:
-    // collect the significant digits and where the point falls
     val s = DoubleToDecimal.toString(abs)
-    val ePos = s.indexOf('E')
-    // 1e-3 <= abs < 1e7: CPython's positional text is Schubfach's
-    if (ePos < 0) return if (neg) "-" + s else s
-    val sig = new java.lang.StringBuilder(17)
-    var intLen = 0 // mantissa chars before the point, leading zeros included
-    var lead = 0 // leading zeros
-    var i = 0
-    while (i < ePos) {
-      val c = s.charAt(i)
-      if (c == '.') intLen = i
-      else if (c == '0' && sig.length == 0) lead += 1
-      else sig.append(c)
-      i += 1
-    }
-    var end = sig.length
-    while (sig.charAt(end - 1) == '0') end -= 1
-    var digits = sig.substring(0, end)
-    var e10 = intLen - lead - 1 + Integer.parseInt(s, ePos + 1, s.length, 10)
-    if (digits.length == 2 && abs < java.lang.Double.MIN_NORMAL) {
-      val one = new java.math.BigDecimal(abs)
-        .round(new java.math.MathContext(1, java.math.RoundingMode.HALF_EVEN))
-      if (one.doubleValue == abs) {
-        digits = one.unscaledValue.toString
-        e10 = -one.scale
-      }
-    }
+    // 1e-3 <= abs < 1e7: CPython's positional text is Schubfach's;
+    // otherwise it renders `d.dddEn`, read here as digits and exponent
+    if (s.indexOf('E') < 0) return if (neg) "-" + s else s
+    val sch = new java.math.BigDecimal(s).stripTrailingZeros
+    lazy val one = new java.math.BigDecimal(abs)
+      .round(new java.math.MathContext(1, java.math.RoundingMode.HALF_EVEN))
+    val dec =
+      if (sch.precision == 2 && abs < java.lang.Double.MIN_NORMAL && one.doubleValue == abs) one
+      else sch
+    val digits = dec.unscaledValue.toString
+    val e10 = digits.length - 1 - dec.scale
     val sb = new StringBuilder
     if (neg) sb.append('-')
     if (e10 >= 16 || e10 < -4) {

@@ -11,28 +11,23 @@ import graft.sources.ChangeEventReplaySource
 
 /** S3 config parity for pre/post-images: the reference's
   * `full_document` / `full_document_before_change` enums
-  * (`settings.py:20-28`) must reach the source options map in both
-  * the connector and the replay spelling, and an event carrying a
-  * pre-image must surface it as the envelope's `before` field through
-  * the actual streaming runtime (closing VERDICT r4 "missing" #3).
+  * (`settings.py:20-28`) must reach the source options map in the
+  * connector's spelling, and an event carrying a pre-image must
+  * surface it as the envelope's `before` field through the actual
+  * streaming runtime (closing VERDICT r4 "missing" #3).
   */
 class FullDocumentConfigSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.GraftSession.builder("2").getOrCreate()
 
   test("changeStreamOptions spells the S3 keys per source format") {
-    assert(Settings.changeStreamOptions("mongodb",
+    assert(Settings.changeStreamOptions(
       fullDocument = Some("updateLookup"),
       fullDocumentBeforeChange = Some("whenAvailable")) === Map(
       "change.stream.lookup.full.document" -> "updateLookup",
       "change.stream.lookup.full.document.before.change" -> "whenAvailable"))
-    assert(Settings.changeStreamOptions("graft-replay",
-      fullDocument = Some("updateLookup"),
-      fullDocumentBeforeChange = Some("whenAvailable")) === Map(
-      "fullDocument" -> "updateLookup",
-      "fullDocumentBeforeChange" -> "whenAvailable"))
     // enum values pass through verbatim — "required" etc. included
-    assert(Settings.changeStreamOptions("mongodb",
+    assert(Settings.changeStreamOptions(
       fullDocumentBeforeChange = Some("required")) === Map(
       Settings.MongoFullDocumentBeforeChange -> "required"))
   }
@@ -40,12 +35,9 @@ class FullDocumentConfigSpec extends AnyFunSuite {
   test("before-change option reaches the streaming source relation") {
     val opts =
       ChangeEventReplaySource.register("fdbc-opts", ChangeEvents.goldenEvents) ++
-        Settings.changeStreamOptions("graft-replay",
-          fullDocumentBeforeChange = Some("whenAvailable")) ++
-        // the connector spelling rides the same passthrough map — a
-        // mongodb deployment differs only in format string and key
-        Settings.changeStreamOptions("mongodb",
-          fullDocumentBeforeChange = Some("whenAvailable"))
+        // the connector spelling rides the passthrough map — a mongodb
+        // deployment differs only in its format string
+        Settings.changeStreamOptions(fullDocumentBeforeChange = Some("whenAvailable"))
     val s = Settings(sourceFormat = "graft-replay", sourceOptions = opts,
       checkpointLocation = "/tmp/fdbc-unused-cp")
     val rel = Pipeline.read(spark, s).queryExecution.analyzed.collectFirst {
@@ -53,17 +45,12 @@ class FullDocumentConfigSpec extends AnyFunSuite {
     }
     assert(rel.nonEmpty, "expected a DSv2 streaming relation")
     assert(rel.get.extraOptions.get(
-      Settings.ReplayFullDocumentBeforeChange) === "whenAvailable")
-    assert(rel.get.extraOptions.get(
       Settings.MongoFullDocumentBeforeChange) === "whenAvailable")
   }
 
   test("pre-image populates the envelope's before field end-to-end") {
     val cpDir = Files.createTempDirectory("graft-fdbc-cp").toString
-    val opts =
-      ChangeEventReplaySource.register("fdbc-e2e", ChangeEvents.goldenEvents) ++
-        Settings.changeStreamOptions("graft-replay",
-          fullDocumentBeforeChange = Some("whenAvailable"))
+    val opts = ChangeEventReplaySource.register("fdbc-e2e", ChangeEvents.goldenEvents)
     val settings = Settings(sourceFormat = "graft-replay",
       sourceOptions = opts, topicPrefix = "pre",
       checkpointLocation = cpDir, triggerInterval = "1 seconds",

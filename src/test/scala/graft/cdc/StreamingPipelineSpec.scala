@@ -108,9 +108,6 @@ class StreamingPipelineSpec extends AnyFunSuite {
     ensurer.ensure(batch)
     assert(created.toSeq ===
       Seq(("test.test-database.TestCollection", spec)))
-    // and the spec rides Settings so deployments configure it there
-    val viaSettings = Settings(checkpointLocation = "/tmp/x", newTopic = spec)
-    assert(viaSettings.newTopic === spec)
   }
 
   test("drop/dropDatabase/invalidate-only input advances offsets with zero rows") {

@@ -208,6 +208,10 @@ class LegacyExtJsonSpec extends AnyFunSuite {
     // inside a wrapper's inner object the last value wins, as in the tree
     val inner = """{"$binary": {"base64": "YQ==", "base64": "Yg==", "subType": "00"}}"""
     assert(LegacyExtJson.convert(inner) === LegacyExtJsonTree.convert(inner))
+    // and inside a wrapper-named field's value when more fields follow
+    val plain = """{"$date": {"a": 1, "a": 2}, "x": 1}"""
+    assert(LegacyExtJson.convert(plain) === LegacyExtJsonTree.convert(plain))
+    assert(LegacyExtJson.convert(plain) === """{"$date": {"a": 2}, "x": 1}""")
     // the same key in different objects is not a repeat
     assert(LegacyExtJson.convert("""{"a": {"a": 1}, "b": [{"a": 2}, {"a": 3}]}""") ===
       """{"a": {"a": 1}, "b": [{"a": 2}, {"a": 3}]}""")
